@@ -7,7 +7,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("torua_spark_tests", cpus=8)
+    s = get_spark("torua_spark_tests")
     yield s
     s.stop()
 

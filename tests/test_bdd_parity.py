@@ -13,7 +13,7 @@ table, new-node join, node-failure semantics, and the routing trace.
 
 from torua_spark.constants import NUM_SHARDS
 from torua_spark.engine import ToruaEngine
-from tests.test_engine import fnv_py
+from torua_spark.functions.hashing import fnv1a32_py
 
 
 def test_keys_distributed_across_shards_and_retrievable(spark):
@@ -138,7 +138,7 @@ def test_coordinator_routing_trace(spark):
     e = ToruaEngine(spark)
     e.put("traceable", "test")
     shard, node = e.route("traceable")
-    assert shard == fnv_py("traceable") % 4  # Calculate shard ID
+    assert shard == fnv1a32_py("traceable") % 4  # Calculate shard ID
     assignments = {r["shard_id"]: r["node_id"] for r in e.shards().collect()}
     assert assignments[shard] == node  # Look up node for shard
     # Forward request to node: the at-rest analog is that the key lands

@@ -3,18 +3,17 @@
 plus the shard-partitioned at-rest layout with partition-pruned reads.
 """
 
+import tempfile
+
+from hypothesis import HealthCheck, Phase, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from torua_spark.constants import FNV_MOD, FNV_OFFSET_BASIS, FNV_PRIME
+from torua_spark.constants import NUM_SHARDS
 from torua_spark.engine import ToruaEngine
+from torua_spark.functions.hashing import fnv1a32_py, shard_for_key
+from torua_spark.operators import kv as kvops
 from torua_spark.plans import plan_string
-
-
-def fnv_py(s: str) -> int:
-    h = FNV_OFFSET_BASIS
-    for b in s.encode("utf-8"):
-        h = ((h ^ b) * FNV_PRIME) % FNV_MOD
-    return h
+from torua_spark.sources.local import local_df
 
 
 def test_crud_scenarios(spark):
@@ -34,10 +33,18 @@ def test_crud_scenarios(spark):
 
 
 def test_routing_matches_reference_hash(spark):
+    """route() hashes on the driver; it must agree with the Catalyst
+    routing expression that checkpoint_to partitions by."""
     e = ToruaEngine(spark)
-    for key in ["simple", "path/to/resource", "数字"]:
+    keys = ["simple", "path/to/resource", "数字", ""]
+    catalyst = dict(
+        spark.createDataFrame([(k,) for k in keys], "key string")
+        .select("key", shard_for_key("key").alias("s"))
+        .collect()
+    )
+    for key in keys:
         shard, node = e.route(key)
-        assert shard == fnv_py(key) % 4
+        assert shard == catalyst[key] == fnv1a32_py(key) % 4
         assert node == ("n1" if shard % 2 == 0 else "n2")
 
 
@@ -61,7 +68,7 @@ def test_checkpoint_partition_prunes(spark, tmp_path):
     e.checkpoint_to(path)
 
     key = "key-42"
-    shard = fnv_py(key) % 4
+    shard = fnv1a32_py(key) % 4
     df = (
         spark.read.parquet(path)
         .filter((F.col("shard_id") == shard) & (F.col("key") == key))
@@ -86,7 +93,7 @@ def test_shard_hint_scoped_reads(spark, tmp_path):
     e = ToruaEngine(spark)
     e.put_many([(k, f"v{k}") for k in keys])
     hint = [1, 3]
-    want = sorted(k for k in keys if fnv_py(k) % 4 in hint)
+    want = sorted(k for k in keys if fnv1a32_py(k) % 4 in hint)
     # in-memory engine: routing-predicate path
     assert sorted(e.list_keys(shard_hint=hint)) == want
     assert e.scan("key-", "key-z", shard_hint=hint) == want
@@ -100,12 +107,12 @@ def test_shard_hint_scoped_reads(spark, tmp_path):
     assert sorted(r.list_keys(shard_hint=hint)) == want
     assert r.scan("key-", "key-z", shard_hint=hint) == want
     # single-shard form still works and agrees with the ownership set
-    one = sorted(k for k in keys if fnv_py(k) % 4 == 2)
+    one = sorted(k for k in keys if fnv1a32_py(k) % 4 == 2)
     assert sorted(r.list_keys(shard_id=2)) == one
     # a mutation invalidates the at-rest view but not correctness
     r.put("key-extra", "v")
     want2 = sorted(
-        k for k in keys + ["key-extra"] if fnv_py(k) % 4 in hint
+        k for k in keys + ["key-extra"] if fnv1a32_py(k) % 4 in hint
     )
     assert sorted(r.list_keys(shard_hint=hint)) == want2
 
@@ -143,7 +150,7 @@ def test_restore_guards_stale_or_foreign_at_rest(spark, tmp_path):
     # explicit override to 8: stale layout disabled, routing takes over
     r8 = ToruaEngine.restore_from(spark, path, num_shards=8)
     assert r8._at_rest is None
-    want8 = sorted(k for k in keys if fnv_py(k) % 8 == 6)
+    want8 = sorted(k for k in keys if fnv1a32_py(k) % 8 == 6)
     assert sorted(r8.list_keys(shard_hint=[6])) == want8
     # foreign parquet (no shard_id, no sidecar): hint still answers
     foreign = str(tmp_path / "foreign")
@@ -152,7 +159,7 @@ def test_restore_guards_stale_or_foreign_at_rest(spark, tmp_path):
     ).write.parquet(foreign)
     rf = ToruaEngine.restore_from(spark, foreign)
     assert rf._at_rest is None
-    want = sorted(k for k in keys if fnv_py(k) % 4 in (1, 3))
+    want = sorted(k for k in keys if fnv1a32_py(k) % 4 in (1, 3))
     assert sorted(rf.list_keys(shard_hint=[1, 3])) == want
     # conflicting scopes raise instead of silently dropping one
     import pytest as _pytest
@@ -220,3 +227,138 @@ def test_compact_for_serving_keeps_results_and_is_warm(spark):
     # generous bound: measured p50 ~51ms warm; allow heavy-host noise
     assert dt_ms < 500, dt_ms
     assert e.get("nope") is None
+
+
+# ------------------------------------------------------------ write buffer
+
+
+class _EagerReference:
+    """The engine's read/write surface over a DataFrame that applies
+    every batch as it arrives through ``kvops.upsert``/``kvops.delete``:
+    what the buffered engine must stay indistinguishable from."""
+
+    def __init__(self, spark, value_type):
+        self.spark, self.value_type = spark, value_type
+        self.kv = local_df(spark, [], f"key string, value {value_type}")
+
+    def _apply(self, kv):
+        self.kv = kv.localCheckpoint()
+        return self
+
+    def put_many(self, items):
+        ddl = f"key string, value {self.value_type}"
+        return self._apply(kvops.upsert(self.kv, local_df(self.spark, items, ddl)))
+
+    def delete(self, *keys):
+        tombs = local_df(self.spark, [(k,) for k in keys], "key string")
+        return self._apply(kvops.delete(self.kv, tombs))
+
+    def get(self, key):
+        rows = kvops.point_get(self.kv, key).take(1)
+        return rows[0]["value"] if rows else None
+
+    def multi_get(self, keys):
+        return {r["key"]: r["value"] for r in kvops.multi_get(self.kv, keys).collect()}
+
+    def _scoped(self, shard_hint):
+        if shard_hint is None:
+            return self.kv
+        return self.kv.filter(kvops.shard_hint_filter(NUM_SHARDS, shard_hint))
+
+    def scan(self, start, end, shard_hint=None):
+        src = self._scoped(shard_hint)
+        return [r["key"] for r in kvops.range_scan(src, start, end).collect()]
+
+    def list_keys(self, shard_id, shard_hint):
+        return [r["key"] for r in kvops.list_keys(self._scoped(shard_hint)).collect()]
+
+    def dataframe(self):
+        return self.kv
+
+
+_KEY_LIST = ["", "a", "ab", "b", "a'b", "c\\d", "é", "数"]
+_KEYS = st.sampled_from(_KEY_LIST)
+_BOUNDS = st.sampled_from(["", "a", "ab", "b", "c", "z", "数"])
+_HINT = st.lists(st.integers(0, NUM_SHARDS - 1), min_size=1, max_size=2, unique=True)
+
+
+@st.composite
+def _histories(draw):
+    """A value type and an op sequence: reads, hinted reads, writes
+    with repeated in-batch keys, None values and keys, values of the
+    wrong Python type (which local_df CASTs), checkpoints, and a run
+    of nine mutations, one more than the engine's fold period."""
+    value_type = draw(st.sampled_from(["string", "binary"]))
+    if value_type == "string":
+        values, foreign = st.text("ab'\\é", max_size=3), st.integers(0, 9)
+    else:
+        values = st.binary(max_size=3) | st.binary(max_size=3).map(bytearray)
+        foreign = st.text("ab", max_size=2)
+    plain = st.lists(st.tuples(_KEYS, values | st.none()), max_size=4)
+    # one batch in four skips the buffer: it holds a None key, or values
+    # of the wrong type (only those: VALUES cannot mix a foreign-typed
+    # literal with a typed NULL)
+    odd = plain.map(lambda b: b + [(None, None)])
+    odd |= st.lists(st.tuples(_KEYS, foreign), min_size=1, max_size=3)
+    put = st.tuples(st.just("put_many"), st.one_of(plain, plain, plain, odd))
+    delete = st.lists(st.sampled_from([*_KEY_LIST, None]), max_size=2).map(
+        lambda ks: ("delete", *ks)
+    )
+    op = st.one_of(
+        put,
+        delete,
+        st.tuples(st.just("get"), _KEYS),
+        st.tuples(st.just("multi_get"), st.lists(_KEYS, max_size=4)),
+        st.tuples(st.just("scan"), _BOUNDS, _BOUNDS),
+        st.tuples(st.just("scan"), _BOUNDS, _BOUNDS, _HINT),
+        st.tuples(st.just("list_keys"), st.none(), _HINT),
+        st.tuples(st.just("dataframe")),
+        st.tuples(st.just("checkpoint")),
+    )
+    head = draw(st.lists(op, max_size=10))
+    burst = draw(st.lists(st.one_of(put, delete), min_size=9, max_size=9))
+    tail = draw(st.lists(op, min_size=4, max_size=8))
+    return value_type, head + burst + tail
+
+
+def _canon(op, result):
+    # repr, because bytes == bytearray: a read must hand back Spark's type
+    if op == "dataframe":
+        return sorted(repr(tuple(r)) for r in result.collect())
+    if op == "multi_get":
+        return sorted((k, repr(v)) for k, v in result.items())
+    if op == "list_keys":
+        return sorted(result)
+    return repr(result)
+
+
+# no shrink phase: each example runs dozens of Spark jobs, and shrinking
+# one failure can take many minutes
+@settings(max_examples=6, deadline=None,
+          phases=[Phase.explicit, Phase.reuse, Phase.generate],
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(history=_histories())
+def test_write_buffer_matches_eager_operators(spark, history):
+    """The buffered engine answers every read exactly as a reference
+    that applies each write eagerly through the kv operators."""
+    value_type, ops = history
+    engine = ToruaEngine(spark, value_type=value_type)
+    ref = _EagerReference(spark, value_type)
+    with tempfile.TemporaryDirectory() as tmp:
+        for i, (op, *args) in enumerate(ops):
+            if op == "checkpoint":
+                # parquet cannot infer the schema of a write with no rows,
+                # so an empty state does not round-trip
+                if ref.kv.isEmpty():
+                    continue
+                path = f"{tmp}/ck{i}"
+                engine.checkpoint_to(path)
+                engine = ToruaEngine.restore_from(spark, path, value_type=value_type)
+                continue
+            got = getattr(engine, op)(*args)
+            want = getattr(ref, op)(*args)
+            if op in ("put_many", "delete"):
+                # a write is visible to the next read of every key
+                got, want = engine.multi_get(_KEY_LIST), ref.multi_get(_KEY_LIST)
+                op = "multi_get"
+            assert _canon(op, got) == _canon(op, want), (i, op, args)

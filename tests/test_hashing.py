@@ -5,8 +5,12 @@ reference vs DuckDB SQL, plus the reference's distribution property
 import duckdb
 from pyspark.sql import functions as F
 
-from torua_spark.constants import FNV_MOD, FNV_OFFSET_BASIS, FNV_PRIME
-from torua_spark.functions.hashing import fnv1a32, fnv1a32_sql, shard_for_key
+from torua_spark.functions.hashing import (
+    fnv1a32,
+    fnv1a32_py,
+    fnv1a32_sql,
+    shard_for_key,
+)
 
 HOSTILE_KEYS = [
     "simple",
@@ -20,18 +24,11 @@ HOSTILE_KEYS = [
 ]
 
 
-def fnv_py(s: str) -> int:
-    h = FNV_OFFSET_BASIS
-    for b in s.encode("utf-8"):
-        h = ((h ^ b) * FNV_PRIME) % FNV_MOD
-    return h
-
-
 def test_fnv_matches_python_reference(spark):
     df = spark.createDataFrame([(k,) for k in HOSTILE_KEYS], "key string")
     got = {r["key"]: r["h"] for r in df.select("key", fnv1a32("key").alias("h")).collect()}
     for k in HOSTILE_KEYS:
-        assert got[k] == fnv_py(k), k
+        assert got[k] == fnv1a32_py(k), k
 
 
 def test_fnv_sql_matches_python_reference():
@@ -39,7 +36,7 @@ def test_fnv_sql_matches_python_reference():
     sql = f"SELECT key, {fnv1a32_sql('key')} AS h FROM (SELECT unnest(?) AS key)"
     got = dict(con.execute(sql, [HOSTILE_KEYS]).fetchall())
     for k in HOSTILE_KEYS:
-        assert got[k] == fnv_py(k), k
+        assert got[k] == fnv1a32_py(k), k
 
 
 def test_shard_distribution_property(spark):

@@ -6,15 +6,7 @@ Spark roundtrips would be pathologically slow)."""
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from torua_spark.constants import FNV_MOD, FNV_OFFSET_BASIS, FNV_PRIME
-from torua_spark.functions.hashing import fnv1a32, shard_for_key
-
-
-def fnv_py(s: str) -> int:
-    h = FNV_OFFSET_BASIS
-    for b in s.encode("utf-8"):
-        h = ((h ^ b) * FNV_PRIME) % FNV_MOD
-    return h
+from torua_spark.functions.hashing import fnv1a32, fnv1a32_py, shard_for_key
 
 
 # One batched property: random unicode keys -> Catalyst FNV == Python FNV.
@@ -29,7 +21,7 @@ def test_fnv_property_random_unicode(spark, keys):
     df = spark.createDataFrame([(k,) for k in keys], "key string")
     got = {r["key"]: r["h"] for r in df.select("key", fnv1a32("key").alias("h")).collect()}
     for k in keys:
-        assert got[k] == fnv_py(k), repr(k)
+        assert got[k] == fnv1a32_py(k), repr(k)
 
 
 def test_shard_always_in_range(spark):

@@ -20,12 +20,26 @@ cmd/coordinator/main.go and cmd/node/main.go):
     query shard_hint          -> engine.scan(..., shard_hint=[...])
                                  engine.list_keys(shard_hint=[...])
 
-State lives in a DataFrame (lazily maintained via the kv operators);
-``checkpoint_to`` / ``restore_from`` persist it as shard-partitioned
-parquet — the at-rest layout whose directory structure IS the
-reference's shard placement, so point lookups partition-prune to a
-single shard directory exactly as the coordinator routes to a single
-node.
+State is a base DataFrame plus a driver-side write buffer, the shape of
+an in-memory write buffer over immutable columnar storage.
+``put``/``put_many``/``delete`` record into a dict (key -> value, or a
+tombstone); ``get``/``multi_get`` answer buffered keys from it and send
+only the other keys to the base relation, and an unhinted ``scan``
+merges the base keys in range with the buffered ones. The buffer folds
+into the base through ``kvops.upsert``/``kvops.delete`` before
+``checkpoint_to``, ``dataframe``, ``stats``, ``broadcast_stats``,
+``list_keys``, ``delete_range``, ``compact_for_serving`` and any
+``shard_hint`` read, and on every 8th mutation, where the lineage is
+also cut. The buffer assumes a key-unique base, which every state the
+engine builds or checkpoints is.
+
+``checkpoint_to`` / ``restore_from`` persist the state as
+shard-partitioned parquet: the directory per shard IS the reference's
+shard placement. A restored engine keeps reading that layout until a
+fold. Point lookups filter on ``key`` alone: Spark pushes the predicate
+into the parquet scan (row-group min/max skipping) but lists every
+shard directory. Only ``shard_hint`` reads prune directories, through
+the partition column.
 """
 
 from __future__ import annotations
@@ -33,10 +47,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from torua_spark.constants import NODES, NUM_SHARDS
-from torua_spark.functions.hashing import shard_for_key
+from torua_spark.functions.hashing import fnv1a32_py, shard_for_key
 from torua_spark.operators import kv as kvops
 from torua_spark.operators import topology as topo
 from torua_spark.sources.local import local_df
+
+# write-buffer marker of a deleted key
+_TOMBSTONE = object()
+# the Python types a value comes back from Spark as, per value_type; a
+# batch holding any other value (an int that local_df would CAST) skips
+# the buffer and takes the DataFrame path
+_PY_TYPES = {"string": str, "binary": (bytes, bytearray)}
 
 
 class ToruaEngine:
@@ -61,53 +82,103 @@ class ToruaEngine:
         self._kv = kv if kv is not None else local_df(
             spark, [], f"key string, value {value_type}"
         )
+        # writes not yet folded into _kv: key -> value or _TOMBSTONE
+        self._buf: dict = {}
         self._mutations = 0
         # at-rest shard-partitioned view (set by restore_from): lets
         # shard_hint reads filter the PARTITION column — directory
         # pruning — instead of computing the routing hash per row.
-        # Any mutation invalidates it (the in-memory state moves on).
+        # A fold or mutation that changes _kv invalidates it.
         self._at_rest: DataFrame | None = None
 
     # ------------------------------------------------------------ data path
 
     def get(self, key: str) -> str | None:
         """GET /data/{key}: value or None (the 404 path)."""
+        if key in self._buf:
+            value = self._buf[key]
+            return None if value is _TOMBSTONE else value
         rows = kvops.point_get(self._kv, key).take(1)
         return rows[0]["value"] if rows else None
 
     def multi_get(self, keys: list[str]) -> dict[str, str]:
-        return {
-            r["key"]: r["value"] for r in kvops.multi_get(self._kv, keys).collect()
-        }
+        out, rest = {}, []
+        for k in keys:
+            if k not in self._buf:
+                rest.append(k)
+            elif self._buf[k] is not _TOMBSTONE:
+                out[k] = self._buf[k]
+        if rest:
+            out.update(
+                (r["key"], r["value"])
+                for r in kvops.multi_get(self._kv, rest).collect()
+            )
+        return out
 
     def put(self, key: str, value: str) -> "ToruaEngine":
         return self.put_many([(key, value)])
 
     def put_many(self, items: list[tuple[str, str]]) -> "ToruaEngine":
-        """PUT /data/{key}: last-writer-wins upsert (batched)."""
-        updates = local_df(
-            self.spark, items, f"key string, value {self.value_type}"
-        )
-        self._kv = kvops.upsert(self._kv, updates)
-        self._at_rest = None
-        self._compact()
-        return self
+        """PUT /data/{key}: last-writer-wins upsert (batched). A key
+        repeated within one batch keeps its greatest value, a None
+        value losing to any other — ``kvops.upsert``'s tie-break."""
+        items = list(items)
+        types = _PY_TYPES.get(self.value_type, ())
+        if all(
+            isinstance(k, str) and (v is None or isinstance(v, types))
+            for k, v in items
+        ):
+            batch: dict = {}
+            for k, v in items:
+                if isinstance(v, bytearray):
+                    v = bytes(v)  # Spark hands binary back as bytes
+                old = batch.get(k)
+                if old is None or (v is not None and v > old):
+                    batch[k] = v
+            return self._record(batch)
+        self._fold()
+        self._apply(items, [])
+        return self._record({})
 
     def delete(self, *keys: str) -> "ToruaEngine":
         """DELETE /data/{key}: idempotent."""
-        tombs = local_df(self.spark, [(k,) for k in keys], "key string")
-        self._kv = kvops.delete(self._kv, tombs)
-        self._at_rest = None
-        self._compact()
+        if all(isinstance(k, str) for k in keys):
+            return self._record(dict.fromkeys(keys, _TOMBSTONE))
+        self._fold()
+        self._apply([], [(k,) for k in keys])
+        return self._record({})
+
+    def _record(self, entries: dict) -> "ToruaEngine":
+        # A later batch beats an earlier one. Every 8th mutation folds
+        # and cuts the lineage, so neither the buffer nor the state
+        # plan grows without bound (the role of log compaction).
+        self._buf.update(entries)
+        self._mutations += 1
+        if self._mutations % 8 == 0:
+            self._fold()
+            self._kv = self._kv.localCheckpoint(eager=False)
         return self
 
-    def _compact(self, every: int = 8) -> None:
-        # Each mutation layers a window/anti-join over the state plan;
-        # cut the lineage periodically so a long mutation chain doesn't
-        # grow the plan unboundedly (same role as log compaction).
-        self._mutations += 1
-        if self._mutations % every == 0:
-            self._kv = self._kv.localCheckpoint(eager=False)
+    def _fold(self) -> None:
+        """Apply the write buffer to ``_kv``: one upsert of the buffered
+        values, one anti-join of the tombstones."""
+        if self._buf:
+            self._apply(
+                [(k, v) for k, v in self._buf.items() if v is not _TOMBSTONE],
+                [(k,) for k, v in self._buf.items() if v is _TOMBSTONE],
+            )
+            self._buf = {}
+
+    def _apply(self, puts: list, tombs: list) -> None:
+        if puts:
+            self._kv = kvops.upsert(self._kv, local_df(
+                self.spark, puts, f"key string, value {self.value_type}"
+            ))
+        if tombs:
+            self._kv = kvops.delete(
+                self._kv, local_df(self.spark, tombs, "key string")
+            )
+        self._at_rest = None
 
     def scan(self, start: str, end: str,
              shard_hint: list[int] | None = None) -> list[str]:
@@ -117,11 +188,23 @@ class ToruaEngine:
         hint filters the at-rest layout's partition column — Spark
         prunes to the hinted shard DIRECTORIES, the coordinator's
         fan-out-to-fewer-nodes behavior — otherwise it applies the
-        routing predicate per row."""
-        src = self._hinted(shard_hint)
-        return [r["key"] for r in kvops.range_scan(src, start, end).collect()]
+        routing predicate per row. An unhinted scan merges the base
+        keys in range with the write buffer."""
+        if shard_hint is not None:
+            src = self._hinted(shard_hint)
+            return [r["key"] for r in kvops.range_scan(src, start, end).collect()]
+        keys = [
+            r["key"] for r in kvops.range_scan(self._kv, start, end).collect()
+            if r["key"] not in self._buf
+        ]
+        keys += [
+            k for k, v in self._buf.items()
+            if v is not _TOMBSTONE and start <= k < end
+        ]
+        return sorted(keys)
 
     def delete_range(self, start: str, end: str) -> "ToruaEngine":
+        self._fold()
         self._kv = kvops.delete_range(self._kv, start, end)
         self._at_rest = None
         return self
@@ -139,9 +222,10 @@ class ToruaEngine:
         return [r["key"] for r in df.collect()]
 
     def _hinted(self, shard_hint: list[int] | None) -> DataFrame:
-        """The kv relation scoped to a shard hint. Partition-column
-        filter on the at-rest view when valid (directory pruning);
-        routing-hash predicate otherwise."""
+        """The folded kv relation scoped to a shard hint.
+        Partition-column filter on the at-rest view when valid
+        (directory pruning); routing-hash predicate otherwise."""
+        self._fold()
         if shard_hint is None:
             return self._kv
         if self._at_rest is not None:
@@ -155,13 +239,10 @@ class ToruaEngine:
     # --------------------------------------------------------- control path
 
     def route(self, key: str) -> tuple[int, str]:
-        """key -> (shard_id, node_id), the coordinator's routing decision."""
-        row = (
-            local_df(self.spark, [(key,)], "key string")
-            .select(shard_for_key(F.col("key"), self.num_shards).alias("s"))
-            .take(1)
-        )[0]
-        shard = row["s"]
+        """key -> (shard_id, node_id), the coordinator's routing
+        decision, computed on the driver: the same FNV-1a 32 as the
+        ``shard_for_key`` expression ``checkpoint_to`` partitions by."""
+        shard = fnv1a32_py(key) % self.num_shards
         node = self.node_list[shard % len(self.node_list)][0]
         return shard, node
 
@@ -175,10 +256,12 @@ class ToruaEngine:
 
     def stats(self) -> DataFrame:
         """Per-shard {keys, bytes} stats."""
+        self._fold()
         return kvops.stats(self._kv, self.num_shards)
 
     def broadcast_stats(self) -> DataFrame:
         """POST /broadcast: per-node gather with sent_to."""
+        self._fold()
         return topo.broadcast_gather(self._kv, self.spark, self.num_shards, self.node_list)
 
     def control(self, payload: dict | str | None = None) -> "ToruaEngine":
@@ -218,6 +301,7 @@ class ToruaEngine:
         real deployment serves point ops from a KV cache hydrated by
         `checkpoint_to`; this keeps interactive lookups snappy
         without leaving Spark."""
+        self._fold()
         if partitions is None:
             # Size from CATALYST STATISTICS, not a count() scan: at
             # 100 TB a rebalance must not read the table just to pick
@@ -259,6 +343,7 @@ class ToruaEngine:
         import json
         import pathlib
 
+        self._fold()
         (
             self._kv.withColumn("shard_id", shard_for_key(F.col("key"), self.num_shards))
             .write.mode("overwrite")
@@ -310,4 +395,5 @@ class ToruaEngine:
         return eng
 
     def dataframe(self) -> DataFrame:
+        self._fold()
         return self._kv

@@ -44,6 +44,15 @@ def fnv1a32(col: Column | str) -> Column:
     return F.when(F.length(b) == 0, offset).otherwise(hashed)
 
 
+def fnv1a32_py(key: str) -> int:
+    """The same FNV-1a 32 as :func:`fnv1a32`, in plain Python: routes a
+    single key on the driver without a Spark job."""
+    h = FNV_OFFSET_BASIS
+    for b in key.encode("utf-8"):
+        h = ((h ^ b) * FNV_PRIME) % FNV_MOD
+    return h
+
+
 def shard_for_key(col: Column | str, num_shards: int = NUM_SHARDS) -> Column:
     """``shard_id = fnv1a32(key) % num_shards``.
 

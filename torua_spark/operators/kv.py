@@ -3,16 +3,19 @@
 The reference's CRUD semantics (internal/storage/store.go:297-444,
 internal/shard/shard.go:257-368,573-630) re-expressed as set-oriented
 DataFrame transforms. Each op is a *batch* analog of the serving-path
-op: point ops become partition-prunable filters, upsert becomes
-last-writer-wins window dedup, delete becomes an anti-join, range scan
-a sorted range predicate.
+op: point ops become key filters, upsert becomes last-writer-wins
+window dedup, delete becomes an anti-join, range scan a sorted range
+predicate.
 
 Scale notes (100 TB): every operator here is shuffle-free except
 ``upsert`` (one shuffle on key — unavoidable for last-writer-wins; with
 a key-bucketed table even that shuffle disappears) and ``stats`` (one
-partial+final aggregation). Point lookups on a table partitioned by
-``shard_for_key`` prune to a single partition — the exact analog of the
-reference's O(1) coordinator routing (cmd/coordinator/main.go:530-533).
+partial+final aggregation). Point lookups filter on ``key`` only: over
+parquet Spark pushes that predicate into the scan, where row-group
+min/max statistics skip data, but every shard directory is still
+listed. Directory pruning — the analog of the reference's coordinator
+routing (cmd/coordinator/main.go:530-533) — needs a filter on the
+shard partition column, which only ``shard_hint`` reads add.
 """
 
 from __future__ import annotations
