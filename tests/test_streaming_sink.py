@@ -1,10 +1,11 @@
 """foreachBatch exactly-once sink pattern: stream -> idempotent parquet
 write per epoch, verified against the batch read."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from torua_spark.sources.catalog import load_table
-from torua_spark.streaming.windows import events_stream
+from torua_spark.streaming.windows import documents_stream, events_stream
 
 
 def test_foreachbatch_parquet_sink(spark, sf_dir, tmp_path):
@@ -204,3 +205,63 @@ def test_streaming_cdc_crash_restart_converges(spark, tmp_path, monkeypatch):
     assert not any(
         d.name.startswith(".") for d in pathlib.Path(lake).iterdir() if d.is_dir()
     )
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.mark.parametrize("shape", ["memory", "batches", "files", "batches_raise"])
+def test_drain_leaves_no_session_state(spark, sf_dir, tmp_path, shape):
+    """Every drain shape stops its stream, restores the session's
+    shuffle width and leaves no temp view behind, also when the
+    per-batch function raises."""
+    from torua_spark.streaming import windows
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    views = _temp_views(spark)
+
+    def boom(batch_df):
+        raise RuntimeError("injected batch failure")
+
+    if shape == "memory":
+        counts = events_stream(spark, sf_dir).groupBy("event_type").count()
+        assert windows.drain_to_batch(counts).count() > 0
+    elif shape == "files":
+        rows = events_stream(spark, sf_dir).select("event_id", "event_type")
+        out = windows.drain_to_files(rows, str(tmp_path / "sink"), str(tmp_path / "ckpt"))
+        assert out.count() > 0
+    elif shape == "batches":
+        out = windows.drain_batches(
+            documents_stream(spark, sf_dir), lambda b: b.select("doc_id"), "doc_id long"
+        )
+        assert out.count() > 0
+    else:
+        with pytest.raises(Exception, match="injected batch failure"):
+            windows.drain_batches(documents_stream(spark, sf_dir), boom, "doc_id long")
+
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert _temp_views(spark) == views
+
+
+def test_drain_batches_without_output_returns_empty_schema(spark, sf_dir):
+    """A stream whose micro-batches are all empty never runs the
+    per-batch function, and the drain returns zero rows of exactly the
+    given schema."""
+    from torua_spark.streaming.windows import drain_batches
+
+    calls = []
+
+    def record(batch_df):
+        calls.append(batch_df)
+        return batch_df
+
+    out = drain_batches(
+        documents_stream(spark, sf_dir).filter(F.lit(False)),
+        record,
+        "doc_id long, score double",
+    )
+    assert calls == []
+    assert out.schema.simpleString() == "struct<doc_id:bigint,score:double>"
+    assert out.count() == 0

@@ -336,10 +336,12 @@ class ToruaEngine:
     def checkpoint_to(self, path: str) -> None:
         """Persist as shard-partitioned parquet: directory-per-shard IS
         the reference's shard placement at rest. A ``_torua_meta.json``
-        sidecar records the shard count the layout was routed with
-        (underscore-prefixed, so parquet readers skip it like
-        _SUCCESS) — restore_from uses it to decide whether the on-disk
-        sharding is still THIS engine's sharding."""
+        sidecar records the shard count the layout was routed with and
+        the value type (underscore-prefixed, so parquet readers skip it
+        like _SUCCESS) — restore_from uses the first to decide whether
+        the on-disk sharding is still THIS engine's sharding, and the
+        second to restore an empty state, whose write leaves no parquet
+        file to infer a schema from."""
         import json
         import pathlib
 
@@ -357,7 +359,7 @@ class ToruaEngine:
         if "://" not in path or path.startswith("file://"):
             local = path.split("://", 1)[-1] if "://" in path else path
             (pathlib.Path(local) / "_torua_meta.json").write_text(
-                json.dumps({"num_shards": self.num_shards})
+                json.dumps({"num_shards": self.num_shards, "value_type": self.value_type})
             )
 
     @classmethod
@@ -370,7 +372,9 @@ class ToruaEngine:
         column exists AND the sidecar shard count equals num_shards.
         Anything else (foreign parquet, an explicit num_shards
         override, a pre-sidecar checkpoint) falls back to the
-        routing-predicate path, which is always self-consistent."""
+        routing-predicate path, which is always self-consistent. A
+        checkpoint with no parquet data file restores as an empty
+        ``key string, value <sidecar value_type>`` state."""
         import json
         import pathlib
 
@@ -384,6 +388,13 @@ class ToruaEngine:
             meta = json.loads(mp.read_text())
         if meta is not None and "num_shards" not in kw:
             kw["num_shards"] = int(meta["num_shards"])
+        if (
+            meta is not None
+            and "value_type" in meta
+            and not any(pathlib.Path(local).rglob("*.parquet"))
+        ):
+            empty = local_df(spark, [], f"key string, value {meta['value_type']}")
+            return cls(spark, empty, **kw)
         raw = spark.read.parquet(path)
         eng = cls(spark, raw.select("key", "value"), **kw)
         if (

@@ -30,8 +30,9 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from torua_spark.sources.catalog import load_table
-from torua_spark.sources.io import compact_files, merge_upsert, purge_keys
+from torua_spark.sources.io import compact_files, memo_session_tree, merge_upsert, purge_keys
 from torua_spark.sources.local import local_df
+from torua_spark.streaming.windows import _drain
 
 # Deterministic knobs shared by the Spark side and the SQL oracle.
 _COMPACT_IN_FILES = 64   # the simulated small-file problem
@@ -332,7 +333,7 @@ _CDC_WAVES_MEMO: dict[tuple, str] = {}
 
 
 def q_streaming_lake_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC INTO the lake (round 7): a file-stream delivers
+    """Streaming CDC INTO the lake: a file-stream delivers
     two change waves — the full orders snapshot, then the same
     update+insert batch lake_merge_upsert uses — and ``foreachBatch``
     MERGEs each micro-batch into the hive-partitioned lake with the
@@ -343,6 +344,7 @@ def q_streaming_lake_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     processed and the summed update/insert counters."""
     import os
     import pathlib
+    import time
     import uuid
 
     orders5 = load_table(spark, sf_dir, "orders").select(
@@ -363,29 +365,21 @@ def q_streaming_lake_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (each run gets its own lake + checkpoint, so every run still
     # replays the full two-wave merge from scratch); the CDC feed a
     # deployment consumes is likewise not re-rendered per reader
-    from torua_spark.sources.io import evict_stale_app_entries
-
-    app = spark.sparkContext.applicationId
-    evict_stale_app_entries(_CDC_WAVES_MEMO, app)
-    wave_key = (app, sf_dir)
-    stream_dir = _CDC_WAVES_MEMO.get(wave_key)
-    if stream_dir is None:
-        wbase = tempfile.mkdtemp(prefix="torua_cdc_waves_")
+    def write_waves(wbase):
         stream_dir = f"{wbase}/waves"
         pathlib.Path(stream_dir).mkdir()
-        now = None
+        now = time.time()
         for i, wave in enumerate((orders5, upd.unionByName(ins))):
             tmp = f"{wbase}/w{i}"
             wave.coalesce(1).write.parquet(tmp)
-            part = next(pathlib.Path(tmp).glob("*.parquet"))
             dst = f"{stream_dir}/wave{i}.parquet"
-            part.rename(dst)
-            if now is None:
-                import time
-
-                now = time.time()
+            next(pathlib.Path(tmp).glob("*.parquet")).rename(dst)
             os.utime(dst, (now - 120 + i * 60, now - 120 + i * 60))
-        _CDC_WAVES_MEMO[wave_key] = stream_dir
+        return stream_dir
+
+    stream_dir = memo_session_tree(
+        _CDC_WAVES_MEMO, spark, sf_dir, "torua_cdc_waves_", write_waves
+    )
     base = tempfile.mkdtemp(prefix="torua_lake_cdc_")
     try:
         lake = f"{base}/orders"
@@ -402,7 +396,7 @@ def q_streaming_lake_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             totals["updated"] += r["rows_updated"]
             totals["inserted"] += r["rows_inserted"]
 
-        q = (
+        _drain(
             spark.readStream.format("parquet")
             .schema(orders5.schema)
             .option("maxFilesPerTrigger", 1)
@@ -412,12 +406,7 @@ def q_streaming_lake_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option(
                 "checkpointLocation", f"{base}/ckpt_{uuid.uuid4().hex[:8]}"
             )
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
         parts = (
             spark.read.parquet(lake)

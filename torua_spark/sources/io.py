@@ -775,18 +775,39 @@ def clear_index_leftovers(path: str) -> list[str]:
 def evict_stale_app_entries(memo: dict, app: str, root_of=None) -> None:
     """Sweep an (applicationId, ...)-keyed path memo: entries
     belonging to another (restarted/dead) application are dropped and
-    their temp trees removed — the _GATHER_BC eviction discipline
-    applied to the on-disk caches (r10 review: a long-lived process
-    restarting its SparkContext would otherwise accumulate one
-    orphaned index/fixture tree per old application). ``root_of``
-    maps a stored path to the temp root to delete (default: its
-    parent directory — the mkdtemp root the path sits inside)."""
+    their temp trees removed, so a long-lived process restarting its
+    SparkContext does not accumulate one orphaned index/fixture tree
+    per old application. ``root_of`` maps a stored path to the temp
+    root to delete (default: its parent directory — the mkdtemp root
+    the path sits inside)."""
     import os
     import shutil
 
     for k in [k for k in memo if k[0] != app]:
         p = memo.pop(k)
-        if isinstance(p, tuple):  # (path, companion) entries (r14:
-            p = p[0]              # the pre-exploded index handles)
+        if isinstance(p, tuple):  # (path, companion) entries
+            p = p[0]
         root = root_of(p) if root_of is not None else os.path.dirname(p)
         shutil.rmtree(root, ignore_errors=True)
+
+
+def memo_session_tree(memo: dict, spark: SparkSession, sf_dir: str,
+                      prefix: str, build):
+    """The ``memo`` entry for (this application, ``sf_dir``), built on
+    first use: ``build(base)`` writes under a fresh temp root ``base``
+    and returns a path directly inside it, or a ``(path, companion)``
+    tuple. The root lives until the process exits or eviction sees the
+    application restarted, whichever comes first."""
+    import atexit
+    import shutil
+    import tempfile
+
+    app = spark.sparkContext.applicationId
+    evict_stale_app_entries(memo, app)
+    key = (app, sf_dir)
+    if key not in memo:
+        base = tempfile.mkdtemp(prefix=prefix)
+        # eviction may remove the tree first, hence ignore_errors
+        atexit.register(shutil.rmtree, base, ignore_errors=True)
+        memo[key] = build(base)
+    return memo[key]

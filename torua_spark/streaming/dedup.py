@@ -22,11 +22,9 @@ count(DISTINCT user_id).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from torua_spark.streaming.windows import events_stream
+from torua_spark.streaming.windows import drain_to_batch, events_stream
 
 
 def streaming_distinct_users(spark: SparkSession, sf_dir: str,
@@ -39,26 +37,8 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str,
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    sink = spark.table(name)
-    # The sink already holds one row per (user_id, event_type); the
-    # final rollup is a tiny batch aggregation over it.
-    out = sink.groupBy("event_type").agg(
+    # The snapshot holds one row per (user_id, event_type); the final
+    # rollup is a tiny batch aggregation over it.
+    return drain_to_batch(deduped, "append").groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_distinct_users")
     )
-    return out.localCheckpoint(eager=True)

@@ -16,7 +16,6 @@ streaming output is oracle-checkable against the batch SQL — the
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
@@ -26,7 +25,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from torua_spark.constants import HEALTH_FAILURE_THRESHOLD
 from torua_spark.operators.health import FAIL_VALUE_CUTOFF, N_HEALTH_NODES, PROBE_EVENT_TYPE
-from torua_spark.streaming.windows import events_stream
+from torua_spark.streaming.windows import drain_to_batch, events_stream
 
 OUTPUT_SCHEMA = (
     "node_id string, unhealthy_transitions long, total_failures long, total_probes long"
@@ -89,26 +88,15 @@ def streaming_consecutive_failures(spark: SparkSession, sf_dir: str) -> DataFram
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"health_state_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = result.writeStream.outputMode("update").format("memory").queryName(name).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    out = spark.table(name)
+    out = drain_to_batch(result, "update")
     # "update" mode appends one row per key per batch; keep the LAST
     # emitted state per node. The state's probe counter is strictly
     # monotonic across a node's emissions (a group only fires when the
     # batch delivered it rows, and every row increments probes), so
     # keep-last == max(total_probes) per node — expressible as a
     # row_number window in Spark rather than a driver-side pandas
-    # groupby (VERDICT r3 #6), and order-independent where the memory
-    # sink's row order is not contractual.
+    # groupby, and order-independent where the memory sink's row
+    # order is not contractual.
     from pyspark.sql import Window, functions as F
 
     w = Window.partitionBy("node_id").orderBy(F.desc("total_probes"))

@@ -23,7 +23,6 @@ matches iff every sketch honored its bound.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
@@ -31,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from torua_spark.streaming.windows import events_stream
+from torua_spark.streaming.windows import drain_to_batch, events_stream
 
 HH_CAPACITY = 8
 
@@ -100,22 +99,7 @@ def streaming_heavy_hitter_candidates(spark: SparkSession,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"hh_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            result.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    snap = drain_to_batch(result, "update")
     # update-mode sink holds one emission PER BATCH per key; only the
     # final batch's rows are the final summary. Keep rows carrying the
     # KEY's max n (the whole-key last emission, which re-emits every
@@ -125,7 +109,6 @@ def streaming_heavy_hitter_candidates(spark: SparkSession,
     # on any multi-batch source.
     from pyspark.sql import Window, functions as F
 
-    snap = spark.table(name).localCheckpoint(eager=True)
     w = Window.partitionBy("event_type")
     return (
         snap.withColumn("_maxn", F.max("n").over(w))
