@@ -319,13 +319,13 @@ def test_purge_recovers_from_crash_between_renames(spark, tmp_path, monkeypatch)
     from torua_spark.sources import io
 
     path = _mk_lake(spark, tmp_path)
-    real_swap = io._swap_partition
+    real_swap = io.tree_swap_publish
 
     def crash_between(live, tmp, trash):
         os.rename(live, trash)
         raise RuntimeError("injected crash between renames")
 
-    monkeypatch.setattr(io, "_swap_partition", crash_between)
+    monkeypatch.setattr(io, "tree_swap_publish", crash_between)
     with pytest.raises(RuntimeError, match="injected"):
         io.purge_keys(spark, path, ["u1"], "key", "p")  # u1 lives in p=1
     # mid-swap wreckage: live gone, ORIGINAL bytes intact in trash,
@@ -334,7 +334,7 @@ def test_purge_recovers_from_crash_between_renames(spark, tmp_path, monkeypatch)
     assert pathlib.Path(f"{path}/.purge_trash_p=1").exists()
     assert pathlib.Path(f"{path}/.purge_tmp_p=1").exists()
 
-    monkeypatch.setattr(io, "_swap_partition", real_swap)
+    monkeypatch.setattr(io, "tree_swap_publish", real_swap)
     report = io.purge_keys(spark, path, ["u1"], "key", "p")
     # recovery rolled the completed rewrite forward, so the re-run
     # found nothing left to purge
@@ -357,21 +357,21 @@ def test_purge_recovers_from_crash_before_trash_cleanup(spark, tmp_path,
     from torua_spark.sources import io
 
     path = _mk_lake(spark, tmp_path)
-    real_swap = io._swap_partition
+    real_swap = io.tree_swap_publish
 
     def crash_after_swap(live, tmp, trash):
         os.rename(live, trash)
         os.rename(tmp, live)
         raise RuntimeError("injected crash before trash cleanup")
 
-    monkeypatch.setattr(io, "_swap_partition", crash_after_swap)
+    monkeypatch.setattr(io, "tree_swap_publish", crash_after_swap)
     with pytest.raises(RuntimeError, match="injected"):
         io.purge_keys(spark, path, ["u2"], "key", "p")
     back = spark.read.parquet(path)  # already consistent
     assert back.count() == 999
     assert back.filter("key = 'u2'").count() == 0
 
-    monkeypatch.setattr(io, "_swap_partition", real_swap)
+    monkeypatch.setattr(io, "tree_swap_publish", real_swap)
     io.purge_keys(spark, path, ["no-such-key"], "key", "p")
     assert spark.read.parquet(path).count() == 999
     assert _no_hidden_dirs(path)
@@ -394,17 +394,17 @@ def test_merge_recovers_and_rerun_converges(spark, tmp_path, monkeypatch):
         [("u1", 1, 111), ("u9999", 3, 999)],
         "key string, p long, payload long",
     )
-    real_swap = io._swap_partition
+    real_swap = io.tree_swap_publish
 
     def crash_between(live, tmp, trash):
         os.rename(live, trash)
         raise RuntimeError("injected crash between renames")
 
-    monkeypatch.setattr(io, "_swap_partition", crash_between)
+    monkeypatch.setattr(io, "tree_swap_publish", crash_between)
     with pytest.raises(RuntimeError, match="injected"):
         io.merge_upsert(spark, path, updates, "key", "p")
 
-    monkeypatch.setattr(io, "_swap_partition", real_swap)
+    monkeypatch.setattr(io, "tree_swap_publish", real_swap)
     io.merge_upsert(spark, path, updates, "key", "p")
     back = spark.read.parquet(path)
     assert back.count() == 1_001  # 1000 + 1 insert

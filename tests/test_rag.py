@@ -5,6 +5,7 @@ import pytest
 from tests.oracle import compare
 from torua_spark.operators import graphrag as gr
 from torua_spark.queries import rag_q
+from torua_spark.sources import io as sio
 
 
 # Iterate names WITH an oracle (vector_ann_ivf_learned is pinned by
@@ -1679,7 +1680,7 @@ def test_ivf_append_journal_detects_and_heals_crashes(spark, sf_dir, tmp_path):
     base_probe = sorted(
         map(tuple, sim.ivf_index_topk(spark, path, q, 10, 3).collect())
     )
-    jdir = f"{path}/{sim._APPEND_JOURNAL}"
+    jdir = f"{path}/{sio._APPEND_JOURNAL}"
 
     def write_journal():
         local_df(
@@ -1837,7 +1838,7 @@ def test_substring_index_append_compact_lifecycle(spark, sf_dir, tmp_path):
 
     # (3) append-journal crash points
     old_max = int(base.agg(F.max("doc_id")).collect()[0][0])
-    jdir = f"{inc}/{dd._SUBSTR_JOURNAL}"
+    jdir = f"{inc}/{sio._APPEND_JOURNAL}"
     watermark = (old_max + 1) << 20
     batch_rows = [r for r in before if r[1] >= watermark]
 
@@ -2000,7 +2001,7 @@ def test_index_append_heals_crashed_compaction_first(spark, sf_dir, tmp_path):
           old_max)],
         "batch_max long, batch_count long, old_max long",
     ).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{sim._APPEND_JOURNAL}"
+        f"{path}/{sio._APPEND_JOURNAL}"
     )
     os.rename(f"{path}/vectors", f"{path}/.compact_tmp_vectors")
     assert sim.ivf_append_recover(spark, path) == "completed"
@@ -2055,11 +2056,11 @@ def test_index_rebuild_clears_stale_crash_artifacts(spark, sf_dir, tmp_path):
     local_df(
         spark, [(5, 3, 2)],
         "batch_max long, batch_count long, old_max long",
-    ).coalesce(1).write.parquet(f"{path}/{sim._APPEND_JOURNAL}")
+    ).coalesce(1).write.parquet(f"{path}/{sio._APPEND_JOURNAL}")
     os.makedirs(f"{path}/.compact_tmp_vectors", exist_ok=True)
     os.makedirs(f"{path}/.compact_trash_vectors", exist_ok=True)
     sim.ivf_index_write(emb, path)  # rebuild in place
-    assert not os.path.exists(f"{path}/{sim._APPEND_JOURNAL}")
+    assert not os.path.exists(f"{path}/{sio._APPEND_JOURNAL}")
     assert not os.path.exists(f"{path}/.compact_tmp_vectors")
     assert not os.path.exists(f"{path}/.compact_trash_vectors")
     assert sim.ivf_append_recover(spark, path) is None  # nothing stale
@@ -2078,10 +2079,10 @@ def test_index_rebuild_clears_stale_crash_artifacts(spark, sf_dir, tmp_path):
     local_df(
         spark, [(2, 7, 10, 1)],
         "old_max long, n_new long, k int, batch_max long",
-    ).coalesce(1).write.parquet(f"{idx}/{dd._SUBSTR_JOURNAL}")
+    ).coalesce(1).write.parquet(f"{idx}/{sio._APPEND_JOURNAL}")
     os.makedirs(f"{idx}/.compact_tmp_grams", exist_ok=True)
     dd.exact_substring_index_write(docs, idx, k=10)
-    assert not os.path.exists(f"{idx}/{dd._SUBSTR_JOURNAL}")
+    assert not os.path.exists(f"{idx}/{sio._APPEND_JOURNAL}")
     assert not os.path.exists(f"{idx}/.compact_tmp_grams")
     assert dd.exact_substring_append_recover(spark, idx) is None
     assert sorted(
@@ -2116,7 +2117,7 @@ def test_rebuild_failure_before_write_keeps_journal_guard(
     local_df(
         spark, [(5, 3, 2)],
         "batch_max long, batch_count long, old_max long",
-    ).coalesce(1).write.parquet(f"{path}/{sim._APPEND_JOURNAL}")
+    ).coalesce(1).write.parquet(f"{path}/{sio._APPEND_JOURNAL}")
 
     def boom(*a, **k):
         raise MemoryError("simulated mid-Lloyd death")
@@ -2124,7 +2125,7 @@ def test_rebuild_failure_before_write_keeps_journal_guard(
     monkeypatch.setattr(sim, "kmeans_centroids", boom)
     with _pt.raises(MemoryError):
         sim.ivf_index_write(emb, path)
-    assert os.path.exists(f"{path}/{sim._APPEND_JOURNAL}")
+    assert os.path.exists(f"{path}/{sio._APPEND_JOURNAL}")
     assert os.path.exists(f"{path}/vectors")  # old data untouched
     q = [float(x) for x in
          emb.filter(F.col("vec_id") == 0).select("embedding")
@@ -2139,14 +2140,14 @@ def test_rebuild_failure_before_write_keeps_journal_guard(
     local_df(
         spark, [(2, 7, 10, 1)],
         "old_max long, n_new long, k int, batch_max long",
-    ).coalesce(1).write.parquet(f"{idx}/{dd._SUBSTR_JOURNAL}")
+    ).coalesce(1).write.parquet(f"{idx}/{sio._APPEND_JOURNAL}")
     monkeypatch.setattr(dd, "_window_hashes", boom)
     with _pt.raises(MemoryError):
         dd.exact_substring_index_write(docs, idx, k=10)
-    assert os.path.exists(f"{idx}/{dd._SUBSTR_JOURNAL}")
+    assert os.path.exists(f"{idx}/{sio._APPEND_JOURNAL}")
     assert os.path.exists(f"{idx}/grams")
     with _pt.raises(ValueError, match="unfinished append"):
-        dd._require_no_pending_substr_append(spark, idx)
+        sio.require_no_pending_append(spark, idx, dd._SUBSTR_INDEX)
 
 
 def test_append_recover_restores_missing_meta(spark, sf_dir, tmp_path):
@@ -2174,7 +2175,7 @@ def test_append_recover_restores_missing_meta(spark, sf_dir, tmp_path):
     local_df(
         spark, [(old_max, 0, old_max)],
         "batch_max long, batch_count long, old_max long",
-    ).coalesce(1).write.parquet(f"{path}/{sim._APPEND_JOURNAL}")
+    ).coalesce(1).write.parquet(f"{path}/{sio._APPEND_JOURNAL}")
     shutil.rmtree(f"{path}/_meta")  # the delete landed, the write didn't
     assert sim.ivf_append_recover(spark, path) == "completed"
     meta = read_meta_sidecar(spark, path)
@@ -2188,11 +2189,140 @@ def test_append_recover_restores_missing_meta(spark, sf_dir, tmp_path):
     local_df(
         spark, [(dmax, 0, 10, dmax)],
         "old_max long, n_new long, k int, batch_max long",
-    ).coalesce(1).write.parquet(f"{idx}/{dd._SUBSTR_JOURNAL}")
+    ).coalesce(1).write.parquet(f"{idx}/{sio._APPEND_JOURNAL}")
     shutil.rmtree(f"{idx}/_meta")
     assert dd.exact_substring_append_recover(spark, idx) == "completed"
     meta = read_meta_sidecar(spark, idx)
     assert meta and meta[0]["max_id"] == dmax and meta[0]["k"] == 10
+
+
+@pytest.mark.parametrize("family", ["ivf", "window_hash"])
+def test_append_recover_pre_meta_cases(spark, tmp_path, family):
+    """Both index families on a pre-meta index (no _meta before the
+    append, so the journal's old_max is NULL): with _meta advanced no
+    watermark separates base rows from batch rows, so recovery raises
+    and keeps the journal guard; with the first _meta write corrupted
+    mid-way nothing was appended, so recovery rolls back to pre-meta."""
+    import os
+    import pathlib
+    import shutil
+
+    from torua_spark.operators import dedup as dd
+    from torua_spark.operators import similarity as sim
+    from torua_spark.sources.local import local_df
+
+    if family == "ivf":
+        recover, rebuild = sim.ivf_append_recover, "ivf_index_write"
+        journal = ((7, 3, None),
+                   "batch_max long, batch_count long, old_max long")
+        meta = ((7,), "max_id long")
+    else:
+        recover = dd.exact_substring_append_recover
+        rebuild = "exact_substring_index_write"
+        journal = ((None, 3, 10, 7),
+                   "old_max long, n_new long, k int, batch_max long")
+        meta = ((7, 10), "max_id long, k int")
+    path = str(tmp_path / family)
+    jdir = f"{path}/{sio._APPEND_JOURNAL}"
+
+    def write(row_ddl, dest):
+        local_df(spark, [row_ddl[0]], row_ddl[1]).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(dest)
+
+    write(journal, jdir)
+    write(meta, f"{path}/_meta")
+    with pytest.raises(ValueError, match=f"pre-meta.*{rebuild}"):
+        recover(spark, path)
+    assert os.path.exists(jdir)
+
+    shutil.rmtree(f"{path}/_meta")
+    pathlib.Path(f"{path}/_meta").mkdir()
+    pathlib.Path(f"{path}/_meta/part-0.parquet").write_bytes(b"junk")
+    assert recover(spark, path) == "rolled_back"
+    assert not os.path.exists(jdir)
+    assert sio.read_meta_sidecar(spark, path) == []
+
+
+def test_ivf_empty_append_journal_restores_watermark(spark, sf_dir, tmp_path,
+                                                     monkeypatch):
+    """The IVF journal records the watermark the append writes to
+    _meta: an empty batch that crashed before the journal clear, with
+    its _meta then lost, recovers to the old max_id, not NULL (which
+    would silently turn the fresh-ids check off)."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from torua_spark.operators import similarity as sim
+    from torua_spark.sources.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf")
+    sim.ivf_index_write(emb, path, kmeans_k=2, iterations=1)
+    old_max = int(emb.agg(F.max("vec_id")).collect()[0][0])
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before the journal clear")
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            sim.ivf_index_append(spark, path, emb.filter("vec_id < 0"))
+    shutil.rmtree(f"{path}/_meta")
+    assert sim.ivf_append_recover(spark, path) == "completed"
+    assert sio.read_meta_sidecar(spark, path)[0]["max_id"] == old_max
+
+
+def test_base_index_memo_removed_at_exit(tmp_path):
+    """The pristine base index the lifecycle entries memoize lives only
+    as long as the process: a child with no JVM (a stub session, a
+    build that only creates the directory) memoizes it the way
+    _q_vector_index_append does, removes its run copy, prints the
+    memoized tree's root and exits; the root must be gone."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    code = textwrap.dedent("""
+        import os
+        import shutil
+
+        from pyspark import SparkContext
+
+        from torua_spark.queries import rag_q
+
+        class Context:
+            applicationId = "app-stub"
+
+        class Session:
+            sparkContext = Context()
+
+        built = []
+
+        def build(path):
+            os.makedirs(path)
+            built.append(path)
+
+        run = rag_q._memoized_base_index(
+            Session(), rag_q._IVF_BASE_INDEX, "sf-stub", build
+        )
+        shutil.rmtree(run, ignore_errors=True)
+        assert SparkContext._active_spark_context is None
+        root = os.path.dirname(built[0])
+        assert os.path.isdir(root)
+        print(root)
+    """)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path),
+           "PYTHONPATH": os.pathsep.join(
+               p for p in (repo, os.environ.get("PYTHONPATH")) if p)}
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, env=env,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    root = out.stdout.strip().splitlines()[-1]
+    assert root.startswith(str(tmp_path)) and not os.path.exists(root)
 
 
 def test_legacy_root_layout_raises_informatively(spark, sf_dir, tmp_path):

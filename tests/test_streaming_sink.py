@@ -179,13 +179,13 @@ def test_streaming_cdc_crash_restart_converges(spark, tmp_path, monkeypatch):
 
     # crash the FIRST partition swap (wave 2's update path — wave 1
     # is all inserts, which rename without swapping)
-    real_swap = io._swap_partition
+    real_swap = io.tree_swap_publish
 
     def crash_between(live, tmp, trash):
         os.rename(live, trash)
         raise RuntimeError("injected crash between renames")
 
-    monkeypatch.setattr(io, "_swap_partition", crash_between)
+    monkeypatch.setattr(io, "tree_swap_publish", crash_between)
     with pytest.raises(Exception, match="injected"):
         run_stream()
     # wave 1 is committed in the checkpoint; wave 2's batch is not,
@@ -194,7 +194,7 @@ def test_streaming_cdc_crash_restart_converges(spark, tmp_path, monkeypatch):
         d.name.startswith(".merge_trash_") for d in pathlib.Path(lake).iterdir()
     )
 
-    monkeypatch.setattr(io, "_swap_partition", real_swap)
+    monkeypatch.setattr(io, "tree_swap_publish", real_swap)
     run_stream()  # same checkpoint: replays ONLY the failed batch
 
     got = {r.key: r.val for r in spark.read.parquet(lake).collect()}

@@ -29,6 +29,17 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from torua_spark.functions.text import jaccard, md5_32, tokens
 
 from torua_spark.functions.compat import round4
+from torua_spark.sources.io import (
+    PersistedIndex,
+    clear_index_leftovers,
+    heal_index,
+    index_append,
+    index_append_recover,
+    index_compact,
+    index_compact_recover,
+    read_meta_sidecar,
+    require_no_pending_append,
+)
 
 N_MINHASH = 16
 N_BANDS = 8  # 2 rows per band
@@ -947,10 +958,9 @@ def exact_substring_index_write(documents: DataFrame, path: str,
                                 text_col: str = "text") -> None:
     """Persist the corpus's window-hash index for INCREMENTAL
     ExactSubstr: one row per distinct k-token window hash with its
-    corpus-first packed (doc, pos) key, under ``{path}/grams`` (r10
-    layout — data in its own subtree like the IVF index's vectors/,
-    so the compaction leg can publish via the whole-tree two-rename
-    swap). Every hash is stored (a singleton in the base corpus makes
+    corpus-first packed (doc, pos) key, under ``{path}/grams`` (data
+    in its own subtree like the IVF index's vectors/, so the
+    compaction leg can publish via the whole-tree two-rename swap). Every hash is stored (a singleton in the base corpus makes
     any later occurrence a duplicate), so the index is ~one row per
     distinct window — at 100 TB, bucket it by hash so the daily probe
     join co-locates. A one-row ``_meta`` parquet records the max
@@ -958,16 +968,10 @@ def exact_substring_index_write(documents: DataFrame, path: str,
     VALIDATE their monotone-ingest-key precondition."""
     import shutil
 
-    from torua_spark.sources.io import clear_index_leftovers
-
     wins = _window_hashes(documents, k, id_col, text_col)
-    # rebuild-in-place hygiene (r10 advice, shared with
-    # ivf_index_write): stale journal / half-swapped compact trees
-    # from the OLD index must not leak into the rebuilt one.
-    # ORDERING (r11 review, the ivf_index_write fix applied here for
-    # protocol symmetry): tear down the old data tree FIRST, then
-    # clear the artifacts, immediately before the publish — clearing
-    # at function entry would leave the OLD index serving without its
+    # tear down the old data tree, then clear its crash artifacts,
+    # immediately before the publish (the ivf_index_write ordering):
+    # clearing earlier would leave the OLD index serving without its
     # journal guard if anything raised before the write began
     shutil.rmtree(f"{path}/grams", ignore_errors=True)
     clear_index_leftovers(path)
@@ -980,10 +984,25 @@ def exact_substring_index_write(documents: DataFrame, path: str,
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
 
 
-# Per-append journal marker — the IVF append's crash-detection
-# protocol (similarity._APPEND_JOURNAL), applied to the window-hash
-# index: journal -> _meta advance -> grams append -> journal clear.
-_SUBSTR_JOURNAL = "_append_journal"
+# The window-hash index as the shared persisted-index protocol sees it
+# (sources/io.PersistedIndex). Packed (doc, pos) keys are monotone in
+# (id, pos), so every row a batch appends has
+# first_p >= (old_max + 1) << 20.
+_SUBSTR_INDEX = PersistedIndex(
+    tree="grams",
+    partition_by=(),
+    journal_ddl="old_max long, n_new long, k int, batch_max long",
+    meta_ddl="max_id long, k int",
+    count_col="n_new",
+    in_batch=lambda old_max: F.col("first_p") >= (old_max + 1) << 20,
+    rebuild="exact_substring_index_write",
+    pending_error=(
+        "window-hash index at {path} has an unfinished append "
+        "(journal marker present): probes would silently miss "
+        "base-corpus duplicates; run "
+        "exact_substring_append_recover(spark, path), then retry"
+    ),
+)
 
 
 def _require_grams_layout(path: str) -> None:
@@ -1009,115 +1028,19 @@ def _require_grams_layout(path: str) -> None:
         )
 
 
-def _require_no_pending_substr_append(spark, path: str) -> None:
-    from torua_spark.sources.io import sidecar_exists
-
-    if sidecar_exists(spark, path, _SUBSTR_JOURNAL):
-        raise ValueError(
-            f"window-hash index at {path} has an unfinished append "
-            f"(journal marker present): probes would silently miss "
-            f"base-corpus duplicates; run "
-            f"exact_substring_append_recover(spark, path), then retry"
-        )
-
-
 def exact_substring_append_recover(spark, path: str) -> str | None:
     """Self-heal a crashed ``exact_substring_index_append`` from its
-    journal marker (the ivf_append_recover contract, keyed on the
-    packed (doc, pos) watermark instead of vec_id): rows appended by
-    the batch all carry ``first_p >= (old_max_id + 1) << 20`` — the
-    packed key is monotone in (id, pos) — so the grams tree decides
-    between completed / rolled_back / partial exactly as the IVF twin
-    does, and a partial multi-file append is healed by rewriting the
-    tree without the partial rows via the shared two-rename swap."""
-    import shutil
-
-    from torua_spark.sources.io import (
-        read_meta_sidecar,
-        sidecar_exists,
-        tree_swap_publish,
-    )
-
-    if not sidecar_exists(spark, path, _SUBSTR_JOURNAL):
-        return None
-    j = read_meta_sidecar(spark, path, _SUBSTR_JOURNAL)
-    if not j:
-        return None
-    old_max = j[0]["old_max"]
-    n_new = j[0]["n_new"]
-    k = j[0]["k"]
-    jdir = f"{path}/{_SUBSTR_JOURNAL}"
-    try:
-        meta = read_meta_sidecar(spark, path)
-        meta_max = meta[0]["max_id"] if meta else None
-        meta_corrupt = False
-        # delete-then-write overwrite: a crash between the two leaves
-        # _meta MISSING, not corrupt — the completed branch must
-        # restore it too (r10 advice; the n == n_new == 0
-        # fully-duplicate-batch case would otherwise silently drop to
-        # the pre-meta caller-beware contract)
-        meta_missing = not meta
-    except Exception:
-        # corrupt (not missing) _meta with a journal present: the
-        # crash landed inside the _meta overwrite — the journal holds
-        # both watermarks, so recovery restores instead of wedging
-        # (the ivf_append_recover contract, r10 review)
-        meta_max, meta_corrupt, meta_missing = None, True, False
-    if not meta_corrupt and meta_max == old_max:
-        shutil.rmtree(jdir)  # crash before the _meta advance
-        return "rolled_back"
-    if old_max is None:
-        if meta_corrupt:
-            # first-ever _meta write crashed mid-way: grams come after
-            # _meta in the protocol, so nothing was appended
-            shutil.rmtree(f"{path}/_meta", ignore_errors=True)
-            shutil.rmtree(jdir)
-            return "rolled_back"
-        raise ValueError(
-            f"cannot heal an in-flight append on the pre-meta index at "
-            f"{path}: no max-id watermark distinguishes base rows from "
-            f"the half-committed batch; rebuild via "
-            f"exact_substring_index_write"
-        )
-    # heal any mid-swap crash of a previous recovery's own partial
-    # rollback BEFORE reading the tree (the ivf_append_recover
-    # contract: reading first would raise PATH_NOT_FOUND forever)
-    exact_substring_compact_recover(path)
-    watermark = (old_max + 1) << 20
-    grams = spark.read.parquet(f"{path}/grams")
-    cond = F.col("first_p") >= watermark
-    n = grams.filter(cond).select("first_p").count()
-    if n == n_new:
-        if meta_corrupt or meta_missing:
-            from torua_spark.sources.local import local_df
-
-            local_df(
-                spark, [(j[0]["batch_max"], k)], "max_id long, k int"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
-        shutil.rmtree(jdir)  # append landed; only the clear was lost
-        return "completed"
-    action = "rolled_back"
-    if n > 0:
-        gdir = f"{path}/grams"
-        tmp = f"{path}/.compact_tmp_grams"
-        trash = f"{path}/.compact_trash_grams"
-        grams.filter(~cond).write.mode("overwrite").parquet(tmp)
-        tree_swap_publish(gdir, tmp, trash)
-        action = "rolled_back_partial"
-    from torua_spark.sources.local import local_df
-
-    local_df(spark, [(old_max, k)], "max_id long, k int").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/_meta")
-    shutil.rmtree(jdir)
-    return action
+    journal: the index ends exactly at its pre- or post-append state.
+    Outcomes and protocol: ``sources/io.PersistedIndex``. Returns the
+    action taken (None when no journal exists)."""
+    return index_append_recover(spark, path, _SUBSTR_INDEX)
 
 
 def exact_substring_index_append(spark, path: str, new_docs: DataFrame,
                                  k: int = 10, id_col: str = "doc_id",
                                  text_col: str = "text") -> dict:
     """Daily-ingest APPEND into the persisted window-hash index (the
-    missing fourth leg of the incremental ExactSubstr life cycle:
+    fourth leg of the incremental ExactSubstr life cycle:
     write -> probe -> APPEND -> compact): after a batch is deduped
     against the index, append its window hashes so the NEXT batch
     dedups against base ∪ batch. Only hashes NOT already indexed are
@@ -1130,28 +1053,16 @@ def exact_substring_index_append(spark, path: str, new_docs: DataFrame,
 
     Cost: one window pass over the BATCH + one join of the batch's
     distinct hashes against the index (hash-bucketed at 100 TB so the
-    join co-locates; nothing rewrites). Crash discipline: the IVF
-    append protocol verbatim — journal marker, _meta-first fail-closed
-    watermark, probes raise while the marker is present,
-    ``exact_substring_append_recover`` heals every crash point (runs
-    first, so a retry after any crash converges)."""
-    import shutil
-
-    from torua_spark.sources.io import read_meta_sidecar
-
-    # heal a crashed compaction first (r10 review: with the grams tree
-    # renamed away mid-swap, append-mode would silently recreate it
-    # holding only the batch's hashes, and the next compaction's
-    # recover would drop the trash holding the base index)
+    join co-locates; nothing rewrites). Crash safety is the shared
+    journaled append (``sources/io.PersistedIndex``); a crashed
+    compaction or append is healed first, so a retry after any crash
+    converges."""
     _require_grams_layout(path)
-    exact_substring_compact_recover(path)
-    exact_substring_append_recover(spark, path)
+    heal_index(spark, path, _SUBSTR_INDEX)
     meta = read_meta_sidecar(spark, path)
     old_max = meta[0]["max_id"] if meta else None
-    # ONE batch aggregate serves the precondition check AND both
-    # watermark writes below (r14): the old shape scanned the batch
-    # three times — a min() job here plus an agg-select inside each of
-    # the journal and _meta writes.
+    # ONE batch aggregate serves the precondition check and the
+    # watermarks the journal and _meta record
     mm = new_docs.agg(
         F.min(F.col(id_col)).cast("long").alias("mn"),
         F.max(F.col(id_col)).cast("long").alias("mx"),
@@ -1183,85 +1094,43 @@ def exact_substring_index_append(spark, path: str, new_docs: DataFrame,
         # then appended — recomputation between the two would race
     )
     n_new = new_rows.count()
-    # journal FIRST (crash detection), then _meta (fail-closed), then
-    # grams, then journal clear. Watermarks were computed by the ONE
-    # batch aggregate above, so both writes are literal single-row
-    # range plans (r14) — no further batch scans; still never
-    # createDataFrame (the ~5 s local-relation trap).
-    spark.range(1).select(
-        F.lit(old_max).cast("long").alias("old_max"),
-        F.lit(n_new).cast("long").alias("n_new"),
-        F.lit(k).alias("k"),
-        F.lit(watermark_max).cast("long").alias("batch_max"),
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{_SUBSTR_JOURNAL}"
+    index_append(
+        spark, path, _SUBSTR_INDEX, new_rows, old_max, n_new,
+        {"max_id": watermark_max, "k": k},
     )
-    spark.range(1).select(
-        F.lit(watermark_max).cast("long").alias("max_id"),
-        F.lit(k).alias("k"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
-    new_rows.write.mode("append").parquet(f"{path}/grams")
-    shutil.rmtree(f"{path}/{_SUBSTR_JOURNAL}")
     return {"appended_hashes": n_new}
 
 
 def exact_substring_compact_recover(path: str) -> str | None:
-    """Self-heal a crashed ``exact_substring_index_compact`` — the
-    shared whole-tree two-rename swap recovery
-    (sources/io.tree_swap_recover, ONE definition with the IVF
-    compaction) on the grams tree."""
-    from torua_spark.sources.io import tree_swap_recover
-
-    return tree_swap_recover(
-        f"{path}/grams",
-        f"{path}/.compact_tmp_grams",
-        f"{path}/.compact_trash_grams",
-    )
+    """Self-heal a crashed ``exact_substring_index_compact``: the
+    shared two-rename swap recovery
+    (``sources/io.index_compact_recover``) on the grams tree."""
+    return index_compact_recover(path, _SUBSTR_INDEX)
 
 
 def exact_substring_index_compact(spark, path: str,
                                   target_mb: int = 128) -> dict:
-    """Small-file COMPACTION for the appended window-hash index (r10,
-    VERDICT r9 #5 — the IVF compaction's twin): every
-    ``exact_substring_index_append`` lands >= one new file, so a daily
-    cadence accumulates files linearly in days and the probe join pays
-    a per-file open. One job rewrites the grams tree into
-    ceil(bytes / target_mb) files range-partitioned on ``h`` (tight
-    parquet min/max stats on the join key), content preserved exactly
-    (pinned in tests), published via the shared two-rename swap with
-    both recover legs run first so a re-run after any crash converges.
-    Same concurrency contract as the IVF compaction: no lock against
-    concurrent probes — a probe racing the two renames fails loudly on
-    the vanished tree and should retry; single-writer deployment."""
+    """Small-file COMPACTION for the appended window-hash index (the
+    IVF compaction's twin): every ``exact_substring_index_append``
+    lands >= one new file, so a daily cadence accumulates files
+    linearly in days and the probe join pays a per-file open. One job
+    rewrites the grams tree into ceil(bytes / target_mb) files
+    range-partitioned on ``h`` (tight parquet min/max stats on the
+    join key), content preserved exactly (pinned in tests). Healing,
+    publication and the single-writer concurrency contract are the
+    shared ``sources/io.index_compact``."""
     import math
-    import pathlib
 
-    from torua_spark.sources.io import tree_swap_publish
+    def rewrite(grams: DataFrame, n_bytes: int) -> DataFrame:
+        target = max(1, math.ceil(n_bytes / (target_mb * 1024 * 1024)))
+        if target == 1:
+            # range partitioning only pays off with >= 2 files (min/max
+            # stats) but costs a boundary-sampling job
+            return grams.coalesce(1)
+        return grams.repartitionByRange(target, "h")
 
     _require_grams_layout(path)
-    exact_substring_compact_recover(path)
-    exact_substring_append_recover(spark, path)
-    grams = f"{path}/grams"
-    tmp = f"{path}/.compact_tmp_grams"
-    trash = f"{path}/.compact_trash_grams"
-    files = list(pathlib.Path(grams).rglob("*.parquet"))
-    n_bytes = sum(f.stat().st_size for f in files)
-    target = max(1, math.ceil(n_bytes / (target_mb * 1024 * 1024)))
-    grams_df = spark.read.parquet(grams)
-    if target == 1:
-        # single-file target: range partitioning adds nothing (the
-        # min/max-stats benefit needs >= 2 files) but pays a separate
-        # range-boundary sampling job — coalesce writes the same
-        # content in one job (r14)
-        out = grams_df.coalesce(1)
-    else:
-        out = grams_df.repartitionByRange(target, "h")
-    out.write.mode("overwrite").parquet(tmp)
-    tree_swap_publish(grams, tmp, trash)
-    return {
-        "files_before": len(files),
-        "files_after": len(list(pathlib.Path(grams).rglob("*.parquet"))),
-    }
+    return index_compact(spark, path, _SUBSTR_INDEX, rewrite)
 
 
 def incremental_exact_substring_dedup(
@@ -1283,13 +1152,8 @@ def incremental_exact_substring_dedup(
     incremental path cannot un-pick a first occurrence the index
     already assigned to the base corpus); pre-meta indexes skip the
     check with the old caller-beware contract."""
-    from torua_spark.sources.io import read_meta_sidecar
-
-    # probes raise while an append journal is pending (the index would
-    # silently miss base-corpus duplicates — the r10 crash-detection
-    # contract shared with the IVF index)
     _require_grams_layout(index_path)
-    _require_no_pending_substr_append(spark, index_path)
+    require_no_pending_append(spark, index_path, _SUBSTR_INDEX)
     wins = _window_hashes(new_docs, k, id_col, text_col)
     # [] ONLY for a missing sidecar (pre-meta index: no validation
     # possible); corrupt/permission-broken sidecars re-raise loudly

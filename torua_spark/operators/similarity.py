@@ -36,6 +36,18 @@ from torua_spark.functions.vectors import cosine, to_double_array
 
 from torua_spark.functions.compat import round4
 from torua_spark.functions.ranking import global_topk
+from torua_spark.sources.io import (
+    PersistedIndex,
+    clear_index_leftovers,
+    heal_index,
+    index_append,
+    index_append_recover,
+    index_compact,
+    index_compact_recover,
+    read_meta_sidecar,
+    read_small_parquet_rows,
+    require_no_pending_append,
+)
 
 
 def _query_vector(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
@@ -1343,24 +1355,14 @@ def ivf_index_write(embeddings: DataFrame, path: str,
     import pathlib
     import shutil
 
-    from torua_spark.sources.io import clear_index_leftovers
-
     cents = kmeans_centroids(embeddings, kmeans_k, iterations)
     cells = assign_cells(embeddings, cents)
-    # rebuild-in-place hygiene (r10 advice): a stale _append_journal
-    # or half-swapped .compact_* tree from a crashed mutation on the
-    # OLD index must not survive into the rebuilt one — probes would
-    # raise on the dead journal, and recovery would compare the NEW
-    # index against the OLD watermark and could truncate it.
-    # ORDERING (r11 review): the clear runs AFTER the long Lloyd
-    # compute above and only together with tearing down the old data
-    # tree — clearing at function entry opened a minutes-wide crash
-    # window where the OLD half-appended index kept serving with its
-    # journal guard deleted (silent truncation, exactly what the
-    # journal exists to prevent). From the rmtree on, every crash
-    # point reads LOUD (missing/partial tree), never silently stale;
-    # a caller needing an ATOMIC rebuild writes to a fresh path and
-    # renames (in-place rebuild is inherently destructive).
+    # the stale-artifact clear runs only together with tearing down the
+    # old data tree, after the long Lloyd compute: clearing earlier
+    # would leave the OLD half-appended index serving without its
+    # journal guard if the compute died. From the rmtree on, every
+    # crash point reads LOUD (missing/partial tree), never silently
+    # stale; an ATOMIC rebuild writes to a fresh path and renames.
     shutil.rmtree(f"{path}/vectors", ignore_errors=True)
     clear_index_leftovers(path)
     (
@@ -1382,158 +1384,37 @@ def ivf_index_write(embeddings: DataFrame, path: str,
     }
 
 
-# Per-append journal marker (r9 advice): _meta advances BEFORE the
-# vectors land (fail-closed against double-indexing), which leaves a
-# crash window where probes silently omit the batch. The journal makes
-# that window DETECTABLE: written before _meta, cleared after the
-# vectors append, so its presence means "an append is in flight or
-# died" — probes raise instead of serving the incomplete union.
-_APPEND_JOURNAL = "_append_journal"
-
-
-def _require_no_pending_append(spark, path: str) -> None:
-    """Probe-side guard: raise loudly when the index has an unfinished
-    append (journal marker present) instead of silently serving an
-    index that omits the half-committed batch. Existence-probe only
-    (ms-cheap Hadoop FS call) — the journal's CONTENT is only needed
-    by recovery."""
-    from torua_spark.sources.io import sidecar_exists
-
-    if sidecar_exists(spark, path, _APPEND_JOURNAL):
-        raise ValueError(
-            f"IVF index at {path} has an unfinished append (journal "
-            f"marker present): probes would silently omit the batch; "
-            f"run ivf_append_recover(spark, path) to heal, then retry"
-        )
+# The IVF index as the shared persisted-index protocol sees it
+# (sources/io.PersistedIndex).
+_IVF_INDEX = PersistedIndex(
+    tree="vectors",
+    partition_by=("cell",),
+    journal_ddl="batch_max long, batch_count long, old_max long",
+    meta_ddl="max_id long",
+    count_col="batch_count",
+    in_batch=lambda old_max: F.col("vec_id") > old_max,
+    rebuild="ivf_index_write",
+    pending_error=(
+        "IVF index at {path} has an unfinished append (journal "
+        "marker present): probes would silently omit the batch; "
+        "run ivf_append_recover(spark, path) to heal, then retry"
+    ),
+)
 
 
 def ivf_append_recover(spark, path: str) -> str | None:
-    """Self-heal a crashed ``ivf_index_append`` from its journal
-    marker. The append protocol is journal -> _meta advance -> vectors
-    append -> journal clear, so a surviving journal pins down the
-    crash point:
-
-    - _meta still at the journal's ``old_max``: the crash landed
-      before the _meta advance; nothing was indexed — drop the marker
-      and the caller re-appends (``rolled_back``).
-    - _meta advanced (or lost mid-overwrite): count the vector rows
-      above ``old_max``. All ``batch_count`` present -> the append
-      completed and only the journal clear was lost (``completed``);
-      none present -> roll _meta back to ``old_max``
-      (``rolled_back``); SOME present (a crash mid-append left a
-      partial multi-file write) -> rewrite the vectors tree without
-      the partial rows via the compact-style two-rename swap, then
-      roll _meta back (``rolled_back_partial``).
-
-    Every outcome converges: after recovery the index equals either
-    the pre-append or the post-append state exactly, never a mix.
-    Returns the action taken (None when no journal exists)."""
-    import shutil
-
-    from torua_spark.sources.io import read_meta_sidecar, sidecar_exists
-
-    if not sidecar_exists(spark, path, _APPEND_JOURNAL):
-        return None
-    j = read_meta_sidecar(spark, path, _APPEND_JOURNAL)
-    if not j:
-        return None
-    old_max = j[0]["old_max"]
-    batch_count = j[0]["batch_count"]
-    jdir = f"{path}/{_APPEND_JOURNAL}"
-    try:
-        meta = read_meta_sidecar(spark, path)
-        meta_max = meta[0]["max_id"] if meta else None
-        meta_corrupt = False
-        # the overwrite is delete-then-write, so a crash between the
-        # two leaves _meta MISSING (read returns []) rather than
-        # corrupt — track it separately so the completed branch below
-        # restores the sidecar in that window too (r10 advice: with
-        # n == batch_count == 0, e.g. a fully-duplicate daily batch,
-        # skipping the rewrite would silently downgrade the index to
-        # the pre-meta caller-beware contract)
-        meta_missing = not meta
-    except Exception:
-        # a crash DURING the _meta overwrite leaves a corrupt (not
-        # missing) sidecar — normally loud, but WITH a journal the
-        # pre-append watermark is recorded there, so recovery can
-        # restore _meta instead of wedging (r10 review)
-        meta_max, meta_corrupt, meta_missing = None, True, False
-    if not meta_corrupt and meta_max == old_max:
-        shutil.rmtree(jdir)  # crash before the _meta advance
-        return "rolled_back"
-    # _meta advanced (== batch_max) or was lost/corrupted
-    # mid-overwrite: the vectors tree decides. Recovery-only full-ish
-    # scan is acceptable — and it is column-pruned to vec_id
-    # (row-group skipping).
-    if old_max is None:
-        if meta_corrupt:
-            # pre-meta index whose FIRST _meta write crashed mid-way:
-            # vectors come after _meta in the protocol, so nothing was
-            # indexed — drop the half-written sidecar and the marker
-            shutil.rmtree(f"{path}/_meta", ignore_errors=True)
-            shutil.rmtree(jdir)
-            return "rolled_back"
-        # pre-meta index with a fully-advanced _meta: no watermark
-        # separates base rows from batch rows, so completion cannot be
-        # decided — refuse to guess
-        raise ValueError(
-            f"cannot heal an in-flight append on the pre-meta index at "
-            f"{path}: no max-id watermark distinguishes base rows from "
-            f"the half-committed batch; rebuild via ivf_index_write"
-        )
-    # heal any mid-swap crash of a PREVIOUS recovery's own partial
-    # rollback BEFORE reading the tree (r10 review: reading first
-    # would raise PATH_NOT_FOUND forever and break the documented
-    # retry-converges contract)
-    ivf_compact_recover(path)
-    vec = spark.read.parquet(f"{path}/vectors")
-    cond = F.col("vec_id") > old_max
-    n = vec.filter(cond).select("vec_id").count()
-    if n == batch_count:
-        if meta_corrupt or meta_missing:
-            # vectors landed but the sidecar is bad or gone (crash
-            # inside the delete-then-write overwrite): re-write _meta
-            # at the batch watermark the journal recorded, completing
-            # the append
-            from torua_spark.sources.local import local_df
-
-            local_df(
-                spark, [(j[0]["batch_max"],)], "max_id long"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
-        shutil.rmtree(jdir)  # append landed; only the clear was lost
-        return "completed"
-    action = "rolled_back"
-    if n > 0:
-        # partial multi-file append: rewrite without the partial rows
-        # (two-rename swap, healed by the ivf_compact_recover above on
-        # a re-crashed retry)
-        from torua_spark.sources.io import tree_swap_publish
-
-        vdir = f"{path}/vectors"
-        tmp = f"{path}/.compact_tmp_vectors"
-        trash = f"{path}/.compact_trash_vectors"
-        (
-            vec.filter(~cond)
-            .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-        )
-        tree_swap_publish(vdir, tmp, trash)
-        action = "rolled_back_partial"
-    # restore _meta to the pre-append watermark (old_max is non-NULL
-    # past the pre-meta raise above)
-    from torua_spark.sources.local import local_df
-
-    local_df(spark, [(old_max,)], "max_id long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/_meta")
-    shutil.rmtree(jdir)
-    return action
+    """Self-heal a crashed ``ivf_index_append`` from its journal: the
+    index ends exactly at its pre- or post-append state. Outcomes and
+    protocol: ``sources/io.PersistedIndex``. Returns the action taken
+    (None when no journal exists)."""
+    return index_append_recover(spark, path, _IVF_INDEX)
 
 
 def ivf_index_append(spark, path: str, new_embeddings: DataFrame) -> dict:
-    """Daily-ingest APPEND into a persisted IVF index (round 9 — the
-    vector twin of ``incremental_exact_substring_dedup``): assign the
-    new vectors under the index's FROZEN codebook (the deployment
-    contract — retrain offline, append online; a retrain is a new
+    """Daily-ingest APPEND into a persisted IVF index (the vector twin
+    of ``incremental_exact_substring_dedup``): assign the new vectors
+    under the index's FROZEN codebook (the deployment contract —
+    retrain offline, append online; a retrain is a new
     ``ivf_index_write``) and append them into their ``cell=``
     directories. Because assignment under a frozen codebook is
     deterministic per vector, the appended index is EXACTLY the index
@@ -1549,40 +1430,16 @@ def ivf_index_append(spark, path: str, new_embeddings: DataFrame) -> dict:
     LOUDLY (a re-ingested id would double-index the vector and skew
     every downstream kNN rank); pre-meta indexes skip the check with
     the old caller-beware contract, but any other sidecar read error
-    raises.
-
-    Crash discipline (r9 review, hardened r10): ``_meta`` is advanced
-    BEFORE the vectors append, so the failure mode is FAIL-CLOSED — a
-    crash between the two writes makes the retry raise the fresh-ids
-    error, never silently double-index. What r9 left undetectable is
-    that BETWEEN the crash and that retry, probes served an index that
-    silently omitted the batch. r10 closes it with a journal marker
-    (journal -> _meta -> vectors -> journal clear): every probe path
-    raises while the marker is present, and ``ivf_append_recover``
-    heals any crash point back to exactly the pre- or post-append
-    state (it runs automatically at the top of every append)."""
-    import shutil
-
-    from torua_spark.sources.io import read_meta_sidecar
-
-    # heal a crashed COMPACTION first (r10 review): with the vectors
-    # tree renamed away mid-swap, parquet append-mode would silently
-    # RECREATE {path}/vectors holding only the batch, and the next
-    # compaction's recover would then drop the trash holding the
-    # entire base corpus — permanent loss. tree_swap_recover rolls the
-    # swap forward/back so the append always sees the full tree.
-    ivf_compact_recover(path)
-    ivf_append_recover(spark, path)
-    from torua_spark.sources.io import read_small_parquet_rows
-
-    # codebook = k metadata rows: driver-side read, no Spark job (r14)
+    raises. Crash safety is the shared journaled append
+    (``sources/io.PersistedIndex``); a crashed compaction or append is
+    healed first, so a retry after any crash converges."""
+    heal_index(spark, path, _IVF_INDEX)
+    # codebook = k metadata rows: driver-side read, no Spark job
     crows = read_small_parquet_rows(spark, f"{path}/centroids")
     meta = read_meta_sidecar(spark, path)
     old_max = meta[0]["max_id"] if meta else None
-    # ONE batch aggregate serves the precondition check AND both
-    # watermark writes below (r14, the exact_substring_index_append
-    # shape): the old path scanned the batch four times — a min()
-    # probe, a count(), and an agg-select inside each sidecar write.
+    # ONE batch aggregate serves the precondition check and the
+    # watermarks the journal and _meta record
     mm = new_embeddings.agg(
         F.min(F.col("vec_id")).cast("long").alias("mn"),
         F.max(F.col("vec_id")).cast("long").alias("mx"),
@@ -1597,33 +1454,14 @@ def ivf_index_append(spark, path: str, new_embeddings: DataFrame) -> dict:
                 f"would double-index the vector and skew every kNN rank "
                 f"(rebuild the index or re-key the batch)"
             )
-    # max over the non-NULLs == the old greatest(max(vec_id), old_max)
-    # semantics (covers an empty batch / pre-meta index)
+    # max over the non-NULLs (covers an empty batch / pre-meta index)
     wm_vals = [v for v in (batch_max, old_max) if v is not None]
     watermark_max = max(wm_vals) if wm_vals else None
     cells = assign_cells(new_embeddings, crows)
-    # journal FIRST (crash detection, see docstring), then _meta
-    # (fail-closed), then vectors, then journal clear. Watermarks were
-    # computed by the ONE batch aggregate above, so both writes are
-    # literal single-row range plans — no further batch scans; still
-    # never createDataFrame (local-relation construction costs seconds
-    # per call in this PySpark build).
-    spark.range(1).select(
-        F.lit(batch_max).cast("long").alias("batch_max"),
-        F.lit(n_new).cast("long").alias("batch_count"),
-        F.lit(old_max).cast("long").alias("old_max"),
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/{_APPEND_JOURNAL}"
+    index_append(
+        spark, path, _IVF_INDEX, new_embeddings.join(cells, "vec_id"),
+        old_max, n_new, {"max_id": watermark_max},
     )
-    spark.range(1).select(
-        F.lit(watermark_max).cast("long").alias("max_id"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_meta")
-    (
-        new_embeddings.join(cells, "vec_id")
-        .write.mode("append").partitionBy("cell")
-        .parquet(f"{path}/vectors")
-    )
-    shutil.rmtree(f"{path}/{_APPEND_JOURNAL}")
     return {"appended": n_new}
 
 
@@ -1647,14 +1485,12 @@ def ivf_index_topk(spark, path: str, query_vec, k: int = 10,
 
     import numpy as np
 
-    _require_no_pending_append(spark, path)
+    require_no_pending_append(spark, path, _IVF_INDEX)
     q = np.asarray(list(query_vec), dtype=np.float64)
     nq = float(np.linalg.norm(q))
 
     def _r4(x: float) -> float:
         return math.floor(x * 10000.0 + 0.5 + 1e-9) / 10000.0
-
-    from torua_spark.sources.io import read_small_parquet_rows
 
     ranked = []
     for r in read_small_parquet_rows(spark, f"{path}/centroids"):
@@ -1888,9 +1724,7 @@ def ivf_index_upsert(spark, path: str, new_embeddings: DataFrame) -> dict:
     # would otherwise be silently recreated partition-by-partition),
     # then refuse a half-committed append — same guards as the append
     ivf_compact_recover(path)
-    _require_no_pending_append(spark, path)
-    from torua_spark.sources.io import read_small_parquet_rows
-
+    require_no_pending_append(spark, path, _IVF_INDEX)
     crows = read_small_parquet_rows(spark, f"{path}/centroids")
     assigned = new_embeddings.join(
         assign_cells(new_embeddings, crows), "vec_id"
@@ -1932,9 +1766,7 @@ def ivf_index_knn_batch(spark, path: str, queries: DataFrame,
     with ``ivf_index_compact`` can catch the moment between the two
     renames and fail on the vanished tree — retry once, compaction's
     swap is two atomic renames and the retry sees the full index."""
-    _require_no_pending_append(spark, path)
-    from torua_spark.sources.io import read_small_parquet_rows
-
+    require_no_pending_append(spark, path, _IVF_INDEX)
     crows = read_small_parquet_rows(spark, f"{path}/centroids")
     probes = probe_cells(queries, crows, nprobe).localCheckpoint()
     probed_cells = sorted(
@@ -2124,17 +1956,10 @@ def decontaminate_embeddings(
 
 def ivf_compact_recover(path: str) -> str | None:
     """Self-heal a crashed ``ivf_index_compact``: the shared
-    whole-tree two-rename swap recovery (sources/io.tree_swap_recover
-    — ONE definition with the ExactSubstr index compaction, r10)
-    specialized to the index's vectors tree. Returns the action taken
-    (None if nothing to heal)."""
-    from torua_spark.sources.io import tree_swap_recover
-
-    return tree_swap_recover(
-        f"{path}/vectors",
-        f"{path}/.compact_tmp_vectors",
-        f"{path}/.compact_trash_vectors",
-    )
+    two-rename swap recovery (``sources/io.index_compact_recover``) on
+    the vectors tree. Returns the action taken (None if nothing to
+    heal)."""
+    return index_compact_recover(path, _IVF_INDEX)
 
 
 def ivf_index_compact(spark, path: str) -> dict:
@@ -2149,38 +1974,8 @@ def ivf_index_compact(spark, path: str) -> dict:
     ``cell=`` directory pruning the probes rely on is untouched (at
     very large per-cell sizes set spark.sql.files.maxRecordsPerFile
     to re-split). Content (rows, values, cells) is preserved exactly
-    — pinned in tests — and publication is the two-rename swap
-    (sources/io._swap_partition discipline): the original bytes
-    survive in trash until the new tree is live, and every crash
-    point is healed by ``ivf_compact_recover`` (runs first, so a
-    re-run after any crash converges).
-
-    Concurrency contract (r9 review): compaction holds NO lock
-    against concurrent probes. Each rename is atomic per path, but a
-    probe that resolved its ``cell=`` file list BETWEEN the two
-    renames reads a vanished tree and fails loudly — it never reads
-    a mixed or partial tree. Single-writer is the documented
-    deployment posture; a probe racing a compaction should simply
-    retry (the probe docstrings carry the same note). An in-flight
-    APPEND, by contrast, is detected and healed here before the
-    rewrite starts — compacting half a batch into the new tree would
-    otherwise bake the partial append in."""
-    import pathlib
-
-    ivf_compact_recover(path)
-    ivf_append_recover(spark, path)
-    from torua_spark.sources.io import tree_swap_publish
-
-    vec = f"{path}/vectors"
-    tmp = f"{path}/.compact_tmp_vectors"
-    trash = f"{path}/.compact_trash_vectors"
-    files_before = len(list(pathlib.Path(vec).rglob("*.parquet")))
-    (
-        spark.read.parquet(vec)
-        .repartition("cell")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(tmp)
+    — pinned in tests. Healing, publication and the single-writer
+    concurrency contract are the shared ``sources/io.index_compact``."""
+    return index_compact(
+        spark, path, _IVF_INDEX, lambda vec, _bytes: vec.repartition("cell")
     )
-    tree_swap_publish(vec, tmp, trash)
-    files_after = len(list(pathlib.Path(vec).rglob("*.parquet")))
-    return {"files_before": files_before, "files_after": files_after}

@@ -1363,34 +1363,34 @@ ORACLE["vector_ann_ivf_learned"] = _ivf_learned_oracle_sql()
 
 
 # Pristine BASE indexes per (application, corpus) for the two
-# lifecycle entries: the base build is a pure function of the corpus
-# — the offline step a deployment amortizes (the streaming_knn memo
-# rationale) — while the lifecycle itself MUTATES the index (append /
-# compact), so each run gets a fresh copytree of the pristine base
-# (megabytes at bench SFs, milliseconds) and runs the full
-# append -> compact -> probe on the copy. First call per session
-# still pays the build; the driver's single correctness run is
-# unchanged.
-_BASE_INDEX_MEMO: dict[tuple, str] = {}
+# lifecycle entries (sources.io.memo_session_tree): the base build is a
+# pure function of the corpus — the offline step a deployment amortizes
+# (the streaming_knn memo rationale) — while the lifecycle itself
+# MUTATES the index (append / compact), so each run gets a fresh
+# copytree of the pristine base (megabytes at bench SFs, milliseconds)
+# and runs the full append -> compact -> probe on the copy. First call
+# per session still pays the build; the driver's single correctness
+# run is unchanged.
+_IVF_BASE_INDEX: dict[tuple[str, str], str] = {}
+_SUBSTR_BASE_INDEX: dict[tuple[str, str], str] = {}
 
 
-def _memoized_base_index(spark, key: tuple, build) -> str:
+def _memoized_base_index(spark, memo: dict, sf_dir: str, build) -> str:
+    """A fresh temp root holding a copy of the memoized base index at
+    ``{root}/idx``; ``build(path)`` writes the base index. The caller
+    removes the root."""
     import shutil
     import tempfile
 
-    from torua_spark.sources.io import evict_stale_app_entries
+    from torua_spark.sources.io import memo_session_tree
 
-    app = spark.sparkContext.applicationId
-    # stored values ARE the mkdtemp roots: root_of=identity
-    evict_stale_app_entries(_BASE_INDEX_MEMO, app, root_of=lambda p: p)
-    full_key = (app, *key)
-    base = _BASE_INDEX_MEMO.get(full_key)
-    if base is None:
-        base = tempfile.mkdtemp(prefix="torua_base_idx_")
+    def build_base(base):
         build(f"{base}/idx")
-        _BASE_INDEX_MEMO[full_key] = base
+        return f"{base}/idx"
+
+    pristine = memo_session_tree(memo, spark, sf_dir, "torua_base_idx_", build_base)
     run_dir = tempfile.mkdtemp(prefix="torua_idx_run_")
-    shutil.copytree(f"{base}/idx", f"{run_dir}/idx")
+    shutil.copytree(pristine, f"{run_dir}/idx")
     return run_dir
 
 
@@ -1413,7 +1413,7 @@ def _q_vector_index_append(spark, sf_dir) -> DataFrame:
     emb = _emb(spark, sf_dir)
     cut = int(emb.count() * 0.8)
     tmp = _memoized_base_index(
-        spark, ("ivf_append", sf_dir),
+        spark, _IVF_BASE_INDEX, sf_dir,
         lambda p: sim.ivf_index_write(emb.filter(F.col("vec_id") < cut), p),
     )
     path = f"{tmp}/idx"
@@ -1958,7 +1958,7 @@ def _q_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the lifecycle MUTATES it via append/compact) — the offline
     # build a deployment amortizes, see _memoized_base_index
     tmp = _memoized_base_index(
-        spark, ("substr", sf_dir),
+        spark, _SUBSTR_BASE_INDEX, sf_dir,
         lambda p: dd.exact_substring_index_write(
             docs.filter(F.col("doc_id") < t1), p, k=10
         ),

@@ -19,7 +19,10 @@ needs real ones. Everything rides Spark's native readers/writers:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from dataclasses import dataclass
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, types as T
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
@@ -149,21 +152,13 @@ def compact_files(spark: SparkSession, path: str, out_path: str,
 # data job): ceil(bytes / target_mb) files, so the local fixture gets
 # 1 file and a 100 TB partition keeps bytes/128MB-way parallelism.
 # Brand-new partitions have no bytes to list; they size from the batch
-# row count at a conservative rows-per-file (overridable for fat rows).
+# row count at a conservative rows-per-file.
 _LAKE_TARGET_FILE_MB = 128
+_LAKE_INSERT_ROWS_PER_FILE = 4_000_000
 # Independent partition rewrites overlap from a small driver thread
 # pool (guide §2.6): each rewrite is one small job + two renames, and
 # FIFO scheduling back-fills the tail of one rewrite with the next.
 _LAKE_REWRITE_THREADS = 4
-
-
-def _lake_conf_int(name: str, default: int) -> int:
-    import os
-
-    try:
-        return max(1, int(os.environ.get(name, str(default))))
-    except ValueError:
-        return default
 
 
 def _dir_parquet_bytes(path: str) -> int:
@@ -177,11 +172,9 @@ def _rewrite_files(existing_bytes: int, n_rows: int | None = None) -> int:
     the live partition exists, row-derived for brand-new partitions."""
     import math
 
-    target_mb = _lake_conf_int("TORUA_LAKE_TARGET_FILE_MB", _LAKE_TARGET_FILE_MB)
     if existing_bytes > 0:
-        return max(1, math.ceil(existing_bytes / (target_mb * 1024 * 1024)))
-    rows_per_file = _lake_conf_int("TORUA_LAKE_INSERT_ROWS_PER_FILE", 4_000_000)
-    return max(1, math.ceil((n_rows or 1) / rows_per_file))
+        return max(1, math.ceil(existing_bytes / (_LAKE_TARGET_FILE_MB * 1024 * 1024)))
+    return max(1, math.ceil((n_rows or 1) / _LAKE_INSERT_ROWS_PER_FILE))
 
 
 def _overlap_partition_jobs(fn, values) -> None:
@@ -196,9 +189,9 @@ def _overlap_partition_jobs(fn, values) -> None:
         return
     from concurrent.futures import ThreadPoolExecutor
 
-    threads = min(_lake_conf_int("TORUA_LAKE_REWRITE_THREADS",
-                                 _LAKE_REWRITE_THREADS), len(values))
-    with ThreadPoolExecutor(max_workers=threads) as pool:
+    with ThreadPoolExecutor(
+        max_workers=min(_LAKE_REWRITE_THREADS, len(values))
+    ) as pool:
         # list(...) propagates the first exception; a partial rewrite
         # is exactly the crash class _recover_swaps already heals.
         list(pool.map(fn, values))
@@ -218,25 +211,6 @@ def _partition_dir(path: str, partition_col: str, value) -> str:
             f"targeted rewrite supports simple values only"
         )
     return f"{path}/{partition_col}={s}"
-
-
-def _swap_partition(part_dir: str, tmp: str, trash: str) -> None:
-    """Publish a rewritten partition with the NARROWEST non-atomic
-    span plain-filesystem parquet allows (VERDICT r6 #6): the new data
-    is already fully written at ``tmp``; the swap is
-    rename(live -> trash), rename(tmp -> live), delete trash. The
-    vulnerable window is two directory renames (pure metadata ops) —
-    not the old rmtree+rename, whose window was a full recursive
-    delete — and the ORIGINAL bytes survive intact in ``trash`` until
-    the new data is live, so every crash point is mechanically
-    recoverable (``_recover_swaps``: roll forward if tmp survived,
-    roll back otherwise)."""
-    import os
-    import shutil
-
-    os.rename(part_dir, trash)
-    os.rename(tmp, part_dir)
-    shutil.rmtree(trash)
 
 
 def _recover_swaps(path: str, partition_col: str) -> list[str]:
@@ -294,8 +268,8 @@ def purge_keys(spark: SparkSession, path: str, keys, key_col: str,
 
     Durability caveat (shared with merge_upsert): plain parquet has no
     transaction log, so the per-partition swap is crash-atomic per
-    PARTITION, not per call. The swap protocol (``_swap_partition``,
-    VERDICT r6 #6) narrows the vulnerable span to two directory
+    PARTITION, not per call. The swap protocol (``tree_swap_publish``)
+    narrows the vulnerable span to two directory
     renames — write tmp -> rename(live -> trash) -> rename(tmp ->
     live) -> delete trash — and keeps the original bytes in ``trash``
     until the new data is live, so every crash point is recoverable:
@@ -352,7 +326,7 @@ def purge_keys(spark: SparkSession, path: str, keys, key_col: str,
         kept.coalesce(_rewrite_files(_dir_parquet_bytes(part_dir))).write.mode(
             "overwrite"
         ).parquet(tmp)
-        _swap_partition(part_dir, tmp, f"{path}/.purge_trash_{partition_col}={pv}")
+        tree_swap_publish(part_dir, tmp, f"{path}/.purge_trash_{partition_col}={pv}")
 
     _overlap_partition_jobs(_rewrite, hit_parts)
     rows_deleted = sum(hits.values())
@@ -471,7 +445,7 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
                 out.coalesce(
                     _rewrite_files(_dir_parquet_bytes(part_dir))
                 ).write.mode("overwrite").parquet(tmp)
-                _swap_partition(
+                tree_swap_publish(
                     part_dir, tmp, f"{path}/.merge_trash_{partition_col}={pv}"
                 )
             else:
@@ -614,7 +588,7 @@ def purge_predicate(spark: SparkSession, path: str, predicate: str,
         )
         tmp = f"{path}/.purge_tmp_{partition_col}={pv}"
         kept.write.mode("overwrite").parquet(tmp)
-        _swap_partition(part_dir, tmp, f"{path}/.purge_trash_{partition_col}={pv}")
+        tree_swap_publish(part_dir, tmp, f"{path}/.purge_trash_{partition_col}={pv}")
     return {
         "partitions_total": len(
             [p for p in pathlib.Path(path).glob(f"{partition_col}=*")]
@@ -682,13 +656,11 @@ def read_meta_sidecar(spark: SparkSession, path: str,
 
 
 def tree_swap_recover(live: str, tmp: str, trash: str) -> str | None:
-    """Self-heal a crashed two-rename tree swap (the _swap_partition
-    contract generalized to whole directory trees — ONE definition
-    shared by the IVF and ExactSubstr index compactions, r10): live
-    present -> the swap completed or never started, drop leftovers;
-    live absent with tmp present -> crash landed between the two
-    renames, roll FORWARD; live absent with only trash -> roll BACK.
-    Returns the action taken (None if nothing to heal)."""
+    """Self-heal a crashed two-rename tree swap (``tree_swap_publish``):
+    live present -> the swap completed or never started, drop
+    leftovers; live absent with tmp present -> crash landed between
+    the two renames, roll FORWARD; live absent with only trash -> roll
+    BACK. Returns the action taken (None if nothing to heal)."""
     import os
     import pathlib
     import shutil
@@ -717,10 +689,13 @@ def tree_swap_recover(live: str, tmp: str, trash: str) -> str | None:
 
 
 def tree_swap_publish(live: str, tmp: str, trash: str) -> None:
-    """Publish a fully-written ``tmp`` tree over ``live`` via the
-    two-rename swap: the original bytes survive in ``trash`` until the
-    new tree is live, and every crash point is healed by
-    ``tree_swap_recover``."""
+    """Publish a fully-written ``tmp`` tree over ``live`` with the
+    narrowest non-atomic span plain-filesystem parquet allows:
+    rename(live -> trash), rename(tmp -> live), delete trash. The
+    window is two directory renames (metadata only), and the original
+    bytes survive in ``trash`` until the new tree is live, so every
+    crash point is recoverable (``tree_swap_recover`` for index trees,
+    ``_recover_swaps`` for lake partitions)."""
     import os
     import shutil
 
@@ -744,18 +719,225 @@ def sidecar_exists(spark: SparkSession, path: str, name: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+# --- persisted-index protocol ------------------------------------------------
+
+_APPEND_JOURNAL = "_append_journal"
+_SWAP_PREFIXES = (".compact_tmp_", ".compact_trash_")
+
+
+@dataclass(frozen=True)
+class PersistedIndex:
+    """One persisted-index family as the shared crash protocol sees it:
+    the IVF index (``vectors`` tree, ``operators/similarity``) and the
+    window-hash index (``grams`` tree, ``operators/dedup``). Both grow
+    by daily append and shrink by compaction, with one protocol:
+
+    - Layout: ``{path}/{tree}`` holds the data; ``{path}/_meta`` is a
+      one-row sidecar whose ``max_id`` is the greatest indexed ingest
+      id (plus family columns such as ``k``); ``{path}/_append_journal``
+      exists only while an append is in flight or died.
+    - Append (``index_append``): journal, then ``_meta``, then data,
+      then clear the journal. ``_meta`` advances before the data, so a
+      crash fails closed: the retry trips the family's fresh-id check
+      instead of double-indexing. The journal makes the window between
+      the two detectable: every probe raises while it exists
+      (``require_no_pending_append``).
+    - Append recovery (``index_append_recover``) reads the crash point
+      off the journal (``old_max``, the batch row count, ``batch_max``
+      and ``_meta``'s family columns). ``_meta`` still at ``old_max``:
+      nothing was indexed, drop the journal (``rolled_back``).
+      Otherwise the data rows ``in_batch(old_max)`` decide: all of the
+      batch present -> ``completed``, re-writing ``_meta`` at
+      ``batch_max`` if it was lost or corrupted mid-overwrite; none ->
+      ``rolled_back``; some (a partial multi-file append) -> the tree
+      is rewritten without them (``rolled_back_partial``). Both
+      roll-backs restore ``_meta`` to ``old_max``. A pre-meta index
+      (``old_max`` NULL) whose first ``_meta`` write was corrupted rolls
+      back; with an advanced ``_meta`` no watermark separates base from
+      batch rows, so recovery raises rather than guess.
+    - Compaction (``index_compact``) and the partial roll-back publish
+      a rewritten tree through ``tree_swap_publish`` under
+      ``.compact_tmp_<tree>`` / ``.compact_trash_<tree>``;
+      ``index_compact_recover`` heals a crash inside that swap.
+    - Appends and compactions start with ``heal_index``: the swap
+      first (with the tree renamed away, append mode would recreate it
+      holding only the batch, and the next heal would drop the trash
+      holding the base), then the append.
+
+    Every outcome converges to exactly the pre- or post-append index.
+    Single writer: no lock guards a probe racing a compaction's two
+    renames; such a probe fails loudly on the vanished tree and
+    retries. The family supplies data only, in the fields below."""
+
+    tree: str  # data subtree under the index root
+    partition_by: tuple  # hive partition columns of the data tree
+    journal_ddl: str  # journal schema, in on-disk column order
+    meta_ddl: str  # _meta schema, max_id first
+    count_col: str  # journal column holding the batch's row count
+    in_batch: Callable[[int], Column]  # old_max -> marks the batch's rows
+    rebuild: str  # the full-rebuild function the pre-meta error names
+    pending_error: str  # probe-guard message; {path} is filled in
+
+
+def _ddl_names(ddl: str) -> list[str]:
+    return [c.split()[0] for c in ddl.split(",")]
+
+
+def _write_row(spark: SparkSession, dest: str, ddl: str, row: dict) -> None:
+    """Overwrite ``dest`` with the one-row sidecar ``row`` (keys beyond
+    ``ddl``'s columns are ignored)."""
+    from torua_spark.sources.local import local_df
+
+    local_df(spark, [tuple(row[c] for c in _ddl_names(ddl))], ddl).coalesce(
+        1
+    ).write.mode("overwrite").parquet(dest)
+
+
+def _write_tree(df: DataFrame, dest: str, index: PersistedIndex,
+                mode: str = "overwrite") -> None:
+    df.write.mode(mode).partitionBy(*index.partition_by).parquet(dest)
+
+
+def _swap_dirs(path: str, tree: str) -> tuple[str, str, str]:
+    """(live, tmp, trash) of an index data tree's two-rename swap."""
+    return (f"{path}/{tree}", *(f"{path}/{p}{tree}" for p in _SWAP_PREFIXES))
+
+
+def _publish_tree(path: str, index: PersistedIndex, df: DataFrame) -> None:
+    live, tmp, trash = _swap_dirs(path, index.tree)
+    _write_tree(df, tmp, index)
+    tree_swap_publish(live, tmp, trash)
+
+
+def require_no_pending_append(spark: SparkSession, path: str,
+                              index: PersistedIndex) -> None:
+    """Probe-side guard: raise while an append is unfinished instead
+    of serving an index that omits the half-committed batch. Existence
+    probe only; the journal's content is for recovery."""
+    if sidecar_exists(spark, path, _APPEND_JOURNAL):
+        raise ValueError(index.pending_error.format(path=path))
+
+
+def index_append(spark: SparkSession, path: str, index: PersistedIndex,
+                 rows: DataFrame, old_max, n_new: int, meta: dict) -> None:
+    """Append ``rows`` (``n_new`` of them, every one ``in_batch`` past
+    ``old_max``) to the data tree and advance ``_meta`` to ``meta``
+    under the journaled protocol (``PersistedIndex``)."""
+    import shutil
+
+    journal = f"{path}/{_APPEND_JOURNAL}"
+    _write_row(spark, journal, index.journal_ddl, {
+        **meta, "old_max": old_max, index.count_col: n_new,
+        "batch_max": meta["max_id"],
+    })
+    _write_row(spark, f"{path}/_meta", index.meta_ddl, meta)
+    _write_tree(rows, f"{path}/{index.tree}", index, "append")
+    shutil.rmtree(journal)
+
+
+def index_append_recover(spark: SparkSession, path: str,
+                         index: PersistedIndex) -> str | None:
+    """Heal a crashed ``index_append`` from its journal (``PersistedIndex``
+    lists the outcomes). Returns the action taken, None when no
+    journal exists."""
+    import shutil
+
+    if not sidecar_exists(spark, path, _APPEND_JOURNAL):
+        return None
+    rows = read_meta_sidecar(spark, path, _APPEND_JOURNAL)
+    if not rows:
+        return None
+    j = rows[0]
+    old_max = j["old_max"]
+    journal = f"{path}/{_APPEND_JOURNAL}"
+
+    def restore_meta(max_id) -> None:
+        row = {c: j[c] for c in _ddl_names(index.meta_ddl)[1:]}
+        _write_row(spark, f"{path}/_meta", index.meta_ddl,
+                   {**row, "max_id": max_id})
+
+    try:
+        # [] when the delete-then-write overwrite lost it
+        meta = read_meta_sidecar(spark, path)
+    except Exception:
+        # corrupt: the crash landed inside the _meta overwrite, and the
+        # journal holds the watermarks to restore it from
+        meta = None
+    if meta is not None and (meta[0]["max_id"] if meta else None) == old_max:
+        shutil.rmtree(journal)  # crash before the _meta advance
+        return "rolled_back"
+    if old_max is None:
+        if meta is None:
+            # the first-ever _meta write crashed mid-way; data comes
+            # after _meta, so nothing was appended
+            shutil.rmtree(f"{path}/_meta", ignore_errors=True)
+            shutil.rmtree(journal)
+            return "rolled_back"
+        raise ValueError(
+            f"cannot heal an in-flight append on the pre-meta index at "
+            f"{path}: no max-id watermark distinguishes base rows from "
+            f"the half-committed batch; rebuild via {index.rebuild}"
+        )
+    # a previous recovery's own partial roll-back may have crashed
+    # mid-swap; reading the tree first would fail on it forever
+    index_compact_recover(path, index)
+    data = spark.read.parquet(f"{path}/{index.tree}")
+    in_batch = index.in_batch(old_max)
+    n = data.filter(in_batch).count()
+    if n == j[index.count_col]:
+        if not meta:
+            restore_meta(j["batch_max"])
+        shutil.rmtree(journal)  # append landed; only the clear was lost
+        return "completed"
+    action = "rolled_back"
+    if n > 0:
+        _publish_tree(path, index, data.filter(~in_batch))
+        action = "rolled_back_partial"
+    restore_meta(old_max)
+    shutil.rmtree(journal)
+    return action
+
+
+def index_compact_recover(path: str, index: PersistedIndex) -> str | None:
+    """Heal a crashed swap of the index's data tree
+    (``tree_swap_recover``)."""
+    return tree_swap_recover(*_swap_dirs(path, index.tree))
+
+
+def heal_index(spark: SparkSession, path: str, index: PersistedIndex) -> None:
+    """Heal a crashed swap, then a crashed append (``PersistedIndex``)."""
+    index_compact_recover(path, index)
+    index_append_recover(spark, path, index)
+
+
+def index_compact(spark: SparkSession, path: str, index: PersistedIndex,
+                  rewrite: Callable[[DataFrame, int], DataFrame]) -> dict:
+    """Small-file compaction of the index's data tree: heal, rewrite
+    the whole tree as ``rewrite(tree, tree_bytes)`` into tmp, publish
+    through the two-rename swap. Content is preserved exactly."""
+    import pathlib
+
+    heal_index(spark, path, index)
+    live = f"{path}/{index.tree}"
+    files = list(pathlib.Path(live).rglob("*.parquet"))
+    n_bytes = sum(f.stat().st_size for f in files)
+    _publish_tree(path, index, rewrite(spark.read.parquet(live), n_bytes))
+    return {
+        "files_before": len(files),
+        "files_after": len(list(pathlib.Path(live).rglob("*.parquet"))),
+    }
+
+
 def clear_index_leftovers(path: str) -> list[str]:
     """Drop every stale crash artifact under an index root before a
-    full rebuild publishes: a leftover ``_append_journal`` from a
-    crashed append, plus any ``.compact_tmp_*`` / ``.compact_trash_*``
-    trees from a crashed compaction/recovery swap. Without this, a
-    rebuild-in-place after a crashed append yields an index whose
-    probes still raise on the OLD journal — and running the recover
-    then compares the NEW index against the stale journal's old_max
-    watermark, which can classify it 'partial' and silently truncate
-    the freshly rebuilt data (r10 advice). Called by both index
-    families' ``*_index_write``. Returns the removed entries (names
-    relative to ``path``) for the caller's report."""
+    full rebuild publishes: a leftover append journal, plus any
+    half-swapped compaction trees. Without this, a rebuild-in-place
+    after a crashed append yields an index whose probes still raise on
+    the OLD journal — and running the recover then compares the NEW
+    index against the stale journal's old_max watermark, which can
+    classify it 'partial' and silently truncate the freshly rebuilt
+    data. Called by both index families' ``*_index_write``. Returns
+    the removed entries (names relative to ``path``)."""
     import pathlib
     import shutil
 
@@ -764,31 +946,10 @@ def clear_index_leftovers(path: str) -> list[str]:
     if not root.is_dir():
         return removed
     for entry in root.iterdir():
-        if entry.name == "_append_journal" or entry.name.startswith(
-            (".compact_tmp_", ".compact_trash_")
-        ):
+        if entry.name == _APPEND_JOURNAL or entry.name.startswith(_SWAP_PREFIXES):
             shutil.rmtree(entry, ignore_errors=True)
             removed.append(entry.name)
     return removed
-
-
-def evict_stale_app_entries(memo: dict, app: str, root_of=None) -> None:
-    """Sweep an (applicationId, ...)-keyed path memo: entries
-    belonging to another (restarted/dead) application are dropped and
-    their temp trees removed, so a long-lived process restarting its
-    SparkContext does not accumulate one orphaned index/fixture tree
-    per old application. ``root_of`` maps a stored path to the temp
-    root to delete (default: its parent directory — the mkdtemp root
-    the path sits inside)."""
-    import os
-    import shutil
-
-    for k in [k for k in memo if k[0] != app]:
-        p = memo.pop(k)
-        if isinstance(p, tuple):  # (path, companion) entries
-            p = p[0]
-        root = root_of(p) if root_of is not None else os.path.dirname(p)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def memo_session_tree(memo: dict, spark: SparkSession, sf_dir: str,
@@ -796,14 +957,22 @@ def memo_session_tree(memo: dict, spark: SparkSession, sf_dir: str,
     """The ``memo`` entry for (this application, ``sf_dir``), built on
     first use: ``build(base)`` writes under a fresh temp root ``base``
     and returns a path directly inside it, or a ``(path, companion)``
-    tuple. The root lives until the process exits or eviction sees the
-    application restarted, whichever comes first."""
+    tuple. The root lives until the process exits or until a call sees
+    that the application restarted, whichever comes first: entries of
+    another application are dropped with their trees, so a long-lived
+    process restarting its SparkContext does not accumulate one tree
+    per old application."""
     import atexit
+    import os
     import shutil
     import tempfile
 
     app = spark.sparkContext.applicationId
-    evict_stale_app_entries(memo, app)
+    for k in [k for k in memo if k[0] != app]:
+        p = memo.pop(k)
+        if isinstance(p, tuple):
+            p = p[0]
+        shutil.rmtree(os.path.dirname(p), ignore_errors=True)
     key = (app, sf_dir)
     if key not in memo:
         base = tempfile.mkdtemp(prefix=prefix)
