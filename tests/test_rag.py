@@ -2355,20 +2355,52 @@ def test_legacy_root_layout_raises_informatively(spark, sf_dir, tmp_path):
             op()
 
 
-def test_image_plant_offset_guard_raises_on_collision(spark):
-    """r10 advice (low): a corpus whose doc_id reaches the plant
-    offset (10M) would silently collide with planted rows — the media
-    builder now carries a row-level loud guard."""
-    import pytest as _pytest
+_MEDIA_BUILDERS = [
+    "image_media_with_plants",
+    "audio_media_with_plants",
+    "audio_spectral_media_with_plants",
+    "audio_cross_format_media",
+    "video_media_with_plants",
+    "image_cross_format_media",
+    "image_jpeg_media",
+]
 
-    from torua_spark.queries.rag_q import _IMG_ORIG_OFFSET
-    from torua_spark.queries import rag_q
+
+@pytest.mark.parametrize("builder", _MEDIA_BUILDERS)
+def test_plant_offset_guard_raises_on_collision(spark, builder):
+    """A corpus whose doc_id reaches the plant-offset spacing (10M)
+    would silently collide with planted rows — every media builder
+    carries a row-level loud guard."""
     from torua_spark.sources.local import local_df
 
     docs = local_df(
         spark,
-        [(_IMG_ORIG_OFFSET + 1, "colliding doc text", "web")],
+        [(rag_q._PLANT_SPACING, "colliding doc text", "web")],
         "doc_id long, text string, source string",
     )
-    with _pytest.raises(Exception, match="collide"):
-        rag_q.image_media_with_plants(docs).collect()
+    with pytest.raises(Exception, match="collide"):
+        getattr(rag_q, builder)(docs).collect()
+
+
+def test_media_builders_render_plants_in_one_python_stage(spark):
+    """Every media builder renders all its plant tiers in ONE
+    mapInPandas (one Python worker wave, not one per tier). Plan-only:
+    building the optimized plans launches no Spark job."""
+    from torua_spark.sources.local import local_df
+
+    docs = local_df(
+        spark, [(0, "a doc", "web")],
+        "doc_id long, text string, source string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("plant_plans", "plan-only")
+    try:
+        for builder in _MEDIA_BUILDERS:
+            qe = getattr(rag_q, builder)(docs)._jdf.queryExecution()
+            plan = qe.optimizedPlan().toString()
+            assert plan.count("MapInPandas") == 1, (builder, plan)
+        assert sc.statusTracker().getJobIdsForGroup("plant_plans") == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)

@@ -102,45 +102,24 @@ def test_frame_sample_plumbing(spark, sf_dir):
     assert got == expect
 
 
-def test_decode_uses_real_codec_when_importable(monkeypatch):
-    """VERDICT r3 #5: _decode_batch attempt-imports PIL inside the
-    worker and uses it per-payload. No PIL in this image, so pin the
-    contract with a stub PIL module: payloads the stub decodes emit
-    the codec's geometry, payloads it rejects fall back to the
-    deterministic fake — same schema either way."""
+def test_decode_uses_header_codec_then_fake():
+    """_decode_batch has two tiers per payload: a payload the header
+    codecs decode emits its real geometry, one they reject falls back
+    to the deterministic md5 fake — same schema either way."""
     import hashlib
-    import sys
-    import types
 
     import pandas as pd
 
     from torua_spark.operators import multimodal
-
-    class _Img:
-        width, height, mode = 320, 200, "L"
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    def _open(buf):
-        if buf.read(4) != b"IMG!":
-            raise ValueError("cannot identify image file")
-        return _Img()
-
-    pil = types.ModuleType("PIL")
-    pil.Image = types.SimpleNamespace(open=_open)
-    monkeypatch.setitem(sys.modules, "PIL", pil)
-    monkeypatch.setitem(sys.modules, "PIL.Image", pil.Image)
+    from torua_spark.operators.codecs import encode_pgm
 
     batch = pd.DataFrame(
-        {"doc_id": [1, 2], "payload": [b"IMG!....", b"not-an-image"]}
+        {"doc_id": [1, 2],
+         "payload": [encode_pgm(7, 3, bytes(21)), b"not-an-image"]}
     )
     (out,) = list(multimodal._decode_batch([batch]))
     real, fake = out.iloc[0], out.iloc[1]
-    assert (real["width"], real["height"], real["mode"]) == (320, 200, "L")
+    assert (real["width"], real["height"], real["mode"]) == (7, 3, "L")
     x = int(hashlib.md5(b"not-an-image").hexdigest()[:8], 16)
     assert (fake["width"], fake["height"], fake["mode"]) == (
         1 + (x % 640), 1 + ((x // 640) % 480), "RGB",

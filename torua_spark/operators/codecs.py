@@ -1,9 +1,8 @@
 """Pure-Python minimal image codecs (VERDICT r5 #6 — B8 codec proof).
 
-The multimodal decode path attempt-imports PIL first; this module is
-the dependency-free middle tier between "full codec" and "documented
-deterministic fake": real header parsers for the formats whose
-structure is simple enough to decode with stdlib ``struct`` —
+The multimodal decode path's real tier, ahead of its "documented
+deterministic fake": dependency-free header parsers for the formats
+whose structure is simple enough to decode with stdlib ``struct`` —
 
 - PNG  (IHDR: width/height/color-type)
 - BMP  (BITMAPINFOHEADER: width/|height|/bpp)
@@ -43,8 +42,7 @@ _PNM_HEADER = re.compile(
 
 def decode_header(b: bytes):
     """(width, height, mode) for a recognized payload, else None.
-    Mode strings follow the PIL convention (RGB/RGBA/L/P/LA) so the
-    PIL path and this path emit interchangeable metadata."""
+    Mode strings follow the PIL naming convention (RGB/RGBA/L/P/LA)."""
     if len(b) < 16:
         return None
     # PNG: 8-byte signature, then the IHDR chunk (must be first).
@@ -897,8 +895,7 @@ def encode_bmp(w: int, h: int, gray: bytes) -> bytes:
 # plane as grayscale — exactly what the dHash engine consumes; chroma
 # components are entropy-decoded (the interleaved bitstream demands
 # it) but not reconstructed. Progressive/arithmetic frames return
-# None (the PIL tier handles them in a full deployment; the fake tier
-# otherwise — degrade, never wrong). The fixture-side encoder writes
+# None (the fake tier takes them — degrade, never wrong). The fixture-side encoder writes
 # baseline JPEGs with an all-ones quant table (near-lossless: only
 # FDCT/IDCT float rounding, measured max error 1/255), optionally
 # 3-component / 4:2:0-subsampled / restart-marked so every decoder

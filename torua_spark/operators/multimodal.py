@@ -2,19 +2,17 @@
 binary columns with typed metadata; reference B8 multi-modal RAG,
 README.md:209-212 — docs only, no code).
 
-The decode step attempt-imports a real codec (PIL) inside the Arrow
-worker and uses it for any payload it can actually decode; payloads
-that aren't decodable images — and every payload in a codec-less
-container like this one — fall back to a deterministic fake
-(md5-derived pseudo-metadata) clearly marked below. Everything around
-it — the binary column schema, Arrow-batched ``mapInPandas`` operator
-shape, per-batch iteration, and partitioning behavior — is the real
-100 TB design:
+The decode step has two tiers per payload: the dependency-free header
+codecs (operators/codecs.py) for payloads that are real images, and a
+deterministic fake (md5-derived pseudo-metadata) clearly marked below
+for everything else. Everything around it — the binary column schema,
+Arrow-batched ``mapInPandas`` operator shape, per-batch iteration, and
+partitioning behavior — is the real 100 TB design:
 
 - payloads travel as parquet ``binary`` columns (never strings)
 - feature extraction is ``mapInPandas`` so each task processes Arrow
   record batches without per-row Python overhead; at scale the same
-  UDF body calls a real codec (PIL/ffmpeg) per batch
+  UDF body calls a fuller codec (e.g. ffmpeg) per batch
 - outputs are narrow typed columns so downstream joins/apps never
   re-read the blob
 """
@@ -45,41 +43,24 @@ def to_media_table(documents: DataFrame) -> DataFrame:
     )
 
 
-def _try_pil():
-    """Attempt-import the real image codec INSIDE the Arrow worker
-    (executors may or may not carry PIL; the import must happen where
-    the batch is decoded, not on the driver). Returns the Image module
-    or None."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-
-        return Image
-    except Exception:
-        return None
-
-
 def _decode_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Decode: REAL codec where possible, deterministic fake otherwise
-    (VERDICT r3 #5, r5 #6). Three tiers per payload:
+    """Decode: REAL codec where possible, deterministic fake otherwise.
+    Two tiers per payload:
 
-    1. PIL (`Image.open`) when the library imports in the worker —
-       the full-codec production path;
-    2. the dependency-free header codecs (operators/codecs.py:
-       PNG/BMP/PPM/PGM/JPEG) — REAL decode of real bytes, and the
-       tier that executes in this codec-less container (pinned by
-       tests/test_multimodal_codec.py, so B8's real-decode branch is
-       proven, not aspirational);
-    3. the md5-derived pseudo-metadata fake (documented) for payloads
+    1. the dependency-free header codecs (operators/codecs.py:
+       PNG/BMP/PPM/PGM/JPEG/GIF) — REAL decode of real bytes (pinned
+       by tests/test_multimodal_codec.py, so B8's real-decode branch
+       is proven, not aspirational);
+    2. the md5-derived pseudo-metadata fake (documented) for payloads
        that are not images at all — keeps text-derived corpora (the
        declared multimodal_pipeline query) deterministic and DuckDB-
        reproducible.
 
     The fallback is per-item, so a mixed corpus decodes what it can;
     the operator contract (Arrow batches in, typed features out) is
-    identical on every path."""
+    identical on both paths."""
     from torua_spark.operators.codecs import decode_header
 
-    Image = _try_pil()
     for pdf in batches:
         n_bytes, digests, widths, heights, modes = [], [], [], [], []
         for p in pdf["payload"]:
@@ -87,31 +68,14 @@ def _decode_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             d = hashlib.md5(b).hexdigest()
             n_bytes.append(len(b))
             digests.append(d)
-            decoded = False
-            if Image is not None:
-                import io  # noqa: PLC0415
-
-                try:
-                    with Image.open(io.BytesIO(b)) as im:
-                        widths.append(int(im.width))
-                        heights.append(int(im.height))
-                        modes.append(str(im.mode))
-                        decoded = True
-                except Exception:
-                    decoded = False
-            if not decoded:
-                hdr = decode_header(b)
-                if hdr is not None:
-                    widths.append(hdr[0])
-                    heights.append(hdr[1])
-                    modes.append(hdr[2])
-                    decoded = True
-            if not decoded:
+            hdr = decode_header(b)
+            if hdr is None:
                 # DETERMINISTIC FAKE (documented): md5-derived geometry.
                 x = int(d[:8], 16)
-                widths.append(1 + (x % 640))
-                heights.append(1 + ((x // 640) % 480))
-                modes.append("RGB")
+                hdr = (1 + (x % 640), 1 + ((x // 640) % 480), "RGB")
+            widths.append(hdr[0])
+            heights.append(hdr[1])
+            modes.append(hdr[2])
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"],
@@ -168,7 +132,7 @@ def _resample(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     executes genuinely in this container; pinned end-to-end in
     tests/test_multimodal_codec.py), deterministic fake pixels (md5
     keystream tiled to min(1 KiB, w*h*3) bytes) for everything else.
-    A full deployment adds PIL for the remaining formats; the
+    A full deployment adds a codec for the remaining formats; the
     operator contract — Arrow batches of (payload, target geometry)
     in, binary pixel column out — is identical on every path."""
     from torua_spark.operators.codecs import (
@@ -396,87 +360,64 @@ def _dhash_bands_from_gray(gray: bytes, w: int, h: int) -> list[int]:
     ]
 
 
-def _dhash_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """REAL perceptual hash where the payload has a real pixel path
-    (binary PPM/PGM via codecs; PNG via the full zlib+unfilter decode
-    and GIF via the full LZW decode — both genuinely public compressed
-    formats, r13; JPEG via the full baseline-DCT luma decode — r14,
-    the last README-format hole; any PIL-decodable format when PIL is
-    present — PIL only supplies grayscale pixel bytes, the hash engine
-    is always _dhash_bands_from_gray so the hash is CODEC-INDEPENDENT:
-    the same pixels in different containers collide, which is the
-    point), md5-derived DETERMINISTIC FAKE otherwise (documented, the
-    audio probe's tier contract) — band j = hex[4j:4j+4] of
-    md5(payload). A multi-frame GIF hashes its FIRST frame here (the
-    image-tier denomination; the video tier hashes every frame)."""
+def _ppm_gray(b: bytes):
+    """(w, h, gray) of a binary PPM, gray = the mean of its RGB."""
     import numpy as np
 
+    from torua_spark.operators.codecs import decode_ppm
+
+    ppm = decode_ppm(b)
+    if ppm is None:
+        return None
+    w, h, px = ppm
+    rgb = np.frombuffer(px, dtype=np.uint8).reshape(-1, 3)
+    return w, h, (rgb.astype(np.uint16).sum(axis=1) // 3).astype(
+        np.uint8
+    ).tobytes()
+
+
+def _gif_first_frame(b: bytes):
+    """(w, h, gray) of a GIF's FIRST frame."""
+    from torua_spark.operators.codecs import decode_gif_frames
+
+    frames = decode_gif_frames(b)
+    return None if frames is None else frames[0][1:]
+
+
+def _dhash_batch(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """REAL perceptual hash where the payload has a real pixel path —
+    binary PPM/PGM, PNG (full zlib+unfilter decode), BMP, GIF (full
+    LZW decode) and baseline JPEG (full DCT luma decode), tried in that
+    order; every decoder only supplies grayscale pixel bytes and the
+    hash engine is always _dhash_bands_from_gray, so the hash is
+    CODEC-INDEPENDENT: the same pixels in different containers
+    collide, which is the point. md5-derived DETERMINISTIC FAKE
+    otherwise (``_md5_fake_bands``, the audio tiers' contract). A
+    multi-frame GIF hashes its FIRST frame here (the image-tier
+    denomination; the video tier hashes every frame)."""
     from torua_spark.operators.codecs import (
         decode_bmp,
-        decode_gif_frames,
         decode_jpeg_gray,
         decode_pgm,
         decode_png,
-        decode_ppm,
     )
 
-    Image = _try_pil()
+    decoders = (_ppm_gray, decode_pgm, decode_png, decode_bmp,
+                _gif_first_frame, decode_jpeg_gray)
     for pdf in batches:
         rows = {"doc_id": pdf["doc_id"], "b0": [], "b1": [], "b2": [],
                 "b3": [], "is_real": []}
         for p in pdf["payload"]:
             b = bytes(p) if p is not None else b""
-            bands = None
-            ppm = decode_ppm(b)
-            if ppm is not None:
-                w, h, px = ppm
-                rgb = np.frombuffer(px, dtype=np.uint8).reshape(-1, 3)
-                gray = (rgb.astype(np.uint16).sum(axis=1) // 3).astype(
-                    np.uint8
-                ).tobytes()
-                bands = _dhash_bands_from_gray(gray, w, h)
+            for decode in decoders:
+                decoded = decode(b)
+                if decoded is not None:
+                    w, h, gray = decoded
+                    bands = _dhash_bands_from_gray(gray, w, h)
+                    rows["is_real"].append(True)
+                    break
             else:
-                pgm = decode_pgm(b)
-                png = decode_png(b) if pgm is None else None
-                bmp = (decode_bmp(b)
-                       if pgm is None and png is None else None)
-                gif = (decode_gif_frames(b)
-                       if pgm is None and png is None and bmp is None
-                       else None)
-                jpg = (decode_jpeg_gray(b)
-                       if pgm is None and png is None and bmp is None
-                       and gif is None else None)
-                if pgm is not None:
-                    w, h, px = pgm
-                    bands = _dhash_bands_from_gray(px, w, h)
-                elif png is not None:
-                    w, h, gray = png
-                    bands = _dhash_bands_from_gray(gray, w, h)
-                elif bmp is not None:
-                    w, h, gray = bmp
-                    bands = _dhash_bands_from_gray(gray, w, h)
-                elif gif is not None:
-                    _idx, w, h, gray = gif[0]
-                    bands = _dhash_bands_from_gray(gray, w, h)
-                elif jpg is not None:
-                    w, h, gray = jpg
-                    bands = _dhash_bands_from_gray(gray, w, h)
-                elif Image is not None:
-                    try:
-                        import io
-
-                        img = Image.open(io.BytesIO(b)).convert("L")
-                        bands = _dhash_bands_from_gray(
-                            img.tobytes(), img.width, img.height
-                        )
-                    except Exception:
-                        bands = None
-            if bands is not None:
-                rows["is_real"].append(True)
-            else:
-                d = hashlib.md5(b).hexdigest()
-                bands = [int(d[4 * j: 4 * j + 4], 16)
-                         for j in range(DHASH_BANDS)]
+                bands = _md5_fake_bands(b)
                 rows["is_real"].append(False)
             for j in range(DHASH_BANDS):
                 rows[f"b{j}"].append(bands[j])

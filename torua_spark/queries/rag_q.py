@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from torua_spark.functions.compat import round4_sql
+from torua_spark.operators import codecs
 from torua_spark.operators import dedup as dd
 from torua_spark.operators import graphrag as gr
 from torua_spark.operators import sampling as smp
@@ -1993,21 +1994,25 @@ ORACLE["dedup_incremental_substring"] = (
 )
 
 
-# --- image perceptual-hash near-dup (r10, VERDICT r9 #1) -------------------
+# --- planted media: the fixture shape of every B8 media-dedup entry ---------
 #
-# The corpus is a text table, so every ORIGINAL payload takes the
-# documented md5-derived fake tier (the audio-probe precedent: the
-# banded Hamming machinery is driver-proven on real 16-bit bands, the
-# REAL pixel tier is pinned on fixtures in tests). To also
-# driver-prove the REAL tier, the query PLANTS a deterministic 9x8
-# binary PGM per 20th doc (pixels = the md5 chain of its text — both
-# engines can derive them) plus a one-pixel "re-encode" variant, so
-# the result carries real decoded-pixel near-dup pairs (dist 0/1)
-# whose dHash the oracle reproduces arithmetically. 9x8 is the dHash
-# geometry itself, making resize a no-op the oracle doesn't model.
-_IMG_PLANT_EVERY = 20
-_IMG_ORIG_OFFSET = 10_000_000
-_IMG_VAR_OFFSET = 20_000_000
+# The corpus is a text table, so every corpus payload takes the
+# documented md5-derived fake tier. To also prove the REAL
+# decode tiers, each media entry PLANTS deterministic real-codec
+# payloads per _PLANT_EVERY-th doc whose samples are the md5 chain of
+# the doc's text (both engines can derive them), so the result carries
+# real decoded-content near-dup pairs the oracle reproduces
+# arithmetically. One builder, `_media_with_plants`, makes every such
+# relation; each family passes only its tier table.
+#
+# All planted tiers across the entries share one offset SPACING: tier
+# offsets are distinct multiples of _PLANT_SPACING, and corpus ids are
+# guarded below it. Guarding at an entry's first offset instead would
+# let a corpus id in [spacing, first_offset) alias one tier's plants
+# into another's (e.g. 30M + 15M == 40M + 5M), silently merging
+# distinct payloads.
+_PLANT_SPACING = 10_000_000
+_PLANT_EVERY = 20
 
 
 def _md5_chain(t, depth: int):
@@ -2020,11 +2025,6 @@ def _md5_chain(t, depth: int):
     return F.concat(*ms)
 
 
-def _md5_chain5(t):
-    """160 hex chars (80 bytes) — the planted image's pixel source."""
-    return _md5_chain(t, 5)
-
-
 def _md5_chain_sql(depth: int) -> str:
     """The DuckDB twin of ``_md5_chain``."""
     chain = "md5(t)"
@@ -2035,117 +2035,109 @@ def _md5_chain_sql(depth: int) -> str:
     return " || ".join(parts)
 
 
-def _fanout_gens(*gens):
-    """Render SEVERAL plant tiers in ONE mapInPandas stream (r14,
-    guide §4): each Arrow batch of seeds is handed to every tier's
-    generator, so the plants cost one Python stage (one worker wave)
-    instead of one stage per tier — measured ~0.5-1 s of pure
-    JVM<->Python round-trip overhead per extra stream at sf0.1. Row
-    content is identical to the per-tier union it replaces (tiers
-    write disjoint doc_id offsets; union order is immaterial to every
-    consumer)."""
-    def gen(batches):
-        for pdf in batches:
-            for g in gens:
-                yield from g(iter([pdf]))
+def _media_with_plants(docs: DataFrame, depth: int, tiers) -> DataFrame:
+    """(doc_id, payload) media relation of a B8 media-dedup entry: the
+    corpus payloads (md5 fake tier) plus planted real-codec payloads.
 
-    return gen
+    The plant contract:
 
-
-def _plants_union(media: DataFrame, plants: DataFrame) -> DataFrame:
-    """Union the corpus media with the planted tiers WITHOUT doubling
-    the partition count downstream Python stages pay per-task
-    overhead for (r14, guide §2.4/§6): coalesce (narrow, no shuffle)
-    back to the larger of the corpus partitioning and the session
-    parallelism. Locally that turns corpus(32)+plants(32) -> 32 (one
-    worker wave for the fingerprint stage instead of two+); at
-    production scale the corpus scan dominates the max() and the
-    plants (corpus/20 rows) merge into corpus-sized partitions."""
-    u = media.unionByName(plants)
-    # .rdd here is PLAN METADATA only (the spread_small_scan
-    # precedent): partition count without moving rows through Python.
-    p = max(
-        media.rdd.getNumPartitions(),
-        media.sparkSession.sparkContext.defaultParallelism,
-    )
-    return u.coalesce(p)
-
-
-def _render_pgm_gen(perturb: bool, offset: int):
-    """(doc_id, hx) Arrow batches -> (doc_id + offset, 9x8 binary PGM
-    whose pixels are the 72 leading md5-chain bytes); the variant tier
-    sets pixel 0 := pixel 1 — the one-pixel re-encode perturbation
-    that flips at most dHash bit 0."""
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for h in pdf["hx"]:
-                px = bytearray.fromhex(h)[:72]
-                if perturb:
-                    px[0] = px[1]
-                payloads.append(b"P5\n9 8\n255\n" + bytes(px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"] + offset, "payload": payloads}
-            )
-
-    return gen
-
-
-def image_media_with_plants(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) media relation for the image-dedup entries:
-    the corpus payloads (fake-tier) plus, per 20th doc, a planted 9x8
-    PGM (real tier, pixels = the md5 chain of the doc's text) and its
-    one-pixel re-encode variant. Shared by the batch entry and its
-    streaming twin so both hash the IDENTICAL relation."""
+    - every ``_PLANT_EVERY``-th doc seeds one plant per tier; the seed's
+      sample source is ``_md5_chain(coalesce(text, ''), depth)``, which
+      the oracles re-derive with ``_md5_chain_sql(depth)``
+    - ``tiers`` is a sequence of ``(offset, encode)``: the tier plants
+      ``(doc_id + offset, encode(chain bytes))``. Offsets are distinct
+      multiples of ``_PLANT_SPACING``, and every corpus doc_id must sit
+      below ``_PLANT_SPACING``: a JVM-side ``raise_error`` guard fails
+      the query loudly (no extra job) on any id that would collide
+    - all tiers render in ONE ``mapInPandas`` stage that decodes each
+      seed's chain once: one Python worker wave, not one per tier
+    - the union is coalesced (narrow, no shuffle) to the larger of the
+      corpus partitioning and the session parallelism, so downstream
+      Python stages do not pay per-task overhead for corpus + plant
+      partitions; at production scale the corpus scan dominates and
+      the plants (corpus/20 rows) merge into corpus-sized partitions
+    - a batch entry and its streaming twin call the same public
+      builder, so both hash the IDENTICAL relation
+    """
     from torua_spark.operators import multimodal as mm
 
     # spread an under-partitioned docs scan BEFORE the Arrow hashing
     # tiers: a single ~MB parquet file would serialize every
-    # downstream mapInPandas (dHash, codec probes) on one core (the
-    # pack_sequences_bpe r11 lesson applied to the image family);
-    # no-op at production scale where the scan already splits
+    # downstream mapInPandas (hashes, codec probes) on one core; no-op
+    # at production scale where the scan already splits
     from torua_spark.sources.catalog import spread_small_scan
 
+    # .rdd here is PLAN METADATA only, read BEFORE the spread: after
+    # its repartition, AQE would run the shuffle to learn the count.
+    n_parts = max(
+        docs.rdd.getNumPartitions(),
+        docs.sparkSession.sparkContext.defaultParallelism,
+    )
     docs = spread_small_scan(docs)
     media = mm.to_media_table(docs).select("doc_id", "payload")
-    # row-level loud guard (r10 advice): the planted rows live at
-    # doc_id + 10M/20M, so any corpus id >= the first offset would
-    # silently collide with a plant (and diverge from the oracle).
-    # F.when + raise_error keeps the check JVM-side with no extra job
-    # (the packed-key overflow-guard pattern elsewhere in the repo).
     guarded_id = F.when(
-        F.col("doc_id") < _IMG_ORIG_OFFSET, F.col("doc_id")
+        F.col("doc_id") < _PLANT_SPACING, F.col("doc_id")
     ).otherwise(
         F.raise_error(
             F.concat(
-                F.lit(
-                    "image_media_with_plants: doc_id "
-                ),
+                F.lit("media plants: doc_id "),
                 F.col("doc_id").cast("string"),
                 F.lit(
-                    f" >= plant offset {_IMG_ORIG_OFFSET}; planted "
-                    f"rows would collide with real ids — raise the "
+                    f" >= plant-offset spacing {_PLANT_SPACING}; planted "
+                    f"tiers would collide with real ids — raise the "
                     f"offsets for this corpus"
                 ),
             )
         ).cast("long")
     )
     media = media.select(guarded_id.alias("doc_id"), "payload")
-    seeds = docs.filter(F.col("doc_id") % _IMG_PLANT_EVERY == 0).select(
+    seeds = docs.filter(F.col("doc_id") % _PLANT_EVERY == 0).select(
         "doc_id",
-        _md5_chain5(F.coalesce(F.col("text"), F.lit(""))).alias("hx"),
+        _md5_chain(F.coalesce(F.col("text"), F.lit("")), depth).alias("hx"),
     )
-    out_schema = "doc_id long, payload binary"
-    plants = seeds.mapInPandas(
-        _fanout_gens(
-            _render_pgm_gen(False, _IMG_ORIG_OFFSET),
-            _render_pgm_gen(True, _IMG_VAR_OFFSET),
-        ),
-        out_schema,
-    )
-    return _plants_union(media, plants)
+
+    def render(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            chains = [bytes.fromhex(h) for h in pdf["hx"]]
+            for offset, encode in tiers:
+                yield pd.DataFrame({
+                    "doc_id": pdf["doc_id"] + offset,
+                    "payload": [encode(c) for c in chains],
+                })
+
+    plants = seeds.mapInPandas(render, "doc_id long, payload binary")
+    return media.unionByName(plants).coalesce(n_parts)
+
+
+def _first_sample_perturbed(c: bytes) -> bytes:
+    """The one-sample re-encode perturbation: sample 0 := sample 1."""
+    return c[1:2] + c[1:]
+
+
+# --- image perceptual-hash near-dup ------------------------------------------
+# Plants a 9x8 binary PGM (pixels = the 72 leading chain bytes) plus a
+# one-pixel "re-encode" variant, so the result carries real
+# decoded-pixel near-dup pairs (dist 0/1). 9x8 is the dHash geometry
+# itself, making resize a no-op the oracle doesn't model.
+_IMG_ORIG_OFFSET = 10_000_000
+_IMG_VAR_OFFSET = 20_000_000
+
+
+def _pgm_9x8(c: bytes) -> bytes:
+    return codecs.encode_pgm(9, 8, c[:72])
+
+
+def image_media_with_plants(docs: DataFrame) -> DataFrame:
+    """Image-dedup media: per seed a 9x8 PGM and its one-pixel
+    re-encode variant (pixel 0 := pixel 1, flipping at most dHash
+    bit 0). Shared by the four image entries and
+    ``streaming_image_dedup``."""
+    return _media_with_plants(docs, 5, (
+        (_IMG_ORIG_OFFSET, _pgm_9x8),
+        (_IMG_VAR_OFFSET, lambda c: _pgm_9x8(_first_sample_perturbed(c))),
+    ))
 
 
 def _q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2165,12 +2157,7 @@ def _image_phash_oracle_sql() -> str:
     chain bytes (i//8)*9+(i%8)+1 vs +0); same 4-band blocking, same
     bit_count Hamming verify. DuckDB list slicing is 1-based inclusive
     (px[2:72] = elements 2..72)."""
-    chain = "md5(t)"
-    parts = [chain]
-    for _ in range(4):
-        chain = f"md5({chain})"
-        parts.append(chain)
-    hx = " || ".join(parts)
+    hx = _md5_chain_sql(5)
     return f"""
     WITH base AS (
         SELECT doc_id, coalesce(text, '') AS t FROM documents
@@ -2188,7 +2175,7 @@ def _image_phash_oracle_sql() -> str:
                list_transform(range(0, 72),
                    i -> ('0x' || substr(hx, 1 + 2 * i, 2))::INT) AS px
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_IMG_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     pboth AS (
         SELECT doc_id + {_IMG_ORIG_OFFSET} AS doc_id, px FROM pix
@@ -2433,12 +2420,7 @@ def _multimodal_decon_oracle_sql() -> str:
     radius, so a plain cross join with the Hamming filter is the same
     relation; the caption probe is the documented any-eval >=
     threshold equivalence of best-match >= threshold."""
-    chain = "md5(t)"
-    parts = [chain]
-    for _ in range(4):
-        chain = f"md5({chain})"
-        parts.append(chain)
-    hx = " || ".join(parts)
+    hx = _md5_chain_sql(5)
     cap_chunks = ", ".join(
         f"('0x' || substr(md5(coalesce(text, '')), {1 + 4 * i}, 4))::BIGINT"
         f" / 65536.0"
@@ -2463,7 +2445,7 @@ def _multimodal_decon_oracle_sql() -> str:
                list_transform(range(0, 72),
                    i -> ('0x' || substr(hx, 1 + 2 * i, 2))::INT) AS px
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_IMG_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     pboth AS (
         SELECT doc_id + {_IMG_ORIG_OFFSET} AS doc_id, px FROM pix
@@ -2526,93 +2508,28 @@ QUERIES["dedup_decontaminate_multimodal"] = _q_decontaminate_multimodal
 ORACLE["dedup_decontaminate_multimodal"] = _multimodal_decon_oracle_sql()
 
 
-# --- audio content dedup (r12, VERDICT r11 missing #2) ---------------------
-# Same driver-proof recipe as the image entry: corpus payloads take
-# the documented md5 fake tier; to driver-prove the REAL signal tier,
-# every 20th doc PLANTS a deterministic 65-frame 8-bit mono PCM WAV
-# (samples = the md5 chain of its text — both engines derive them)
-# plus a one-sample "re-encode" variant, so the result carries real
-# decoded-signal near-dup pairs (dist 0/1) whose fingerprint the
-# oracle reproduces arithmetically. 65 frames is the fingerprint's
-# window count itself (one sample per window: window mean == |s-128|),
-# the audio analog of the 9x8 identity-resize PGM.
-
-# All planted-media tiers across the dedup entries share one offset
-# SPACING: tier k of any entry plants ids at (k+1) * spacing + doc_id.
-# Every plant relation guards corpus ids at the SPACING (ADVICE r13):
-# guarding at an entry's first offset would let a corpus id in
-# [spacing, first_offset) alias one tier's plants into another's
-# (e.g. 30M + 15M == 40M + 5M), silently merging distinct payloads.
-_PLANT_SPACING = 10_000_000
-
-_AUD_PLANT_EVERY = 20
+# --- audio content dedup -----------------------------------------------------
+# Plants a 65-frame 8-bit mono PCM WAV (samples = the chain bytes) plus
+# a one-sample "re-encode" variant, so the result carries real
+# decoded-signal near-dup pairs (dist 0/1). 65 frames is the
+# fingerprint's window count itself (one sample per window: window
+# mean == |s-128|), the audio analog of the 9x8 identity-resize PGM.
 _AUD_ORIG_OFFSET = 10_000_000
 _AUD_VAR_OFFSET = 20_000_000
 
 
-def _render_wav_gen(perturb: bool, offset: int):
-    """(doc_id, hx) Arrow batches -> (doc_id + offset, 65-frame 8-bit
-    mono WAV whose samples are the 65 leading md5-chain bytes); the
-    variant tier sets sample 0 := sample 1 — flips at most
-    fingerprint bit 0 (window-0 energy becomes window-1's)."""
-    def gen(batches):
-        import pandas as pd
-
-        from torua_spark.operators.codecs import encode_wav
-
-        for pdf in batches:
-            payloads = []
-            for h in pdf["hx"]:
-                px = bytearray.fromhex(h)[:65]
-                if perturb:
-                    px[0] = px[1]
-                payloads.append(encode_wav(1, 8000, 8, bytes(px)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"] + offset, "payload": payloads}
-            )
-
-    return gen
+def _wav_65(c: bytes) -> bytes:
+    return codecs.encode_wav(1, 8000, 8, c[:65])
 
 
 def audio_media_with_plants(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) media relation for the audio-dedup entry:
-    corpus payloads (fake tier) plus, per 20th doc, a planted 65-frame
-    WAV (real tier, samples = the md5 chain of the doc's text) and
-    its one-sample re-encode variant."""
-    from torua_spark.operators import multimodal as mm
-    from torua_spark.sources.catalog import spread_small_scan
-
-    docs = spread_small_scan(docs)
-    media = mm.to_media_table(docs).select("doc_id", "payload")
-    guarded_id = F.when(
-        F.col("doc_id") < _AUD_ORIG_OFFSET, F.col("doc_id")
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("audio_media_with_plants: doc_id "),
-                F.col("doc_id").cast("string"),
-                F.lit(
-                    f" >= plant offset {_AUD_ORIG_OFFSET}; planted "
-                    f"rows would collide with real ids — raise the "
-                    f"offsets for this corpus"
-                ),
-            )
-        ).cast("long")
-    )
-    media = media.select(guarded_id.alias("doc_id"), "payload")
-    seeds = docs.filter(F.col("doc_id") % _AUD_PLANT_EVERY == 0).select(
-        "doc_id",
-        _md5_chain5(F.coalesce(F.col("text"), F.lit(""))).alias("hx"),
-    )
-    out_schema = "doc_id long, payload binary"
-    plants = seeds.mapInPandas(
-        _fanout_gens(
-            _render_wav_gen(False, _AUD_ORIG_OFFSET),
-            _render_wav_gen(True, _AUD_VAR_OFFSET),
-        ),
-        out_schema,
-    )
-    return _plants_union(media, plants)
+    """Audio-dedup media: per seed a 65-frame WAV and its one-sample
+    re-encode variant (sample 0 := sample 1, flipping at most
+    fingerprint bit 0). Shared with ``streaming_audio_dedup``."""
+    return _media_with_plants(docs, 5, (
+        (_AUD_ORIG_OFFSET, _wav_65),
+        (_AUD_VAR_OFFSET, lambda c: _wav_65(_first_sample_perturbed(c))),
+    ))
 
 
 def _q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2638,12 +2555,7 @@ def _audio_fp_oracle_sql() -> str:
     abs(px[w] - 128) and fingerprint bit i compares windows i+1 vs i;
     same 4-band blocking, same bit_count Hamming verify as the image
     oracle (the layouts are shared by design)."""
-    chain = "md5(t)"
-    parts = [chain]
-    for _ in range(4):
-        chain = f"md5({chain})"
-        parts.append(chain)
-    hx = " || ".join(parts)
+    hx = _md5_chain_sql(5)
     return f"""
     WITH base AS (
         SELECT doc_id, coalesce(text, '') AS t FROM documents
@@ -2661,7 +2573,7 @@ def _audio_fp_oracle_sql() -> str:
                list_transform(range(0, 65),
                    i -> ('0x' || substr(hx, 1 + 2 * i, 2))::INT) AS px
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_AUD_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     pboth AS (
         SELECT doc_id + {_AUD_ORIG_OFFSET} AS doc_id, px FROM pix
@@ -2714,12 +2626,11 @@ QUERIES["dedup_audio_fingerprint"] = _q_audio_fingerprint
 ORACLE["dedup_audio_fingerprint"] = _audio_fp_oracle_sql()
 
 
-# --- SPECTRAL audio dedup (r13, VERDICT r12 #3; r14 epsilon trim) ------------
-# The shift/pad-robust tier: RELATIVE noise-floor silence trim (r14:
-# 64*|a| <= max|a| — exact zeros AND dithered silence) + per-frame FFT
+# --- SPECTRAL audio dedup ----------------------------------------------------
+# The shift/pad-robust tier: RELATIVE noise-floor silence trim
+# (64*|a| <= max|a| — exact zeros AND dithered silence) + per-frame FFT
 # band energies + the Haitsma-Kalker double-difference sign bits
-# (multimodal.audio_spectral_fingerprint). Driver proof follows the
-# planted-fixture recipe: every 20th doc plants a deterministic
+# (multimodal.audio_spectral_fingerprint). Each seed plants a
 # 204-sample 8-bit mono WAV (17 frames x 12 samples; samples = a
 # 13-deep md5 chain of its text with bytes 126..130 remapped to 131 so
 # NO interior amplitude sits at or below the trim floor — |amp| >= 3 >
@@ -2727,12 +2638,12 @@ ORACLE["dedup_audio_fingerprint"] = _audio_fp_oracle_sql()
 # the original) plus TWO pad variants the trim must remove exactly:
 # (a) 24 leading + 12 trailing EXACT-ZERO samples — the re-encode
 #     shape the time-domain tier MISSES (Hamming 32, pinned in tests);
-# (b) r14 (VERDICT r13 missing #1): the same pad as DITHERED silence
-#     (alternating amplitude +1/-1 — a digital noise floor), which the
-#     r13 exact-zero trim MISSED (pinned in tests) and the relative
-#     trim removes: 64*1 = 64 <= max|amp| on every planted signal
-#     (verified corpus-wide by tests/test_multimodal_codec.py's margin
-#     pin; uniform chain bytes leave max|amp| < 64 with p ~ 2^-204).
+# (b) the same pad as DITHERED silence (alternating amplitude +1/-1 —
+#     a digital noise floor), which an exact-zero trim misses (pinned
+#     in tests) and the relative trim removes: 64*1 = 64 <= max|amp|
+#     on every planted signal (verified corpus-wide by
+#     tests/test_multimodal_codec.py's margin pin; uniform chain bytes
+#     leave max|amp| < 64 with p ~ 2^-204).
 # All three tiers carry the SAME fingerprint by construction, so the
 # oracle re-derives ONE planted fingerprint ARITHMETICALLY — a naive
 # 12-point DFT per frame in SQL (cos/sin sums — the frame is one
@@ -2741,7 +2652,6 @@ ORACLE["dedup_audio_fingerprint"] = _audio_fp_oracle_sql()
 # packing — and replicates it at the three offsets before the same
 # banded Hamming verify.
 
-_SPEC_PLANT_EVERY = 20
 _SPEC_ORIG_OFFSET = 30_000_000
 _SPEC_VAR_OFFSET = 40_000_000
 _SPEC_DITHER_OFFSET = 120_000_000
@@ -2759,84 +2669,28 @@ def _spec_remap(b: int) -> int:
     return 131 if 126 <= b <= 130 else b
 
 
-def _render_spec_wav_gen(pad: str | None, offset: int):
-    """(doc_id, hx) Arrow batches -> (doc_id + offset, 204-sample
-    8-bit mono WAV; samples = the leading md5-chain bytes through
-    _spec_remap). ``pad`` wraps the SAME signal in 24 leading + 12
-    trailing pad samples: 'zero' plants exact silence (byte 128 ==
-    amplitude 0), 'dither' plants an alternating +1/-1 noise floor
-    (bytes 129/127) — the r14 variant the exact-zero trim missed."""
-    def gen(batches):
-        import pandas as pd
+def _spec_wav(lead: bytes, tail: bytes):
+    """Chain bytes -> the 204 remapped samples wrapped in ``lead`` and
+    ``tail`` pad samples, as one 8-bit mono WAV."""
+    def encode(c: bytes) -> bytes:
+        px = bytes(_spec_remap(b) for b in c[:_SPEC_N])
+        return codecs.encode_wav(1, 8000, 8, lead + px + tail)
 
-        from torua_spark.operators.codecs import encode_wav
-
-        lead = tail = b""
-        if pad == "zero":
-            lead, tail = bytes([128] * _SPEC_LEAD), bytes([128] * _SPEC_TAIL)
-        elif pad == "dither":
-            lead = bytes([129, 127] * (_SPEC_LEAD // 2))
-            tail = bytes([129, 127] * (_SPEC_TAIL // 2))
-        for pdf in batches:
-            payloads = []
-            for h in pdf["hx"]:
-                px = bytes(
-                    _spec_remap(b) for b in bytes.fromhex(h)[:_SPEC_N]
-                )
-                payloads.append(encode_wav(1, 8000, 8, lead + px + tail))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"] + offset, "payload": payloads}
-            )
-
-    return gen
+    return encode
 
 
 def audio_spectral_media_with_plants(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) media relation for the spectral-dedup entry:
-    corpus payloads (fake tier) plus, per 20th doc, a planted
-    204-sample WAV (real tier), its exact-silence-padded variant, and
-    (r14) its dithered-silence-padded variant."""
-    from torua_spark.operators import multimodal as mm
-    from torua_spark.sources.catalog import spread_small_scan
-
-    docs = spread_small_scan(docs)
-    media = mm.to_media_table(docs).select("doc_id", "payload")
-    # Guard at the offset SPACING, not the first offset (ADVICE r13):
-    # with multiple plant tiers spaced _PLANT_SPACING apart, a corpus
-    # id in [spacing, first_offset) would pass a first-offset guard yet
-    # make tier T's (offset_T + id) collide with tier T+1's ids.
-    guarded_id = F.when(
-        F.col("doc_id") < _PLANT_SPACING, F.col("doc_id")
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("audio_spectral_media_with_plants: doc_id "),
-                F.col("doc_id").cast("string"),
-                F.lit(
-                    f" >= plant-offset spacing {_PLANT_SPACING}; "
-                    f"planted tiers would collide across offsets — "
-                    f"raise the offsets for this corpus"
-                ),
-            )
-        ).cast("long")
-    )
-    media = media.select(guarded_id.alias("doc_id"), "payload")
-    seeds = docs.filter(F.col("doc_id") % _SPEC_PLANT_EVERY == 0).select(
-        "doc_id",
-        _md5_chain(
-            F.coalesce(F.col("text"), F.lit("")), _SPEC_CHAIN_DEPTH
-        ).alias("hx"),
-    )
-    out_schema = "doc_id long, payload binary"
-    plants = seeds.mapInPandas(
-        _fanout_gens(
-            _render_spec_wav_gen(None, _SPEC_ORIG_OFFSET),
-            _render_spec_wav_gen("zero", _SPEC_VAR_OFFSET),
-            _render_spec_wav_gen("dither", _SPEC_DITHER_OFFSET),
-        ),
-        out_schema,
-    )
-    return _plants_union(media, plants)
+    """Spectral-dedup media: per seed a 204-sample WAV, the same
+    signal padded with exact silence (byte 128 == amplitude 0), and
+    padded with a dithered +1/-1 noise floor (bytes 129/127). Shared
+    with ``streaming_audio_spectral``."""
+    zero, dither = bytes([128]), bytes([129, 127])
+    return _media_with_plants(docs, _SPEC_CHAIN_DEPTH, (
+        (_SPEC_ORIG_OFFSET, _spec_wav(b"", b"")),
+        (_SPEC_VAR_OFFSET, _spec_wav(zero * _SPEC_LEAD, zero * _SPEC_TAIL)),
+        (_SPEC_DITHER_OFFSET, _spec_wav(dither * (_SPEC_LEAD // 2),
+                                        dither * (_SPEC_TAIL // 2))),
+    ))
 
 
 def _q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2917,7 +2771,7 @@ def _audio_spectral_oracle_sql() -> str:
     pamps AS (
         SELECT doc_id, {remap} AS s
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_SPEC_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     penergy AS (
         SELECT doc_id,
@@ -2981,88 +2835,34 @@ QUERIES["dedup_audio_spectral"] = _q_audio_spectral
 ORACLE["dedup_audio_spectral"] = _audio_spectral_oracle_sql()
 
 
-# --- audio CROSS-FORMAT dedup (r14, VERDICT r13 #5) --------------------------
+# --- audio CROSS-FORMAT dedup ------------------------------------------------
 # The audio twin of dedup_image_cross_format: the SAME 65 samples
 # planted as a WAV (little-endian PCM, 8-bit unsigned offset-binary)
 # and as an AIFF (big-endian PCM, SIGNED at every width — the public
 # Audio IFF spec, codecs.encode_aiff/decode_aiff_header) must collide
 # at dist 0 through two REAL container decodes feeding the one
-# container-independent fingerprint engine (the time-domain tier —
-# so the r12 tier keeps an in-window witness after its streaming twin
-# rotates out this round). Own plant relation (offsets 140/150M).
+# container-independent time-domain fingerprint engine. Own plant
+# relation (offsets 140/150M).
 
-_XAUD_PLANT_EVERY = 20
 _XAUD_WAV_OFFSET = 140_000_000
 _XAUD_AIFF_OFFSET = 150_000_000
 
 
-def _render_xaud_gen(container: str, offset: int):
-    """(doc_id, hx) -> (doc_id + offset, the 65 leading chain bytes
-    as one 8-bit mono signal in the requested container). The SAME
-    amplitude sequence both times: WAV stores amplitude a as unsigned
-    byte a+128 (the chain byte itself), AIFF stores it as the SIGNED
-    byte a — so aiff_byte = (wav_byte - 128) mod 256."""
-    def gen(batches):
-        import pandas as pd
-
-        from torua_spark.operators.codecs import encode_aiff, encode_wav
-
-        for pdf in batches:
-            payloads = []
-            for h in pdf["hx"]:
-                px = bytes.fromhex(h)[:65]
-                if container == "wav":
-                    payloads.append(encode_wav(1, 8000, 8, px))
-                else:
-                    signed = bytes((b - 128) & 0xFF for b in px)
-                    payloads.append(encode_aiff(1, 8000, 8, signed))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"] + offset, "payload": payloads}
-            )
-
-    return gen
+def _aiff_65(c: bytes) -> bytes:
+    """The same amplitudes as ``_wav_65``: WAV stores amplitude a as
+    unsigned byte a+128 (the chain byte itself), AIFF stores it as the
+    SIGNED byte a — so aiff_byte = (wav_byte - 128) mod 256."""
+    signed = bytes((b - 128) & 0xFF for b in c[:65])
+    return codecs.encode_aiff(1, 8000, 8, signed)
 
 
 def audio_cross_format_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload): corpus payloads (fake tier) plus, per 20th
-    doc, the same planted 65-sample signal in BOTH containers."""
-    from torua_spark.operators import multimodal as mm
-    from torua_spark.sources.catalog import spread_small_scan
-
-    docs = spread_small_scan(docs)
-    media = mm.to_media_table(docs).select("doc_id", "payload")
-    # Guard at the offset SPACING (ADVICE r13) — see
-    # audio_spectral_media_with_plants for the collision argument.
-    guarded_id = F.when(
-        F.col("doc_id") < _PLANT_SPACING, F.col("doc_id")
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("audio_cross_format_media: doc_id "),
-                F.col("doc_id").cast("string"),
-                F.lit(
-                    f" >= plant-offset spacing {_PLANT_SPACING}; "
-                    f"planted tiers would collide across offsets — "
-                    f"raise the offsets for this corpus"
-                ),
-            )
-        ).cast("long")
-    )
-    media = media.select(guarded_id.alias("doc_id"), "payload")
-    seeds = docs.filter(F.col("doc_id") % _XAUD_PLANT_EVERY == 0).select(
-        "doc_id",
-        _md5_chain5(F.coalesce(F.col("text"), F.lit(""))).alias("hx"),
-    )
-    out_schema = "doc_id long, payload binary"
-    plants = seeds.mapInPandas(
-        _fanout_gens(*[
-            _render_xaud_gen(container, off)
-            for container, off in (("wav", _XAUD_WAV_OFFSET),
-                                   ("aiff", _XAUD_AIFF_OFFSET))
-        ]),
-        out_schema,
-    )
-    return _plants_union(media, plants)
+    """Audio cross-format media: per seed the same 65-sample signal
+    as a WAV and as an AIFF."""
+    return _media_with_plants(docs, 5, (
+        (_XAUD_WAV_OFFSET, _wav_65),
+        (_XAUD_AIFF_OFFSET, _aiff_65),
+    ))
 
 
 def _q_audio_cross_format(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3088,12 +2888,7 @@ def _audio_cross_format_oracle_sql() -> str:
     (b - 128) mod 256 read as signed -> the same amp), which is
     exactly the claim the Spark side must reproduce through the two
     real decoders."""
-    chain = "md5(t)"
-    parts = [chain]
-    for _ in range(4):
-        chain = f"md5({chain})"
-        parts.append(chain)
-    hx = " || ".join(parts)
+    hx = _md5_chain_sql(5)
     return f"""
     WITH base AS (
         SELECT doc_id, coalesce(text, '') AS t FROM documents
@@ -3111,7 +2906,7 @@ def _audio_cross_format_oracle_sql() -> str:
                list_transform(range(0, 65),
                    i -> ('0x' || substr(hx, 1 + 2 * i, 2))::INT) AS px
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_XAUD_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     pbits AS (
         SELECT doc_id,
@@ -3159,25 +2954,23 @@ QUERIES["dedup_audio_cross_format"] = _q_audio_cross_format
 ORACLE["dedup_audio_cross_format"] = _audio_cross_format_oracle_sql()
 
 
-# --- VIDEO content dedup (r13, VERDICT r12 #6) -------------------------------
+# --- VIDEO content dedup -----------------------------------------------------
 # Clip = frame sequence; per-frame dHash via the image tier's engine;
 # clip near-dup = banded join over FRAME hashes + min-matching-frames
-# verify (multimodal.video_neardup_pairs). Driver proof: every 20th
-# doc plants a deterministic 4-frame 9x8 TVID clip (frame pixels = an
-# 18-deep md5 chain of its text, 72 bytes per frame) plus a variant
-# whose FIRST frame takes the image tier's one-pixel re-encode
-# perturbation (<=1 dHash bit) — frames 1-3 identical, so the pair
-# matches on >= 4 frame pairs at ONE consistent index offset (0), far
-# past the min_matching_frames=2 gate. r14 (VERDICT r13 missing #2)
-# adds a SHUFFLED-FRAME DECOY: the same 4 frames in REVERSED order —
-# it shares every frame with the original, so the r13 raw-count gate
-# false-paired it (4 matches), but its matches scatter across offsets
+# verify (multimodal.video_neardup_pairs). Each seed plants a 4-frame
+# 9x8 TVID clip (frame pixels = an 18-deep md5 chain of its text, 72
+# bytes per frame) plus a variant whose FIRST frame takes the image
+# tier's one-pixel re-encode perturbation (<=1 dHash bit) — frames 1-3
+# identical, so the pair matches on >= 4 frame pairs at ONE consistent
+# index offset (0), far past the min_matching_frames=2 gate. A
+# SHUFFLED-FRAME DECOY carries the same 4 frames in REVERSED order: it
+# shares every frame with the original, so a raw-count gate would
+# false-pair it (4 matches), but its matches scatter across offsets
 # {+-3, +-1} (one each), so the temporal-order (modal-offset) verify
 # rejects it. The oracle re-derives every planted frame hash with the
 # image entry's pixel-comparison arithmetic and mirrors the
 # modal-offset count exactly.
 
-_VID_PLANT_EVERY = 20
 _VID_ORIG_OFFSET = 50_000_000
 _VID_VAR_OFFSET = 60_000_000
 _VID_GIF_OFFSET = 70_000_000
@@ -3187,94 +2980,32 @@ _VID_CHAIN_DEPTH = 18  # 18 md5s = 288 bytes = 4 frames x 72
 _VID_MIN_MATCH = 2
 
 
-def _render_video_gen(perturb: bool, offset: int, container: str = "tvid",
-                      order: str = "forward"):
-    """(doc_id, hx) Arrow batches -> (doc_id + offset, 4-frame 9x8
-    clip; frame f = chain bytes [72f, 72f+72)). The variant tier sets
-    frame 0's pixel 0 := pixel 1 (flips at most dHash bit 0 of that
-    one frame). ``container`` selects TVID or GIF (r13: the SAME
-    frames re-encoded as an animated GIF — byte-different payload,
-    identical content — drive the cross-container collision proof
-    through the real LZW decode; the grayscale palette makes GIF
-    index bytes equal the gray bytes, so the planted dHashes are
-    container-independent by construction). ``order='reverse'`` (r14)
-    emits the frames REVERSED — the shuffled-frame decoy the
-    temporal-order verify must reject."""
-    def gen(batches):
-        import pandas as pd
+def _clip(encode, reverse: bool = False):
+    """Chain bytes -> a 4-frame 9x8 clip, frame f = chain bytes
+    [72f, 72f+72), in ``encode``'s container (``encode_tvid`` or
+    ``encode_gif``)."""
+    def enc(c: bytes) -> bytes:
+        frames = [c[72 * f: 72 * f + 72] for f in range(_VID_FRAMES)]
+        return encode(9, 8, frames[::-1] if reverse else frames)
 
-        from torua_spark.operators.codecs import encode_gif, encode_tvid
-
-        encode = encode_tvid if container == "tvid" else encode_gif
-        for pdf in batches:
-            payloads = []
-            for h in pdf["hx"]:
-                raw = bytes.fromhex(h)[: 72 * _VID_FRAMES]
-                frames = [
-                    bytearray(raw[72 * f: 72 * f + 72])
-                    for f in range(_VID_FRAMES)
-                ]
-                if perturb:
-                    frames[0][0] = frames[0][1]
-                if order == "reverse":
-                    frames.reverse()
-                payloads.append(
-                    encode(9, 8, [bytes(f) for f in frames])
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"] + offset, "payload": payloads}
-            )
-
-    return gen
+    return enc
 
 
 def video_media_with_plants(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) media relation for the video-dedup entry:
-    corpus payloads (fake tier, one pseudo-frame each) plus, per 20th
-    doc, a planted 4-frame TVID clip, its one-pixel variant, (r13) an
-    animated-GIF RE-ENCODE of the same frames — the cross-container
-    duplicate the real LZW decode must collide — and (r14) a
-    REVERSED-frame decoy the temporal-order verify must reject."""
-    from torua_spark.operators import multimodal as mm
-    from torua_spark.sources.catalog import spread_small_scan
-
-    docs = spread_small_scan(docs)
-    media = mm.to_media_table(docs).select("doc_id", "payload")
-    # Guard at the offset SPACING (ADVICE r13) — see
-    # audio_spectral_media_with_plants for the collision argument.
-    guarded_id = F.when(
-        F.col("doc_id") < _PLANT_SPACING, F.col("doc_id")
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("video_media_with_plants: doc_id "),
-                F.col("doc_id").cast("string"),
-                F.lit(
-                    f" >= plant-offset spacing {_PLANT_SPACING}; "
-                    f"planted tiers would collide across offsets — "
-                    f"raise the offsets for this corpus"
-                ),
-            )
-        ).cast("long")
-    )
-    media = media.select(guarded_id.alias("doc_id"), "payload")
-    seeds = docs.filter(F.col("doc_id") % _VID_PLANT_EVERY == 0).select(
-        "doc_id",
-        _md5_chain(
-            F.coalesce(F.col("text"), F.lit("")), _VID_CHAIN_DEPTH
-        ).alias("hx"),
-    )
-    out_schema = "doc_id long, payload binary"
-    plants = seeds.mapInPandas(
-        _fanout_gens(
-            _render_video_gen(False, _VID_ORIG_OFFSET),
-            _render_video_gen(True, _VID_VAR_OFFSET),
-            _render_video_gen(False, _VID_GIF_OFFSET, container="gif"),
-            _render_video_gen(False, _VID_DECOY_OFFSET, order="reverse"),
-        ),
-        out_schema,
-    )
-    return _plants_union(media, plants)
+    """Video-dedup media (corpus payloads are one pseudo-frame each):
+    per seed a TVID clip, its one-pixel variant (frame 0's pixel 0 :=
+    pixel 1), an animated-GIF RE-ENCODE of the same frames — the
+    grayscale palette makes GIF index bytes equal the gray bytes, so
+    the real LZW decode must collide it with the original — and a
+    REVERSED-frame decoy the temporal-order verify must reject.
+    Shared with ``streaming_video_dedup``."""
+    tvid = _clip(codecs.encode_tvid)
+    return _media_with_plants(docs, _VID_CHAIN_DEPTH, (
+        (_VID_ORIG_OFFSET, tvid),
+        (_VID_VAR_OFFSET, lambda c: tvid(_first_sample_perturbed(c))),
+        (_VID_GIF_OFFSET, _clip(codecs.encode_gif)),
+        (_VID_DECOY_OFFSET, _clip(codecs.encode_tvid, reverse=True)),
+    ))
 
 
 def _q_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3324,7 +3055,7 @@ def _video_fp_oracle_sql() -> str:
                list_transform(range(0, {72 * _VID_FRAMES}),
                    i -> ('0x' || substr(hx, 1 + 2 * i, 2))::INT) AS px
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_VID_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     pframes AS (
         SELECT doc_id + {_VID_ORIG_OFFSET} AS clip, f.fidx,
@@ -3409,97 +3140,31 @@ QUERIES["dedup_video_fingerprint"] = _q_video_fingerprint
 ORACLE["dedup_video_fingerprint"] = _video_fp_oracle_sql()
 
 
-# --- image CROSS-FORMAT dedup (r13) ------------------------------------------
+# --- image CROSS-FORMAT dedup ------------------------------------------------
 # The image-tier twin of the video tier's cross-container proof: the
 # SAME 9x8 pixels planted as binary PGM, as PNG (full zlib+unfilter
 # decode), as single-frame GIF (full LZW decode), and as BMP
 # (padded-BGR rows) must collide at dist 0 — re-encodes are the
 # dominant duplicate class in a real image corpus, and the hash
 # engine is codec-independent by design. Own plant relation (offsets
-# 80/90/100/110M) so the five oracles sharing image_media_with_plants
+# 80/90/100/110M) so the oracles sharing image_media_with_plants
 # stay untouched.
 
-_XF_PLANT_EVERY = 20
 _XF_PGM_OFFSET = 80_000_000
 _XF_PNG_OFFSET = 90_000_000
 _XF_GIF_OFFSET = 100_000_000
 _XF_BMP_OFFSET = 110_000_000
 
 
-def _render_xf_gen(container: str, offset: int):
-    """(doc_id, hx) -> (doc_id + offset, the 72 chain bytes as a 9x8
-    image in the requested container)."""
-    def gen(batches):
-        import pandas as pd
-
-        from torua_spark.operators.codecs import (
-            encode_bmp,
-            encode_gif,
-            encode_pgm,
-            encode_png,
-        )
-
-        for pdf in batches:
-            payloads = []
-            for h in pdf["hx"]:
-                g = bytes.fromhex(h)[:72]
-                if container == "pgm":
-                    payloads.append(encode_pgm(9, 8, g))
-                elif container == "png":
-                    payloads.append(encode_png(9, 8, g))
-                elif container == "bmp":
-                    payloads.append(encode_bmp(9, 8, g))
-                else:
-                    payloads.append(encode_gif(9, 8, [g]))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"] + offset, "payload": payloads}
-            )
-
-    return gen
-
-
 def image_cross_format_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload): corpus payloads (fake tier) plus, per 20th
-    doc, the same planted pixels in FOUR containers."""
-    from torua_spark.operators import multimodal as mm
-    from torua_spark.sources.catalog import spread_small_scan
-
-    docs = spread_small_scan(docs)
-    media = mm.to_media_table(docs).select("doc_id", "payload")
-    # Guard at the offset SPACING (ADVICE r13) — see
-    # audio_spectral_media_with_plants for the collision argument.
-    guarded_id = F.when(
-        F.col("doc_id") < _PLANT_SPACING, F.col("doc_id")
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("image_cross_format_media: doc_id "),
-                F.col("doc_id").cast("string"),
-                F.lit(
-                    f" >= plant-offset spacing {_PLANT_SPACING}; "
-                    f"planted tiers would collide across offsets — "
-                    f"raise the offsets for this corpus"
-                ),
-            )
-        ).cast("long")
-    )
-    media = media.select(guarded_id.alias("doc_id"), "payload")
-    seeds = docs.filter(F.col("doc_id") % _XF_PLANT_EVERY == 0).select(
-        "doc_id",
-        _md5_chain5(F.coalesce(F.col("text"), F.lit(""))).alias("hx"),
-    )
-    out_schema = "doc_id long, payload binary"
-    plants = seeds.mapInPandas(
-        _fanout_gens(*[
-            _render_xf_gen(container, off)
-            for container, off in (("pgm", _XF_PGM_OFFSET),
-                                   ("png", _XF_PNG_OFFSET),
-                                   ("gif", _XF_GIF_OFFSET),
-                                   ("bmp", _XF_BMP_OFFSET))
-        ]),
-        out_schema,
-    )
-    return _plants_union(media, plants)
+    """Image cross-format media: per seed the same 72 chain bytes as a
+    9x8 image in FOUR containers (PGM, PNG, GIF, BMP)."""
+    return _media_with_plants(docs, 5, (
+        (_XF_PGM_OFFSET, _pgm_9x8),
+        (_XF_PNG_OFFSET, lambda c: codecs.encode_png(9, 8, c[:72])),
+        (_XF_GIF_OFFSET, lambda c: codecs.encode_gif(9, 8, [c[:72]])),
+        (_XF_BMP_OFFSET, lambda c: codecs.encode_bmp(9, 8, c[:72])),
+    ))
 
 
 def _q_image_cross_format(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3524,12 +3189,7 @@ def _image_cross_format_oracle_sql() -> str:
     with index==gray; GIF grayscale palette with index==gray; BMP
     24-bit BGR (v,v,v) rows -> gray v), which is exactly the claim
     the Spark side must reproduce through four real decoders."""
-    chain = "md5(t)"
-    parts = [chain]
-    for _ in range(4):
-        chain = f"md5({chain})"
-        parts.append(chain)
-    hx = " || ".join(parts)
+    hx = _md5_chain_sql(5)
     return f"""
     WITH base AS (
         SELECT doc_id, coalesce(text, '') AS t FROM documents
@@ -3547,7 +3207,7 @@ def _image_cross_format_oracle_sql() -> str:
                list_transform(range(0, 72),
                    i -> ('0x' || substr(hx, 1 + 2 * i, 2))::INT) AS px
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_XF_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     pbits AS (
         SELECT doc_id,
@@ -3598,22 +3258,21 @@ QUERIES["dedup_image_cross_format"] = _q_image_cross_format
 ORACLE["dedup_image_cross_format"] = _image_cross_format_oracle_sql()
 
 
-# --- image JPEG (LOSSY re-encode) dedup (r14, VERDICT r13 missing #3) --------
-# The last README-format hole closed with a full baseline-DCT pixel
-# decode (codecs.decode_jpeg_gray: Huffman entropy decode, dequantize,
-# IDCT, luma plane). JPEG is LOSSY, so the cross-format proof needs a
-# margin argument, not byte equality: the fixture encoder's all-ones
-# quant table bounds the decode error at 1/255 per pixel (pinned in
-# tests), and the planted pixels are DESIGNED so every horizontally
-# adjacent pair differs by >= 8 — px[i] = 16*(chain_byte % 15) +
-# 8*((i % 9) % 2) + 8, i.e. even/odd columns draw from disjoint level
-# sets {8,24,..} / {16,32,..} — so no dHash comparison can flip and
-# the JPEG's hash EQUALS the losslessly-planted PGM's. That is the
-# production claim exactly: perceptual dedup must collide lossy
-# re-encodes, which byte-level (digest) dedup can never catch.
-# Own plant relation (offsets 160/170M).
+# --- image JPEG (LOSSY re-encode) dedup --------------------------------------
+# A full baseline-DCT pixel decode (codecs.decode_jpeg_gray: Huffman
+# entropy decode, dequantize, IDCT, luma plane). JPEG is LOSSY, so the
+# cross-format proof needs a margin argument, not byte equality: the
+# fixture encoder's all-ones quant table bounds the decode error at
+# 1/255 per pixel (pinned in tests), and the planted pixels are
+# DESIGNED so every horizontally adjacent pair differs by >= 8 —
+# px[i] = 16*(chain_byte % 15) + 8*((i % 9) % 2) + 8, i.e. even/odd
+# columns draw from disjoint level sets {8,24,..} / {16,32,..} — so no
+# dHash comparison can flip and the JPEG's hash EQUALS the
+# losslessly-planted PGM's. That is the production claim exactly:
+# perceptual dedup must collide lossy re-encodes, which byte-level
+# (digest) dedup can never catch. Own plant relation (offsets
+# 160/170M).
 
-_JPG_PLANT_EVERY = 20
 _JPG_PGM_OFFSET = 160_000_000
 _JPG_JPEG_OFFSET = 170_000_000
 
@@ -3628,72 +3287,15 @@ def _jpeg_design_px(raw: bytes) -> bytes:
     )
 
 
-def _render_jpg_gen(container: str, offset: int):
-    """(doc_id, hx) -> (doc_id + offset, the designed 9x8 pixels as
-    PGM (lossless) or baseline JPEG (lossy, all-ones quant table))."""
-    def gen(batches):
-        import pandas as pd
-
-        from torua_spark.operators.codecs import (
-            encode_jpeg_gray,
-            encode_pgm,
-        )
-
-        for pdf in batches:
-            payloads = []
-            for h in pdf["hx"]:
-                px = _jpeg_design_px(bytes.fromhex(h))
-                if container == "pgm":
-                    payloads.append(encode_pgm(9, 8, px))
-                else:
-                    payloads.append(encode_jpeg_gray(9, 8, px))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"] + offset, "payload": payloads}
-            )
-
-    return gen
-
-
 def image_jpeg_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload): corpus payloads (fake tier) plus, per 20th
-    doc, the designed pixels as lossless PGM and as lossy JPEG."""
-    from torua_spark.operators import multimodal as mm
-    from torua_spark.sources.catalog import spread_small_scan
-
-    docs = spread_small_scan(docs)
-    media = mm.to_media_table(docs).select("doc_id", "payload")
-    # Guard at the offset SPACING (ADVICE r13) — see
-    # audio_spectral_media_with_plants for the collision argument.
-    guarded_id = F.when(
-        F.col("doc_id") < _PLANT_SPACING, F.col("doc_id")
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("image_jpeg_media: doc_id "),
-                F.col("doc_id").cast("string"),
-                F.lit(
-                    f" >= plant-offset spacing {_PLANT_SPACING}; "
-                    f"planted tiers would collide across offsets — "
-                    f"raise the offsets for this corpus"
-                ),
-            )
-        ).cast("long")
-    )
-    media = media.select(guarded_id.alias("doc_id"), "payload")
-    seeds = docs.filter(F.col("doc_id") % _JPG_PLANT_EVERY == 0).select(
-        "doc_id",
-        _md5_chain5(F.coalesce(F.col("text"), F.lit(""))).alias("hx"),
-    )
-    out_schema = "doc_id long, payload binary"
-    plants = seeds.mapInPandas(
-        _fanout_gens(*[
-            _render_jpg_gen(container, off)
-            for container, off in (("pgm", _JPG_PGM_OFFSET),
-                                   ("jpeg", _JPG_JPEG_OFFSET))
-        ]),
-        out_schema,
-    )
-    return _plants_union(media, plants)
+    """Image JPEG media: per seed the designed 9x8 pixels as lossless
+    PGM and as lossy baseline JPEG (all-ones quant table)."""
+    return _media_with_plants(docs, 5, (
+        (_JPG_PGM_OFFSET,
+         lambda c: codecs.encode_pgm(9, 8, _jpeg_design_px(c))),
+        (_JPG_JPEG_OFFSET,
+         lambda c: codecs.encode_jpeg_gray(9, 8, _jpeg_design_px(c))),
+    ))
 
 
 def _q_image_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3716,12 +3318,7 @@ def _image_jpeg_oracle_sql() -> str:
     round trip preserves every comparison BY THE MARGIN ARGUMENT
     (decode error <= 1 << the designed adjacent-pixel gap of 8), so
     the lossy container's hash is the lossless one's."""
-    chain = "md5(t)"
-    parts = [chain]
-    for _ in range(4):
-        chain = f"md5({chain})"
-        parts.append(chain)
-    hx = " || ".join(parts)
+    hx = _md5_chain_sql(5)
     return f"""
     WITH base AS (
         SELECT doc_id, coalesce(text, '') AS t FROM documents
@@ -3740,7 +3337,7 @@ def _image_jpeg_oracle_sql() -> str:
                    i -> 16 * (('0x' || substr(hx, 1 + 2 * i, 2))::INT % 15)
                         + 8 * ((i % 9) % 2) + 8) AS px
         FROM (SELECT doc_id, {hx} AS hx FROM base
-              WHERE doc_id % {_JPG_PLANT_EVERY} = 0)
+              WHERE doc_id % {_PLANT_EVERY} = 0)
     ),
     pbits AS (
         SELECT doc_id,
