@@ -1,24 +1,64 @@
-"""Per-job time attribution for one declared query (guide §1: measure
-first, empirically). Runs the query with the Spark UI's REST API on,
-times a cold and a warm pass, then prints every Spark job's duration,
-stage task-time, and description so the expensive phase is named
-instead of guessed.
+"""Per-job time attribution for one registered query, declared or
+extra (guide §1: measure first, empirically). Runs the query cold
+then warm in a `get_spark` session with the Spark event log on, each
+pass split into BUILD (constructing the DataFrame — index builds and
+driver loops fire jobs here) and EXECUTE (one count()). Every job
+carries its phase in the ``perfbench.label`` local property, and
+`perfbench.eventlog.attribute` folds the log into jobs, stages,
+tasks, task time, shuffle volume and the wall time no job covered,
+so the expensive phase is named instead of guessed.
 
 Usage: python scripts/profile_query.py <query> [sf_dir] [runs]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
+import tempfile
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from torua_spark.queries import all_queries  # noqa: E402
+from perfbench import eventlog  # noqa: E402
+from torua_spark.queries import all_queries, extra_queries  # noqa: E402
 from torua_spark.session import get_spark  # noqa: E402
+
+
+def _profile(name: str, sf_dir: str, runs: int, log_dir: str):
+    """Run the passes with the event log in ``log_dir``; return the
+    wall span of each label and its attributed totals."""
+    # The event log is a launch-time setting: it has to reach the JVM
+    # through the submit args before get_spark starts it.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        f"--conf spark.eventLog.dir=file://{log_dir}",
+        "--conf spark.eventLog.compress=false",
+        "--conf spark.eventLog.rolling.enabled=false",
+        "pyspark-shell",
+    ])
+    fn = {**extra_queries(), **all_queries()}[name]
+    spark = get_spark(f"profile_{name}")
+    sc = spark.sparkContext
+    spans: dict[str, tuple[float, float]] = {}
+
+    def timed(label: str, thunk):
+        sc.setLocalProperty(eventlog.LABEL_KEY, label)
+        t0 = time.time()
+        try:
+            return thunk()
+        finally:
+            spans[label] = (t0 * 1000.0, time.time() * 1000.0)
+            sc.setLocalProperty(eventlog.LABEL_KEY, None)
+
+    try:
+        for i in range(runs):
+            df = timed(f"run{i}|build", lambda: fn(spark, sf_dir))
+            timed(f"run{i}|execute", df.count)
+    finally:
+        spark.stop()  # closes the event log before it is read or removed
+    return spans, eventlog.attribute(log_dir, {})
 
 
 def main() -> int:
@@ -26,64 +66,23 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    # UI on for the REST API (the bench keeps it off).
-    from pyspark.sql import SparkSession
+    with tempfile.TemporaryDirectory(prefix="profile_query_") as log_dir:
+        spans, totals = _profile(name, sf_dir, runs, log_dir)
 
-    cpus = int(os.environ["SPARK_GRAFT_CPUS"])
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"profile_{name}")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4049")
-        .config("spark.driver.memory", os.environ.get("TORUA_DRIVER_MEM", "8g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    fn = all_queries()[name]
-
-    times = []
-    marks = []
-    for i in range(runs):
-        spark.sparkContext.setJobDescription(f"{name} run {i}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        times.append(round(time.perf_counter() - t0, 3))
-        marks.append(time.time() * 1000)
-        spark.sparkContext.setJobDescription(None)
-
-    app_id = spark.sparkContext.applicationId
-    base = f"http://localhost:4049/api/v1/applications/{app_id}"
-    jobs = json.load(urllib.request.urlopen(f"{base}/jobs?status=succeeded"))
-    print(f"query={name} sf_dir={sf_dir} wall per run: {times}")
-    total_by_run: dict[str, float] = {}
-    rows = []
-    for j in sorted(jobs, key=lambda j: j["jobId"]):
-        sub = j.get("submissionTime", "")
-        dur = None
-        if j.get("completionTime") and j.get("submissionTime"):
-            from datetime import datetime
-
-            f = "%Y-%m-%dT%H:%M:%S.%f%Z"
-            t1 = datetime.strptime(j["completionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-            t0_ = datetime.strptime(j["submissionTime"].replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f")
-            dur = (t1 - t0_).total_seconds()
-        desc = (j.get("description") or j.get("name") or "")[:110]
-        run_tag = desc.split(" run ")[-1][:1] if " run " in desc else "?"
-        if dur is not None:
-            total_by_run[run_tag] = total_by_run.get(run_tag, 0.0) + dur
-        rows.append((j["jobId"], dur, j.get("numTasks"), desc, sub))
-    for jid, dur, ntasks, desc, sub in rows:
-        print(f"  job {jid:4d}  {dur if dur is not None else -1:8.3f}s  tasks={ntasks:5d}  {desc}")
-    print("sum of job durations by run:", {k: round(v, 3) for k, v in sorted(total_by_run.items())})
-    spark.stop()
+    print(f"query={name} sf_dir={sf_dir}")
+    for label, (lo, hi) in spans.items():
+        t = totals.get(label, {})
+        jobs = t.get("intervals", [])
+        outside = (hi - lo - eventlog.covered_ms(jobs, lo, hi)) / 1000.0
+        print(
+            f"{label:14s} wall={(hi - lo) / 1000.0:8.3f}s  "
+            f"jobs={int(t.get('jobs', 0)):4d} stages={int(t.get('stages', 0)):4d} "
+            f"tasks={int(t.get('tasks', 0)):6d}  task={t.get('task_s', 0.0):8.3f}s  "
+            f"shuffle r/w={t.get('shuffle_read_mb', 0.0):.1f}/"
+            f"{t.get('shuffle_write_mb', 0.0):.1f} MB  outside jobs={outside:.3f}s"
+        )
+        for a, b in jobs:
+            print(f"    job at +{(a - lo) / 1000.0:8.3f}s  {(b - a) / 1000.0:8.3f}s")
     return 0
 
 

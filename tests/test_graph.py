@@ -69,32 +69,101 @@ def test_pagerank_vs_power_iteration(spark, sf_dir):
         assert abs(got[v] - ranks[v]) < 1e-3, (v, got[v], ranks[v])
 
 
-def test_state_modes_agree(spark, sf_dir):
+# A small graph for the superstep operators, one component: a path
+# (CC needs 22 rounds), a cycle, a star, a 6-clique (the 3-core) and
+# a triangle strip hung off the clique that 3-core peeling eats one
+# vertex per round (13 rounds) — every loop iterates for real.
+_SYN_EDGES = (
+    [(i, i + 1) for i in range(11)]
+    + [(20 + i, 20 + (i + 1) % 10) for i in range(10)]
+    + [(40, 41 + i) for i in range(7)]
+    + [(60 + i, 60 + j) for i in range(6) for j in range(i + 1, 6)]
+    + [(11, 60), (29, 40), (47, 65)]
+    + [(v, v + 1) for v in range(80, 91)]
+    + [(v, v + 2) for v in range(80, 90)]
+    + [(90, 60), (91, 61), (91, 62)]
+)
+
+
+def _superstep_op(spark, name):
+    """A thunk building operator ``name`` over _SYN_EDGES."""
+    from torua_spark.operators import dedup as dd, graph as g, graphrag as gr
+
+    def edges():
+        return spark.createDataFrame(_SYN_EDGES, "src long, dst long")
+
+    def seeds():
+        return spark.createDataFrame([(0,), (40,)], "id long")
+
+    def weighted():
+        return spark.createDataFrame(
+            [(a, b, (a * 7 + b * 3) % 5 + 1) for a, b in _SYN_EDGES],
+            "src long, dst long, w long",
+        )
+
+    def canonical():
+        ids = sorted({v for e in _SYN_EDGES for v in e})
+        docs = spark.createDataFrame(
+            [(v, (v * 37) % 101) for v in ids], "doc_id long, n_chars long"
+        )
+        pairs = edges().toDF("doc_a", "doc_b")
+        return dd.canonicalize_near_dups(docs, pairs=pairs)
+
+    return {
+        "connected_components": lambda: g.connected_components(edges()),
+        "bfs_hop_histogram": lambda: g.bfs_hop_histogram(edges(), seeds(), 4),
+        "pagerank": lambda: g.pagerank(edges()),
+        "shortest_paths": lambda: g.shortest_paths(edges(), 0, None),
+        "weighted_shortest_paths": lambda: g.weighted_shortest_paths(weighted(), 0),
+        "label_propagation": lambda: g.label_propagation(edges()),
+        "k_core": lambda: g.k_core(edges(), 3),
+        "canonicalize_near_dups": canonical,
+        "personalized_pagerank": lambda: gr.personalized_pagerank(edges(), seeds()),
+    }[name]
+
+
+# Spark jobs each operator fired building and collecting its result
+# over _SYN_EDGES (local[4], broadcast shape) while every operator
+# still carried its own copy of the loop. The shared superstep driver
+# must not exceed them.
+_SUPERSTEP_JOB_CEILING = {
+    "connected_components": 83,
+    "bfs_hop_histogram": 25,
+    "pagerank": 33,
+    "shortest_paths": 81,
+    "weighted_shortest_paths": 20,
+    "label_propagation": 23,
+    "k_core": 57,
+    "canonicalize_near_dups": 37,
+    "personalized_pagerank": 40,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SUPERSTEP_JOB_CEILING))
+def test_shuffle_shape_matches_broadcast(spark, monkeypatch, name):
     """The broadcast and shuffle loop bodies are alternative physical
     shapes of the SAME algorithm — results must be identical, so the
-    auto threshold can move without changing any answer."""
-    from torua_spark.operators.graph import (
-        connected_components,
-        copurchase_vertex_edges,
-        pagerank,
-    )
-    from torua_spark.sources.catalog import load_table
+    broadcast threshold can move without changing any answer."""
+    from torua_spark.operators import graph as g
 
-    edges = copurchase_vertex_edges(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    ).localCheckpoint()
+    build = _superstep_op(spark, name)
+    broadcast = sorted(map(tuple, build().collect()))
+    monkeypatch.setattr(g, "_BROADCAST_STATE_MAX_VERTICES", -1)
+    assert sorted(map(tuple, build().collect())) == broadcast
+    assert broadcast
 
-    cc = {
-        m: sorted(map(tuple, connected_components(edges, state_mode=m).collect()))
-        for m in ("broadcast", "chained")
-    }
-    assert cc["broadcast"] == cc["chained"]
 
-    pr = {
-        m: sorted(map(tuple, pagerank(edges, state_mode=m).collect()))
-        for m in ("broadcast", "chained")
-    }
-    assert pr["broadcast"] == pr["chained"]
+@pytest.mark.parametrize("name", sorted(_SUPERSTEP_JOB_CEILING))
+def test_superstep_job_ceiling(spark, name):
+    sc = spark.sparkContext
+    group = f"superstep_jobs_{name}"
+    sc.setJobGroup(group, group)
+    try:
+        _superstep_op(spark, name)().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= _SUPERSTEP_JOB_CEILING[name]
 
 
 def test_recommend_items_matches_oracle(spark, sf_dir):

@@ -2350,8 +2350,9 @@ class TestJpegCodec:
         assert decode_jpeg_gray(b"not a jpeg") is None
         assert decode_jpeg_gray(b"\xff\xd8\xff\xd9") is None
         base = encode_jpeg_gray(8, 8, bytes(64))
-        # progressive (SOF2) and arithmetic (SOF9) frames: PIL-tier
-        # territory, loudly not-this-decoder
+        # progressive (SOF2) and arithmetic (SOF9) frames: loudly
+        # not-this-decoder — such frames get header metadata in
+        # _decode_batch and the md5 fake tier in _dhash_batch
         assert decode_jpeg_gray(
             base.replace(b"\xff\xc0", b"\xff\xc2", 1)
         ) is None

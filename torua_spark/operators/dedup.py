@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from torua_spark.functions.text import jaccard, md5_32, tokens
 
 from torua_spark.functions.compat import round4
+from torua_spark.operators.graph import _min_labels, _undirected
 from torua_spark.sources.io import (
     PersistedIndex,
     clear_index_leftovers,
@@ -563,11 +564,6 @@ def canonicalize_near_dups(documents: DataFrame, threshold: float = 0.5,
     only, never corpus-wide.
 
     Returns (cluster, n_docs, canonical_doc, chars_dropped)."""
-    from torua_spark.operators.graph import (
-        _iteration_partitions,
-        _use_broadcast_state,
-    )
-
     # ``pairs``: pass a precomputed/persisted (doc_a, doc_b) relation
     # to share the detection tier with other consumers (CorpusPipeline
     # materializes it once for cluster + membership use).
@@ -577,34 +573,16 @@ def canonicalize_near_dups(documents: DataFrame, threshold: float = 0.5,
             .select("doc_a", "doc_b")
             .localCheckpoint()
         )
-    und = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")).unionByName(
-        pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-    ).localCheckpoint()
-    n_und = und.count()
     # The pair graph is dup-docs only — usually minuscule next to the
-    # corpus, so the label loop gets loop-sized shuffle partitions and
-    # (while the label state fits the broadcast budget) a chained
-    # BroadcastExchange loop body, same regime logic as graph.py.
-    with _iteration_partitions(und, n_und):
-        labels = (
-            und.select(F.col("a").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
-            .localCheckpoint()
-        )
-        bcast = _use_broadcast_state("auto", n_und, labels.count())
-        for _ in range(rounds):
-            state = F.broadcast(labels) if bcast else labels
-            msgs = und.join(state, und.a == state.id).select(
-                F.col("b").alias("id"), F.col("label")
-            )
-            labels = (
-                msgs.unionByName(labels.select("id", "label"))
-                .groupBy("id")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=False)
-            )
-        labels = labels.localCheckpoint(eager=True)
+    # corpus. Min-label messages are idempotent, so the symmetrized
+    # pairs skip the dedup shuffle.
+    labels = _min_labels(
+        _undirected(
+            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+            dedup=False,
+        ),
+        rounds,
+    )
     mem = labels.join(
         documents.select(F.col("doc_id").alias("id"), "n_chars"), "id"
     )

@@ -6,8 +6,9 @@ The reference's design stores vertices hashed across shards with edges
 co-located at their source vertex. The Spark realization: vertex and
 edge DataFrames, traversal = self-joins on dst=src, co-location =
 repartition on src (the analog of torua's edge placement), iterative
-algorithms (connected components, PageRank) = loops of joins with
-``localCheckpoint`` to truncate lineage each round (the Pregel pattern
+algorithms (connected components, PageRank, BFS, k-core, ...) = loops
+of joins with ``localCheckpoint`` to truncate lineage each round, all
+run by one superstep driver, `_supersteps` (the Pregel pattern
 re-expressed on DataFrames, since PySpark has no GraphX binding).
 
 Scale notes:
@@ -32,34 +33,15 @@ from torua_spark.functions.compat import round4
 
 _ROWS_PER_PARTITION = 50_000
 
-# Iterative algorithms have two viable loop-body shapes and the right
-# one depends on the per-round STATE size (both stay lazily chained —
-# eager=False checkpoints, no per-round driver round-trip):
-#
-# - 'broadcast' — the vertex-state relation enters the edge join via a
-#   chained BroadcastExchange (F.broadcast on a lazy frame is not a
-#   collect), so neither the big static edge list nor the state is
-#   shuffled for the join; the only per-round shuffle is the message
-#   aggregation. Measured 1.5-2.5x over 'chained' on the co-purchase
-#   graph at sf0.1 (and the win grows with edge size — the edge side
-#   never moves). Each in-flight round holds one state broadcast
-#   (~16 B/vertex), so the budget bounds vertices, multiplied by the
-#   chained-round window.
-# - 'chained' — shuffle join per round; nothing is broadcast, so it is
-#   the only safe shape when the vertex state itself is huge.
-#
-# 'auto' picks broadcast whenever the state fits the budget; a
-# 1B-vertex graph falls back to 'chained', where the deployment answer
-# is an edge table bucketed on the join key.
+# The vertex state enters each round's edge join through a chained
+# BroadcastExchange while it fits this many vertices (~16 B/vertex per
+# in-flight round): the big static edge list then never moves inside
+# the loop and the only per-round shuffle is the message aggregation —
+# measured 1.5-2.5x over the shuffle join on the co-purchase graph at
+# sf0.1. Past it the state joins by shuffle, the shape for a vertex set
+# too big to broadcast (there the deployment answer is an edge table
+# bucketed on the join key). Both shapes give identical results.
 _BROADCAST_STATE_MAX_VERTICES = 8_000_000
-
-
-def _use_broadcast_state(mode: str, n_edges: int, n_vertices: int) -> bool:
-    if mode == "broadcast":
-        return True
-    if mode == "chained":
-        return False
-    return n_vertices <= _BROADCAST_STATE_MAX_VERTICES
 
 
 @contextmanager
@@ -77,6 +59,80 @@ def _iteration_partitions(df: DataFrame, n_rows: int):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@contextmanager
+def _supersteps(edges: DataFrame, vertex_cols: tuple[str, ...] = ("a",)):
+    """The superstep driver of every iterative graph operator — the
+    Pregel pattern on DataFrames: each round joins the vertex state
+    against the static edge list (the messages) and aggregates them
+    into the next state.
+
+    Checkpoints the loop-invariant ``edges`` once, then runs ONE stats
+    job (edge count plus approximate distinct counts over
+    ``vertex_cols``, summed — an upper bound on |V| for a directed
+    edge list) that picks the join shape and sizes the shuffle
+    partitions (`_iteration_partitions`) for the whole ``with`` block,
+    so the caller's state set-up and post-loop work run at the loop
+    width too. Yields ``(edges, run)``, with
+
+    ``run(state, body, rounds, probe=None, every=1, cap_error=None)``
+
+    chaining ``body(state, r)`` for rounds ``r = 1, 2, ...``. ``body``
+    receives the state already wrapped for the edge join (broadcast
+    while |V| fits `_BROADCAST_STATE_MAX_VERTICES`) and returns the
+    next state. Without a ``probe`` exactly ``rounds`` rounds run and
+    the result is materialized by one eager checkpoint. With one,
+    ``rounds`` is a ceiling: ``probe(state)`` runs before the first
+    round and after every ``every`` rounds (the last batch clipped to
+    the ceiling), and the loop stops at the first value equal to the
+    previous one — the probed state is already materialized. An
+    operator whose extra rounds are idempotent returns its state at
+    the ceiling; with ``cap_error(rounds_done, probe_value)`` it
+    raises ``ValueError`` with that message instead.
+
+    Cost: each round is a ``localCheckpoint(eager=False)``, which cuts
+    the lineage so planning stays O(1) per round instead of
+    re-deriving every earlier round. It does NOT fuse the loop into
+    one Spark job: under AQE, building a round's plan runs its
+    exchanges (the state broadcast, the message shuffle) as jobs
+    before any action. Measured at local[4] on a 70-edge graph: 2 jobs
+    per `pagerank` iteration and 3 per `label_propagation` round, and
+    every job of a run but one fires before its first action. A probe
+    costs its own aggregate jobs, which ``every`` amortizes. Lineage
+    is cut with driver-local checkpoints; a real cluster would
+    checkpoint to object storage for fault tolerance."""
+    edges = edges.localCheckpoint()
+    stats = edges.agg(
+        F.count(F.lit(1)),
+        *[F.approx_count_distinct(c) for c in vertex_cols],
+    ).collect()[0]
+    n_edges, n_vertices = stats[0], sum(stats[1:])
+    wrap = F.broadcast if n_vertices <= _BROADCAST_STATE_MAX_VERTICES else (lambda d: d)
+
+    def run(state, body, rounds, probe=None, every=1, cap_error=None):
+        def step(s: DataFrame, r: int) -> DataFrame:
+            return body(wrap(s), r).localCheckpoint(eager=False)
+
+        if probe is None:
+            for r in range(1, rounds + 1):
+                state = step(state, r)
+            return state.localCheckpoint(eager=True)
+        prev, done = probe(state), 0
+        while done < rounds:
+            for _ in range(min(every, rounds - done)):
+                done += 1
+                state = step(state, done)
+            cur = probe(state)
+            if cur == prev:
+                return state
+            prev = cur
+        if cap_error is not None:
+            raise ValueError(cap_error(done, prev))
+        return state
+
+    with _iteration_partitions(edges, n_edges):
+        yield edges, run
 
 
 def copurchase_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -162,63 +218,53 @@ def _undirected(edges: DataFrame, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
+def _id_labels(und: DataFrame) -> DataFrame:
+    """(id, label = id) for every vertex of the symmetric edge list."""
+    return (
+        und.select(F.col("a").alias("id"))
+        .distinct()
+        .withColumn("label", F.col("id"))
+        .localCheckpoint()
+    )
+
+
+def _min_labels(und: DataFrame, rounds: int, **loop) -> DataFrame:
+    """(id, label) by min-label propagation over the symmetric edge
+    list ``und`` (a, b): labels start as the vertex ids and each round
+    every vertex takes the min of its own and its neighbors' labels.
+    ``loop`` passes the probe arguments of `_supersteps`' ``run``."""
+    with _supersteps(und) as (und, run):
+        labels = _id_labels(und)
+
+        def _round(state: DataFrame, _r: int) -> DataFrame:
+            msgs = und.join(state, und.a == state.id).select(
+                F.col("b").alias("id"), F.col("label")
+            )
+            return (
+                msgs.unionByName(state.select("id", "label"))
+                .groupBy("id")
+                .agg(F.min("label").alias("label"))
+            )
+
+        return run(labels, _round, rounds, **loop)
+
+
 def connected_components(edges: DataFrame, max_iter: int = 25,
-                         check_every: int = 2,
-                         state_mode: str = "auto",
-                         dedup_undirected: bool = True) -> DataFrame:
-    """B6 — connected components by iterative min-label propagation.
-
-    Vertices carry their own id as the initial label; each round every
-    vertex takes the min of its own and its neighbors' labels; fixpoint
-    = component membership with label = min vertex id in the component.
-
-    The convergence check (a label-sum aggregate) runs every
-    `check_every` rounds: the rounds in between stay LAZY (eager=False
-    checkpoints) and execute as one Spark job, so the per-round driver
-    round-trip is amortized — measured ~2x on the co-purchase graph.
-    Worst case runs check_every-1 extra (idempotent) rounds past the
-    fixpoint. Lineage is truncated with localCheckpoint (driver-local;
-    on a real cluster use rdd checkpointing to object storage for
-    fault tolerance). `state_mode` picks the loop-body join shape —
-    see _use_broadcast_state.
+                         undirected_dedup: bool = True) -> DataFrame:
+    """B6 — connected components by iterative min-label propagation:
+    the fixpoint labels every vertex with the min vertex id of its
+    component. ``max_iter`` is a ceiling: a label-sum probe runs every
+    2 rounds and the loop stops at the first unchanged sum (labels
+    only fall, so an unchanged sum is the fixpoint); the worst case
+    runs one idempotent round past it. ``undirected_dedup=False``
+    skips the distinct over the symmetrized edges (see `_undirected`).
 
     Input edges must already be over a single numeric vertex-id space.
     """
-    # Materialize the (derived) edge list once — the loop body must join
-    # against a checkpointed table, not re-derive orders ⋈ lineitem ⋈
-    # distinct every iteration.
-    und = _undirected(edges, dedup=dedup_undirected).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
-        labels = (
-            und.select(F.col("a").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
-            .localCheckpoint()
-        )
-        n_vertices = labels.count()
-        bcast = _use_broadcast_state(state_mode, n_edges, n_vertices)
-        prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-        done = 0
-        while done < max_iter:
-            for _ in range(min(check_every, max_iter - done)):
-                state = F.broadcast(labels) if bcast else labels
-                msgs = (
-                    und.join(state, und.a == state.id)
-                    .select(F.col("b").alias("id"), F.col("label"))
-                )
-                labels = (
-                    msgs.unionByName(labels.select("id", "label"))
-                    .groupBy("id")
-                    .agg(F.min("label").alias("label"))
-                    # truncate lineage; materialized by the next check
-                    .localCheckpoint(eager=False)
-                )
-                done += 1
-            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+    labels = _min_labels(
+        _undirected(edges, dedup=undirected_dedup), max_iter,
+        probe=lambda s: s.agg(F.sum("label")).collect()[0][0], every=2,
+    )
     return labels.select(F.col("id").alias("vertex"), F.col("label").alias("component"))
 
 
@@ -231,35 +277,29 @@ def bfs_hop_histogram(edges: DataFrame, seed_ids: DataFrame,
 
     State is the SPARSE reached set (id, hops) — rounds only touch the
     frontier's neighborhood, not the full vertex table, so early
-    rounds are proportional to the expanding ball, not |V|. Rounds are
-    chained lazily (eager=False checkpoints, one Spark job); min-
-    aggregation makes re-discovery idempotent, the same Pregel shape
-    as `connected_components`."""
-    und = _undirected(edges).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
+    rounds are proportional to the expanding ball, not |V|; min-
+    aggregation makes re-discovery idempotent."""
+    with _supersteps(_undirected(edges)) as (und, run):
         vertices = und.select(F.col("a").alias("id")).distinct().localCheckpoint()
-        n_vertices = vertices.count()
+        n_vertices = vertices.count()  # exact: it is in the output
         dist = (
             seed_ids.select("id")
             .join(vertices, "id", "left_semi")
             .select("id", F.lit(0).cast("int").alias("hops"))
             .localCheckpoint()
         )
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
-        for _ in range(max_hops):
-            state = F.broadcast(dist) if bcast else dist
-            msgs = (
-                und.join(state, und.a == state.id)
-                .select(F.col("b").alias("id"), (F.col("hops") + F.lit(1)).alias("hops"))
+
+        def _round(state: DataFrame, _r: int) -> DataFrame:
+            msgs = und.join(state, und.a == state.id).select(
+                F.col("b").alias("id"), (F.col("hops") + F.lit(1)).alias("hops")
             )
-            dist = (
-                msgs.unionByName(dist.select("id", "hops"))
+            return (
+                msgs.unionByName(state.select("id", "hops"))
                 .groupBy("id")
                 .agg(F.min("hops").cast("int").alias("hops"))
-                .localCheckpoint(eager=False)
             )
-        dist = dist.localCheckpoint(eager=True)
+
+        dist = run(dist, _round, max_hops)
         n_reached = dist.count()
     hist = dist.groupBy("hops").agg(F.count(F.lit(1)).alias("n_vertices"))
     spark = edges.sparkSession
@@ -277,77 +317,49 @@ def copurchase_vertex_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame
     return e.select((F.col("src") * 2).alias("src"), (F.col("dst") * 2 + 1).alias("dst"))
 
 
+def _transition(edges: DataFrame, weight_col: str | None = None) -> DataFrame:
+    """(src, dst, w) with the loop-invariant out-degree folded in once:
+    w = 1/out_deg(src) — or, given ``weight_col``, w_ij / sum_j w_ij
+    (rank flows in proportion to edge weight) — so a rank loop joins
+    only this relation per round, not the degrees again."""
+    if weight_col is None:
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
+        w = F.lit(1.0) / F.col("out_deg")
+    else:
+        deg = edges.groupBy("src").agg(
+            F.sum(F.col(weight_col).cast("double")).alias("out_deg")
+        )
+        w = F.col(weight_col).cast("double") / F.col("out_deg")
+    return edges.join(deg, "src").select("src", "dst", w.alias("w")).localCheckpoint()
+
+
 def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
-             state_mode: str = "auto",
              weight_col: str | None = None) -> DataFrame:
     """B6 — PageRank via iterative DataFrame joins (directed edges).
 
     Standard power iteration: rank = (1-d) + d * sum(incoming rank /
-    out_degree). Vertices with no outgoing edges contribute nothing
-    (classic simplified formulation). Output rounded to 4 dp.
-
-    With a fixed iteration count there is NO per-round driver
-    round-trip in either state mode: every round is an eager=False
-    checkpoint and the whole power iteration executes as one Spark job
-    when the result materializes. The 'auto' pick broadcasts the rank
-    state into the edge join while it fits the broadcast budget
-    (chained BroadcastExchange — the edge list is never shuffled
-    inside the loop; measured 1.5-2x at sf0.1), falling back to the
-    shuffle join for vertex sets past `_BROADCAST_STATE_MAX_VERTICES`.
-    """
-    # Loop-invariant inputs materialized once (edges is usually a
-    # derived join — without this every iteration re-runs it).
-    edges = edges.localCheckpoint()
-    n_edges = edges.count()
-    with _iteration_partitions(edges, n_edges):
+    out_degree), or with ``weight_col`` incoming rank in proportion to
+    edge weight. Vertices with no outgoing edges contribute nothing
+    (classic simplified formulation). A fixed iteration count, no
+    probe. Output rounded to 4 dp."""
+    with _supersteps(edges, ("src", "dst")) as (edges, run):
         vertices = (
             edges.select(F.col("src").alias("id"))
             .unionByName(edges.select(F.col("dst").alias("id")))
             .distinct()
             .localCheckpoint()
         )
-        n_vertices = vertices.count()
-        # Fold the (loop-invariant) out-degree into the edge list ONCE:
-        # each edge carries w = 1/out_deg(src) — or, when weight_col is
-        # given, w_ij / sum_j w_ij (weighted PageRank: rank flows in
-        # proportion to edge weight) — so the loop body never joins
-        # `deg` again: one join per round instead of two.
-        if weight_col is None:
-            deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-            ew = (
-                edges.join(deg, "src")
-                .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"))
-                .localCheckpoint()
-            )
-        else:
-            tot = edges.groupBy("src").agg(
-                F.sum(F.col(weight_col).cast("double")).alias("wsum")
-            )
-            ew = (
-                edges.join(tot, "src")
-                .select(
-                    "src", "dst",
-                    (F.col(weight_col).cast("double") / F.col("wsum")).alias("w"),
-                )
-                .localCheckpoint()
-            )
-        # Zero-contribution rows for every vertex replace the final
+        ew = _transition(edges, weight_col)
+        # Zero-contribution rows for every vertex replace a final
         # vertices left-join: dangling/no-inbound vertices survive the
-        # groupBy, so rank update = union + ONE aggregation shuffle.
-        # No checkpoint of its own (r14): a literal projection of the
-        # already-checkpointed vertices is O(1)-deep lineage — the
-        # extra eager checkpoint was one more job and one more
-        # resident block for zero plan benefit.
+        # groupBy, so a rank update = union + ONE aggregation shuffle.
         zeros = vertices.select("id", F.lit(0.0).alias("c"))
-        bcast = _use_broadcast_state(state_mode, n_edges, n_vertices)
-        ranks = vertices.withColumn("rank", F.lit(1.0))
-        for _ in range(iterations):
-            state = F.broadcast(ranks) if bcast else ranks
-            contribs = (
-                ew.join(state, ew.src == state.id)
-                .select(F.col("dst").alias("id"), (F.col("rank") * F.col("w")).alias("c"))
+
+        def _round(state: DataFrame, _r: int) -> DataFrame:
+            contribs = ew.join(state, ew.src == state.id).select(
+                F.col("dst").alias("id"), (F.col("rank") * F.col("w")).alias("c")
             )
-            ranks = (
+            return (
                 contribs.unionByName(zeros)
                 .groupBy("id")
                 .agg(F.sum("c").alias("s"))
@@ -355,22 +367,20 @@ def pagerank(edges: DataFrame, iterations: int = 10, damping: float = 0.85,
                     "id",
                     (F.lit(1.0 - damping) + F.lit(damping) * F.col("s")).alias("rank"),
                 )
-                # eager=False: lineage is cut every round but nothing runs
-                # until the chain is materialized below — one job for
-                # all iterations instead of one per round.
-                .localCheckpoint(eager=False)
             )
-        # Materialize while the iteration partitioning is in force.
-        ranks = ranks.localCheckpoint(eager=True)
+
+        ranks = run(vertices.withColumn("rank", F.lit(1.0)), _round, iterations)
     return ranks.select(F.col("id").alias("vertex"), round4("rank").alias("rank"))
 
 
 # Unbounded-BFS safety rail: probe for convergence every batch of
-# rounds (amortizing the count() job), and refuse to return a
+# rounds (amortizing the probe's jobs), and refuse to return a
 # possibly-incomplete reached set if a pathological graph (a 100k-hop
 # path) is still growing at the cap — loud beats silently partial.
 SSSP_CONVERGE_BATCH = 3
 SSSP_CONVERGE_CAP = 64
+# probes fall on batch ends, so the cap bites at the first one at or past it
+_SSSP_ROUNDS = -(-SSSP_CONVERGE_CAP // SSSP_CONVERGE_BATCH) * SSSP_CONVERGE_BATCH
 
 
 def shortest_paths(edges: DataFrame, source_id: int,
@@ -393,34 +403,19 @@ def shortest_paths(edges: DataFrame, source_id: int,
     ``max_hops=None`` (the Cypher ``[:R*]`` unbounded hop) runs BFS to
     CONVERGENCE: the reached set grows by >= 1 vertex per round until
     the component is exhausted, so an unchanged count over a batch of
-    rounds proves the fixpoint; the count() probe runs once per
-    SSSP_CONVERGE_BATCH rounds (amortized, graph_k_core-style), extra
-    post-fixpoint rounds are idempotent (struct-min), and a graph
-    still growing at SSSP_CONVERGE_CAP rounds raises rather than
-    return a silently partial reached set.
+    rounds proves the fixpoint; the count probe runs once per
+    SSSP_CONVERGE_BATCH rounds, extra post-fixpoint rounds are
+    idempotent (struct-min), and a graph still growing at
+    SSSP_CONVERGE_CAP rounds raises rather than return a silently
+    partial reached set.
 
-    Scale shape — same sparse-frontier Pregel skeleton as
-    `bfs_hop_histogram`: state is the reached set only, rounds are
-    lazily chained eager=False checkpoints (one Spark job total per
-    batch), the broadcast-state mode keeps the big edge list
-    unshuffled inside the loop, and message volume per round is the
+    Scale shape — the sparse-frontier skeleton of `bfs_hop_histogram`:
+    state is the reached set only and message volume per round is the
     frontier's neighborhood, not |E|. At 100 TB the edge table should
     be bucketed on `a` so the per-round join is shuffle-free on the
     edge side.
     """
-    und = _undirected(edges, dedup=undirected_dedup).localCheckpoint()
-    # ONE stats job replaces und.count() + a materialized distinct
-    # vertex relation + its count (r14, guide §1.2: the BFS result
-    # contains only REACHED vertices, so the vertex relation was never
-    # in the output path — it existed only for its count and the
-    # source-row seed, both of which this aggregate / the filter below
-    # provide without the extra shuffle + checkpoint + jobs).
-    stats = und.agg(
-        F.count(F.lit(1)).alias("ne"),
-        F.approx_count_distinct("a").alias("nv"),
-    ).collect()[0]
-    n_edges, n_vertices = stats["ne"], stats["nv"]
-    with _iteration_partitions(und, n_edges):
+    with _supersteps(_undirected(edges, dedup=undirected_dedup)) as (und, run):
         dist = (
             und.filter(F.col("a") == F.lit(source_id))
             .select(F.col("a").alias("id"))
@@ -432,63 +427,44 @@ def shortest_paths(edges: DataFrame, source_id: int,
             )
             .localCheckpoint()
         )
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
 
-        def _round(d: DataFrame, r: int) -> DataFrame:
-            # FRONTIER-only messages (r14, guide §2.3): only vertices
-            # first reached in the previous round send. Equivalent to
-            # all-state sends: a vertex's hops is final at first reach
-            # (BFS level order), every minimal-hops predecessor of a
-            # vertex is first reached in the SAME round, so all
-            # candidate (hops, via) messages that can win the
-            # struct-min arrive together the round after — re-sends
-            # from older vertices only duplicate messages the min
-            # already consumed. Message volume per round drops from
-            # |N(reached)| (~|E| once the component saturates) to
-            # |N(frontier)|, and the per-round broadcast ships the
-            # frontier, not the whole reached set.
-            frontier = d.filter(F.col("hops") == F.lit(r - 1))
-            state = F.broadcast(frontier) if bcast else frontier
-            msgs = und.join(state, und.a == state.id).select(
+        def _round(state: DataFrame, r: int) -> DataFrame:
+            # FRONTIER-only messages: only vertices first reached in
+            # the previous round send. A vertex's hops is final at
+            # first reach (BFS level order) and every minimal-hops
+            # predecessor of a vertex is first reached in the SAME
+            # round, so every (hops, via) message that can win the
+            # struct-min arrives together the round after — re-sends
+            # from older vertices only repeat messages the min already
+            # consumed.
+            frontier = state.filter(F.col("hops") == F.lit(r - 1))
+            msgs = und.join(frontier, und.a == frontier.id).select(
                 F.col("b").alias("id"),
                 (F.col("hops") + F.lit(1)).cast("int").alias("hops"),
                 F.col("a").cast("long").alias("via"),
             )
             return (
-                msgs.unionByName(d.select("id", "hops", "via"))
+                msgs.unionByName(state.select("id", "hops", "via"))
                 .groupBy("id")
                 # struct-min = arg-min: smallest (hops, via) pair wins,
                 # making the surviving predecessor deterministic.
                 .agg(F.min(F.struct("hops", "via")).alias("s"))
                 .select("id", F.col("s.hops").alias("hops"), F.col("s.via").alias("via"))
-                .localCheckpoint(eager=False)
             )
 
-        if max_hops is None:
-            reached = dist.count()
-            rounds = 0
-            while True:
-                for _ in range(SSSP_CONVERGE_BATCH):
-                    rounds += 1
-                    dist = _round(dist, rounds)
-                dist = dist.localCheckpoint(eager=True)
-                n = dist.count()
-                if n == reached:
-                    break  # no growth over a full batch = fixpoint
-                reached = n
-                if rounds >= SSSP_CONVERGE_CAP:
-                    raise ValueError(
-                        f"unbounded shortestPath still expanding after "
-                        f"{rounds} BFS rounds ({n} vertices reached) — "
-                        f"graph diameter exceeds SSSP_CONVERGE_CAP="
-                        f"{SSSP_CONVERGE_CAP}; pass an explicit *..k "
-                        f"bound for a partial traversal"
-                    )
-        else:
-            for r in range(1, max_hops + 1):
-                dist = _round(dist, r)
-            dist = dist.localCheckpoint(eager=True)
-    return dist
+        if max_hops is not None:
+            return run(dist, _round, max_hops)
+        return run(
+            dist, _round, _SSSP_ROUNDS,
+            probe=lambda s: s.count(), every=SSSP_CONVERGE_BATCH,
+            cap_error=lambda rounds, n: (
+                f"unbounded shortestPath still expanding after "
+                f"{rounds} BFS rounds ({n} vertices reached) — "
+                f"graph diameter exceeds SSSP_CONVERGE_CAP="
+                f"{SSSP_CONVERGE_CAP}; pass an explicit *..k "
+                f"bound for a partial traversal"
+            ),
+        )
 
 
 def reconstruct_path(paths: DataFrame, target_id: int) -> list[int]:
@@ -536,7 +512,7 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
     `rounds = |V| - 1`; a bounded k is the weighted analog of Cypher's
     `[*..k]` and keeps the job count fixed.
 
-    ``rounds=None`` (round 9 — the weighted twin of
+    ``rounds=None`` (the weighted twin of
     ``shortest_paths(max_hops=None)``) runs to CONVERGENCE. The BFS
     count probe is NOT sufficient here: distances keep improving
     after first reach, so the fixpoint probe compares THREE monotone
@@ -552,8 +528,7 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
     catches a negative-cycle input loudly instead of looping).
 
     Scale shape: identical to `shortest_paths` — sparse state, one
-    aggregation shuffle per round, lazily chained checkpoints, the
-    edge list never re-shuffled in broadcast-state mode."""
+    aggregation shuffle per round."""
     und = edges.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), "w"
     ).unionByName(
@@ -564,18 +539,9 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
         # skips this shuffle when the caller's input is already one row
         # per (src, dst) AND src/dst ids cannot collide (the bipartite
         # vertex encoding) — reversal then cannot create a duplicate
-        # (a, b), so the groupBy is the identity (r14).
+        # (a, b), so the groupBy is the identity.
         und = und.groupBy("a", "b").agg(F.min("w").alias("w"))
-    und = und.localCheckpoint()
-    # ONE stats job replaces und.count() + the materialized vertex
-    # relation + its count (r14) — the result contains only reached
-    # vertices, and n_vertices only feeds the broadcast-mode pick.
-    stats = und.agg(
-        F.count(F.lit(1)).alias("ne"),
-        F.approx_count_distinct("a").alias("nv"),
-    ).collect()[0]
-    n_edges, n_vertices = stats["ne"], stats["nv"]
-    with _iteration_partitions(und, n_edges):
+    with _supersteps(und) as (und, run):
         dist = (
             und.filter(F.col("a") == F.lit(source_id))
             .select(F.col("a").alias("id"))
@@ -588,27 +554,24 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
             )
             .localCheckpoint()
         )
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
 
-        def _round(d: DataFrame) -> DataFrame:
-            # DELTA messages (r14, guide §2.3): only vertices whose
-            # (dist, via) changed last round send. Equivalent to
-            # full re-sends: a vertex that did not change would resend
-            # byte-identical messages, which are no-ops under the
+        def _round(state: DataFrame, _r: int) -> DataFrame:
+            # DELTA messages: only vertices whose (dist, via) changed
+            # last round send. A vertex that did not change would
+            # resend byte-identical messages, no-ops under the
             # struct-min (its last change already delivered its
             # current dist+w to every neighbor, and the state keeps
             # the min of everything ever received). ``act`` marks the
             # changed set: the winning struct differs from the best
             # previously-held row (or the vertex is newly reached).
-            frontier = d.filter(F.col("act"))
-            state = F.broadcast(frontier) if bcast else frontier
-            msgs = und.join(state, und.a == state.id).select(
+            frontier = state.filter(F.col("act"))
+            msgs = und.join(frontier, und.a == frontier.id).select(
                 F.col("b").alias("id"),
                 (F.col("dist") + F.col("w")).cast("long").alias("dist"),
                 F.col("a").cast("long").alias("via"),
                 F.lit(True).alias("msg"),
             )
-            held = d.select(
+            held = state.select(
                 "id", "dist", "via", F.lit(False).alias("msg")
             )
             return (
@@ -629,7 +592,6 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
                         | (F.col("s") < F.col("s_old"))
                     ).alias("act"),
                 )
-                .localCheckpoint(eager=False)
             )
 
         def _fingerprint(d: DataFrame) -> tuple:
@@ -640,30 +602,20 @@ def weighted_shortest_paths(edges: DataFrame, source_id: int,
             ).collect()[0]
             return (r["n"], r["sd"], r["sv"])
 
-        if rounds is None:
-            prev = _fingerprint(dist)
-            done = 0
-            while True:
-                for _ in range(SSSP_CONVERGE_BATCH):
-                    dist = _round(dist)
-                done += SSSP_CONVERGE_BATCH
-                dist = dist.localCheckpoint(eager=True)
-                cur = _fingerprint(dist)
-                if cur == prev:
-                    break  # all three monotone aggregates stable = fixpoint
-                prev = cur
-                if done >= SSSP_CONVERGE_CAP:
-                    raise ValueError(
-                        f"weighted shortest paths still relaxing after "
-                        f"{done} Bellman-Ford rounds — graph diameter "
-                        f"exceeds SSSP_CONVERGE_CAP={SSSP_CONVERGE_CAP} "
-                        f"or the input has a negative cycle; pass an "
-                        f"explicit rounds bound for a partial relaxation"
-                    )
+        if rounds is not None:
+            dist = run(dist, _round, rounds)
         else:
-            for _ in range(rounds):
-                dist = _round(dist)
-            dist = dist.localCheckpoint(eager=True)
+            dist = run(
+                dist, _round, _SSSP_ROUNDS,
+                probe=_fingerprint, every=SSSP_CONVERGE_BATCH,
+                cap_error=lambda done, _fp: (
+                    f"weighted shortest paths still relaxing after "
+                    f"{done} Bellman-Ford rounds — graph diameter "
+                    f"exceeds SSSP_CONVERGE_CAP={SSSP_CONVERGE_CAP} "
+                    f"or the input has a negative cycle; pass an "
+                    f"explicit rounds bound for a partial relaxation"
+                ),
+            )
     # ``act`` is loop machinery, not part of the contract
     return dist.select("id", "dist", "via")
 
@@ -684,21 +636,16 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     then per-id arg-max) plus the message join — label state is one
     row per vertex, the same sparse-state scaling as the other
     iterative operators."""
-    und = _undirected(edges).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
-        vertices = und.select(F.col("a").alias("id")).distinct().localCheckpoint()
-        n_vertices = vertices.count()
-        labels = vertices.select("id", F.col("id").alias("label")).localCheckpoint()
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
-        for _ in range(rounds):
-            state = F.broadcast(labels) if bcast else labels
+    with _supersteps(_undirected(edges)) as (und, run):
+        labels = _id_labels(und)
+
+        def _round(state: DataFrame, _r: int) -> DataFrame:
             votes = (
                 und.join(state, und.a == state.id)
                 .select(F.col("b").alias("id"), "label")
-                .unionByName(labels.select("id", "label"))  # self-vote
+                .unionByName(state.select("id", "label"))  # self-vote
             )
-            labels = (
+            return (
                 votes.groupBy("id", "label")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .groupBy("id")
@@ -706,14 +653,13 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
                 # the smallest label value
                 .agg(F.max(F.struct(F.col("n"), (-F.col("label")).alias("neg"))).alias("s"))
                 .select("id", (-F.col("s.neg")).alias("label"))
-                .localCheckpoint(eager=False)
             )
-        labels = labels.localCheckpoint(eager=True)
+
+        labels = run(labels, _round, rounds)
     return labels.select(F.col("id").alias("vertex"), F.col("label").alias("community"))
 
 
 def k_core(edges: DataFrame, k: int = 2, rounds: int = 16,
-           check_every: int = 2,
            undirected_dedup: bool = True) -> DataFrame:
     """B6 — k-core membership by synchronous peeling: each round drops
     every vertex whose degree in the INDUCED surviving subgraph is
@@ -724,51 +670,31 @@ def k_core(edges: DataFrame, k: int = 2, rounds: int = 16,
     matches at ANY unroll depth >= the convergence round count, the
     same contract as connected_components.
 
-    ``rounds`` is a CEILING, not a fixed count (r8): the loop probes
-    the alive-set size every ``check_every`` rounds (the same
-    amortized-probe discipline as connected_components — rounds in
-    between stay lazy and run as one job) and stops at the first
-    stable probe. Monotone peeling makes a stable COUNT a sound
-    fixpoint witness: membership cannot change without the count
-    dropping. Worst case runs check_every-1 idempotent extra rounds,
-    which the depth-idempotent oracle absorbs.
+    ``rounds`` is a CEILING, not a fixed count: the alive-set size is
+    probed every 2 rounds and the loop stops at the first stable
+    probe. Monotone peeling makes a stable COUNT a sound fixpoint
+    witness: membership cannot change without the count dropping.
+    Worst case runs one idempotent extra round, which the
+    depth-idempotent oracle absorbs. The state carries each
+    survivor's induced degree, so the fixpoint state is the result.
 
     Cost per round: the alive set re-enters the edge relation as two
-    semi-joins (broadcast while it fits — the same state-size logic
-    as the other iterative operators) plus one degree aggregation;
-    state is one id per surviving vertex and the edge list is
-    checkpointed once. Rounds needed ~ the peeling depth (cascade
-    length), typically far below diameter."""
-    und = _undirected(edges, dedup=undirected_dedup).localCheckpoint()
-    n_edges = und.count()
-    with _iteration_partitions(und, n_edges):
+    semi-joins plus one degree aggregation; state is one row per
+    surviving vertex and the edge list is checkpointed once. Rounds
+    needed ~ the peeling depth (cascade length), typically far below
+    diameter."""
+    with _supersteps(_undirected(edges, dedup=undirected_dedup)) as (und, run):
         alive = und.select(F.col("a").alias("id")).distinct().localCheckpoint()
-        n_vertices = alive.count()
-        bcast = _use_broadcast_state("auto", n_edges, n_vertices)
-        deg = None
-        prev_n = n_vertices
-        done = 0
-        while done < rounds:
-            for _ in range(min(check_every, rounds - done)):
-                state = F.broadcast(alive) if bcast else alive
-                induced = und.join(
-                    state.select(F.col("id").alias("a")), "a", "left_semi"
-                ).join(state.select(F.col("id").alias("b")), "b", "left_semi")
-                deg = induced.groupBy(F.col("a").alias("id")).agg(
-                    F.count(F.lit(1)).alias("core_degree")
-                )
-                alive = (
-                    deg.filter(F.col("core_degree") >= F.lit(k))
-                    .select("id")
-                    .localCheckpoint(eager=False)
-                )
-                done += 1
-            cur_n = alive.count()
-            if cur_n == prev_n:
-                break
-            prev_n = cur_n
-        alive = alive.localCheckpoint(eager=True)
-        out = deg.join(alive, "id", "left_semi").select(
-            F.col("id").alias("vertex"), F.col("core_degree")
-        ).localCheckpoint(eager=True)
-    return out
+
+        def _round(state: DataFrame, _r: int) -> DataFrame:
+            induced = und.join(
+                state.select(F.col("id").alias("a")), "a", "left_semi"
+            ).join(state.select(F.col("id").alias("b")), "b", "left_semi")
+            return (
+                induced.groupBy(F.col("a").alias("id"))
+                .agg(F.count(F.lit(1)).alias("core_degree"))
+                .filter(F.col("core_degree") >= F.lit(k))
+            )
+
+        core = run(alive, _round, rounds, probe=lambda s: s.count(), every=2)
+    return core.select(F.col("id").alias("vertex"), F.col("core_degree"))
