@@ -20,26 +20,34 @@ cmd/coordinator/main.go and cmd/node/main.go):
     query shard_hint          -> engine.scan(..., shard_hint=[...])
                                  engine.list_keys(shard_hint=[...])
 
-State is a base DataFrame plus a driver-side write buffer, the shape of
-an in-memory write buffer over immutable columnar storage.
-``put``/``put_many``/``delete`` record into a dict (key -> value, or a
-tombstone); ``get``/``multi_get`` answer buffered keys from it and send
-only the other keys to the base relation, and an unhinted ``scan``
-merges the base keys in range with the buffered ones. The buffer folds
-into the base through ``kvops.upsert``/``kvops.delete`` before
-``checkpoint_to``, ``dataframe``, ``stats``, ``broadcast_stats``,
-``list_keys``, ``delete_range``, ``compact_for_serving`` and any
-``shard_hint`` read, and on every 8th mutation, where the lineage is
-also cut. The buffer assumes a key-unique base, which every state the
-engine builds or checkpoints is.
+State is a base DataFrame, a driver-side write buffer over it, and a
+driver-side read map of it: the shape of an in-memory serving tier over
+immutable columnar storage. ``put``/``put_many``/``delete`` record into
+the buffer (key -> value, or a tombstone). The first read that misses
+the buffer sizes the base from plan statistics (file sizes, local
+rows; no job) and, under ``_MAP_MAX_BYTES``, collects it into the map
+with one job. ``get``, ``multi_get`` and an unhinted ``scan`` then
+answer from the buffer first and the map second, with no Spark job;
+over the ceiling they run one job per read against the base. The map
+stays exact because ``_kv`` changes in three places only: a fold
+applies the buffer to the map as well (puts overwrite, tombstones
+pop), ``delete_range`` drops its range from it, and a write that skips
+the buffer (a non-``str`` key, a value of the wrong Python type)
+clears it, so the next read hydrates again. The map holds no NULL
+key: SQL ``=`` and range predicates never return such a row.
+
+The buffer folds into the base through ``kvops.upsert``/``kvops.delete``
+before ``checkpoint_to``, ``dataframe``, ``stats``, ``broadcast_stats``,
+``list_keys``, ``delete_range`` and any ``shard_hint`` read, and on
+every 8th mutation, where the lineage is also cut. Buffer and map
+assume a key-unique base, which every state the engine builds or
+checkpoints is.
 
 ``checkpoint_to`` / ``restore_from`` persist the state as
 shard-partitioned parquet: the directory per shard IS the reference's
-shard placement. A restored engine keeps reading that layout until a
-fold. Point lookups filter on ``key`` alone: Spark pushes the predicate
-into the parquet scan (row-group min/max skipping) but lists every
-shard directory. Only ``shard_hint`` reads prune directories, through
-the partition column.
+shard placement. A restored engine starts with an empty map and keeps
+its at-rest layout for ``shard_hint`` reads until a fold: those filter
+the partition column, so Spark prunes to the hinted shard directories.
 """
 
 from __future__ import annotations
@@ -58,6 +66,9 @@ _TOMBSTONE = object()
 # batch holding any other value (an int that local_df would CAST) skips
 # the buffer and takes the DataFrame path
 _PY_TYPES = {"string": str, "binary": (bytes, bytearray)}
+# plan-statistics size under which the first base read collects the base
+# into the driver read map
+_MAP_MAX_BYTES = 64 << 20
 
 
 class ToruaEngine:
@@ -85,6 +96,11 @@ class ToruaEngine:
         # writes not yet folded into _kv: key -> value or _TOMBSTONE
         self._buf: dict = {}
         self._mutations = 0
+        # _kv as a driver map, key -> value, filled by the first base
+        # read (which sets _sized) if the base is under _MAP_MAX_BYTES;
+        # None until then, and over the ceiling
+        self._map: dict | None = None
+        self._sized = False
         # at-rest shard-partitioned view (set by restore_from): lets
         # shard_hint reads filter the PARTITION column — directory
         # pruning — instead of computing the routing hash per row.
@@ -98,6 +114,9 @@ class ToruaEngine:
         if key in self._buf:
             value = self._buf[key]
             return None if value is _TOMBSTONE else value
+        base = self._base_map()
+        if base is not None:
+            return base.get(key)
         rows = kvops.point_get(self._kv, key).take(1)
         return rows[0]["value"] if rows else None
 
@@ -109,10 +128,14 @@ class ToruaEngine:
             elif self._buf[k] is not _TOMBSTONE:
                 out[k] = self._buf[k]
         if rest:
-            out.update(
-                (r["key"], r["value"])
-                for r in kvops.multi_get(self._kv, rest).collect()
-            )
+            base = self._base_map()
+            if base is not None:
+                out.update((k, base[k]) for k in rest if k in base)
+            else:
+                out.update(
+                    (r["key"], r["value"])
+                    for r in kvops.multi_get(self._kv, rest).collect()
+                )
         return out
 
     def put(self, key: str, value: str) -> "ToruaEngine":
@@ -136,16 +159,21 @@ class ToruaEngine:
                 if old is None or (v is not None and v > old):
                     batch[k] = v
             return self._record(batch)
-        self._fold()
-        self._apply(items, [])
-        return self._record({})
+        return self._write_through(items, [])
 
     def delete(self, *keys: str) -> "ToruaEngine":
         """DELETE /data/{key}: idempotent."""
         if all(isinstance(k, str) for k in keys):
             return self._record(dict.fromkeys(keys, _TOMBSTONE))
+        return self._write_through([], [(k,) for k in keys])
+
+    def _write_through(self, puts: list, tombs: list) -> "ToruaEngine":
+        """A write the buffer cannot hold (a non-``str`` key, a value
+        that local_df CASTs) goes straight to ``_kv``; the read map,
+        which cannot tell what the CAST made of it, is dropped."""
         self._fold()
-        self._apply([], [(k,) for k in keys])
+        self._apply(puts, tombs)
+        self._map, self._sized = None, False
         return self._record({})
 
     def _record(self, entries: dict) -> "ToruaEngine":
@@ -160,14 +188,34 @@ class ToruaEngine:
         return self
 
     def _fold(self) -> None:
-        """Apply the write buffer to ``_kv``: one upsert of the buffered
-        values, one anti-join of the tombstones."""
+        """Apply the write buffer to ``_kv``, one upsert of the buffered
+        values and one anti-join of the tombstones, and to the read map."""
         if self._buf:
             self._apply(
                 [(k, v) for k, v in self._buf.items() if v is not _TOMBSTONE],
                 [(k,) for k, v in self._buf.items() if v is _TOMBSTONE],
             )
+            if self._map is not None:
+                for k, v in self._buf.items():
+                    if v is _TOMBSTONE:
+                        self._map.pop(k, None)
+                    else:
+                        self._map[k] = v
             self._buf = {}
+
+    def _base_map(self) -> dict | None:
+        """``_kv`` as a driver map, collected with one job by the first
+        call if plan statistics put the base under ``_MAP_MAX_BYTES``;
+        None above it, where reads run a job against ``_kv``."""
+        if not self._sized:
+            self._sized = True
+            stats = self._kv._jdf.queryExecution().optimizedPlan().stats()
+            if int(str(stats.sizeInBytes())) < _MAP_MAX_BYTES:
+                self._map = {
+                    r["key"]: r["value"]
+                    for r in self._kv.filter(F.col("key").isNotNull()).collect()
+                }
+        return self._map
 
     def _apply(self, puts: list, tombs: list) -> None:
         if puts:
@@ -189,14 +237,19 @@ class ToruaEngine:
         prunes to the hinted shard DIRECTORIES, the coordinator's
         fan-out-to-fewer-nodes behavior — otherwise it applies the
         routing predicate per row. An unhinted scan merges the base
-        keys in range with the write buffer."""
+        keys in range, from the read map when there is one, with the
+        write buffer."""
         if shard_hint is not None:
             src = self._hinted(shard_hint)
             return [r["key"] for r in kvops.range_scan(src, start, end).collect()]
-        keys = [
-            r["key"] for r in kvops.range_scan(self._kv, start, end).collect()
-            if r["key"] not in self._buf
-        ]
+        base = self._base_map()
+        if base is not None:
+            keys = [k for k in base if start <= k < end and k not in self._buf]
+        else:
+            keys = [
+                r["key"] for r in kvops.range_scan(self._kv, start, end).collect()
+                if r["key"] not in self._buf
+            ]
         keys += [
             k for k, v in self._buf.items()
             if v is not _TOMBSTONE and start <= k < end
@@ -207,6 +260,8 @@ class ToruaEngine:
         self._fold()
         self._kv = kvops.delete_range(self._kv, start, end)
         self._at_rest = None
+        if self._map is not None:
+            self._map = {k: v for k, v in self._map.items() if not start <= k < end}
         return self
 
     def list_keys(self, shard_id: int | None = None,
@@ -288,48 +343,6 @@ class ToruaEngine:
         )
         nodes = topo.nodes_df(self.spark, self.node_list)
         return topo.route_status(kv, assigns, nodes, self.num_shards)
-
-    def compact_for_serving(self, partitions: int | None = None) -> "ToruaEngine":
-        """Pin the state into a point-lookup-tuned cache: few
-        partitions (1 per ~1M keys), sorted by key so the in-memory
-        columnar batches carry tight key min/max and non-matching
-        batches are skipped. Measured (10k keys, local[8], warm):
-        p50 116 ms on a 16-partition cache vs 51 ms on 1-partition
-        sorted — the residual ~50 ms is driver job overhead, the
-        honest floor of a batch engine vs the reference's in-process
-        map (<50 ms contract, distributed_storage_test.go:548). A
-        real deployment serves point ops from a KV cache hydrated by
-        `checkpoint_to`; this keeps interactive lookups snappy
-        without leaving Spark."""
-        self._fold()
-        if partitions is None:
-            # Size from CATALYST STATISTICS, not a count() scan: at
-            # 100 TB a rebalance must not read the table just to pick
-            # a partition count (VERDICT r5). The optimizer's stats
-            # come from parquet footers / catalog metadata (file
-            # sizes; exact row counts when available), a driver-side
-            # metadata read. Row count when the plan propagates one
-            # (1 partition per ~1M keys), else size (1 per ~64 MB —
-            # the same density for ~64-byte KV rows).
-            stats = self._kv._jdf.queryExecution().optimizedPlan().stats()
-            row_count = stats.rowCount()
-            if row_count.isDefined():
-                partitions = max(1, int(str(row_count.get())) // 1_000_000)
-            else:
-                partitions = max(1, int(str(stats.sizeInBytes())) // (64 << 20))
-            # sizeInBytes is a HEURISTIC (inflated for some lineages
-            # without CBO) — clamp the derived count to a sane ceiling
-            # so a bad estimate cannot produce a pathological
-            # repartition where the old count()-based path was exact
-            # (ADVICE r6). 4x defaultParallelism keeps every core busy
-            # with headroom without thousands of empty partitions.
-            ceiling = 4 * self.spark.sparkContext.defaultParallelism
-            partitions = min(partitions, ceiling)
-        self._kv = (
-            self._kv.repartition(partitions).sortWithinPartitions("key").cache()
-        )
-        self._kv.count()  # materialize the serving cache
-        return self
 
     # ---------------------------------------------------------- persistence
 
