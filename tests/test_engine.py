@@ -217,38 +217,170 @@ def test_binary_values_roundtrip(spark):
 
 
 def test_restored_reads_hydrate_once_then_run_no_job(spark, tmp_path, monkeypatch):
-    """A restored engine's first base read collects the base into the
-    driver read map with one job; every get, multi_get and unhinted scan
-    after it runs none. Over the map ceiling each read runs a job."""
+    """A whole kv_serving-shaped round runs no Spark job while the read
+    map holds the state: build, a 1000-key put_many, checkpoint_to and
+    restore_from (both written and read back on the driver), reads
+    (the first hydrates the map from the checkpoint's files), put_many,
+    delete, reads, and a second checkpoint and restore. Over the map
+    ceiling the same round runs a job per read, and answers alike."""
     sc = spark.sparkContext
-    e = ToruaEngine(spark).put_many([(f"key{i:06d}", f"v{i}") for i in range(1000)])
-    path = str(tmp_path / "kv")
-    e.checkpoint_to(path)
     keys = [f"key{i:06d}" for i in range(0, 1000, 34)]
 
-    def reads(engine, group):
+    def reads(engine):
+        return (
+            [engine.get(k) for k in keys],
+            engine.multi_get(keys[:5] + ["key000001", "key000002", "new"]),
+            engine.scan("key000100", "key000150"),
+        )
+
+    def kv_round(group):
         sc.setJobGroup(group, group)
         try:
-            got = (
-                [engine.get(k) for k in keys],
-                engine.multi_get(keys[:5]),
-                engine.scan("key000100", "key000150"),
+            e = ToruaEngine(spark).put_many(
+                [(f"key{i:06d}", f"v{i}") for i in range(1000)]
+            )
+            e.checkpoint_to(str(tmp_path / group / "a"))
+            e = ToruaEngine.restore_from(spark, str(tmp_path / group / "a"))
+            first = reads(e)
+            e.put_many([("key000001", "w"), ("new", "n")]).delete("key000002")
+            second = reads(e)
+            e.checkpoint_to(str(tmp_path / group / "b"))
+            e = ToruaEngine.restore_from(spark, str(tmp_path / group / "b"))
+            third = reads(e)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return (first, second, third), len(sc.statusTracker().getJobIdsForGroup(group))
+
+    mapped, mapped_jobs = kv_round("kv_round_mapped")
+    monkeypatch.setattr(engine_mod, "_MAP_MAX_BYTES", -1)
+    unmapped, unmapped_jobs = kv_round("kv_round_over_ceiling")
+    assert mapped_jobs == 0
+    assert unmapped_jobs >= 3 * (len(keys) + 2)
+    assert mapped == unmapped
+    first, second, third = mapped
+    assert first[0] == [f"v{i}" for i in range(0, 1000, 34)]
+    assert first[1] == {**{k: f"v{int(k[3:])}" for k in keys[:5]},
+                        "key000001": "v1", "key000002": "v2"}
+    assert first[2] == [f"key{i:06d}" for i in range(100, 150)]
+    assert second[1] == {**{k: f"v{int(k[3:])}" for k in keys[:5]},
+                         "key000001": "w", "new": "n"}
+    assert third == second
+
+
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_checkpoint_into_its_restore_dir_keeps_the_state(spark, tmp_path,
+                                                         monkeypatch, writer):
+    """A checkpoint into the directory the engine was restored from,
+    with and without buffered writes, publishes the new state over the
+    old one instead of deleting what the engine still reads; the
+    engine then answers from the published layout."""
+    if writer == "spark":
+        monkeypatch.setattr(engine_mod, "_MAP_MAX_BYTES", -1)
+    keys = [f"key-{i}" for i in range(40)]
+    path = str(tmp_path / "kv")
+    ToruaEngine(spark).put_many([(k, "v") for k in keys]).checkpoint_to(path)
+    r = ToruaEngine.restore_from(spark, path)
+    r.checkpoint_to(path)
+    assert sorted(r.list_keys()) == sorted(keys)
+    r.put("key-new", "w")
+    r.checkpoint_to(path)
+    want = sorted(keys + ["key-new"])
+    hint = [1, 3]
+    assert sorted(row["key"] for row in r.dataframe().collect()) == want
+    assert sum(row["keys"] for row in r.stats().collect()) == len(want)
+    assert r.scan("key-", "key-z", shard_hint=hint) == [
+        k for k in want if fnv1a32_py(k) % 4 in hint
+    ]
+    plan = plan_string(r._hinted(hint))
+    assert "PartitionFilters" in plan and "shard_id" in plan, plan
+    assert sorted(ToruaEngine.restore_from(spark, path).list_keys()) == want
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["kv"]
+
+
+def test_map_ceiling_bounds_measured_bytes(spark, monkeypatch):
+    """The read map's ceiling counts key and value lengths, not plan
+    statistics, which size a locally built value at its type's default:
+    a 2 MB value over a 1 MB ceiling drops the map at the fold that
+    adds it and at the hydration that reads it, and its reads run jobs
+    and still read back exactly."""
+    monkeypatch.setattr(engine_mod, "_MAP_MAX_BYTES", 1 << 20)
+    big = bytes(range(256)) * 8192
+    items = [("big", big), ("small", b"s")]
+    folded = ToruaEngine(spark, value_type="binary").put_many(items)
+    folded.dataframe()
+    ddl = "key string, value binary"
+    kv = kvops.upsert(local_df(spark, [], ddl), local_df(spark, items, ddl))
+    planned = kv._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(str(planned)) < 1 << 20
+    hydrated = ToruaEngine(spark, kv, value_type="binary")
+    sc = spark.sparkContext
+    for group, e in (("ceiling_fold", folded), ("ceiling_hydrate", hydrated)):
+        sc.setJobGroup(group, group)
+        try:
+            got = e.get("big"), e.multi_get(["big", "small"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert e._map is None
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+        assert got == (big, dict(items))
+
+
+@pytest.mark.parametrize("value_type", ["string", "binary"])
+def test_driver_and_spark_writers_give_one_layout(spark, tmp_path, monkeypatch,
+                                                   value_type):
+    """The driver writer and the Spark writer (map ceiling -1) put each
+    key in the same ``shard_id=`` directory, under the same schema,
+    with the same value, a None value included."""
+    import pyarrow.parquet as pq
+
+    def value(i, k):
+        if i % 3 == 0:
+            return None
+        return f"v{k}" if value_type == "string" else f"v{k}".encode() + b"\xff"
+
+    items = [(k, value(i, k)) for i, k in enumerate(_KEY_LIST)]
+    sc = spark.sparkContext
+
+    def write(name):
+        sc.setJobGroup(name, name)
+        try:
+            ToruaEngine(spark, value_type=value_type).put_many(items).checkpoint_to(
+                str(tmp_path / name)
             )
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+        layout = {}
+        for d in (tmp_path / name).glob("shard_id=*"):
+            table = pq.read_table(d)
+            arrow_type = str(table.schema.field("value").type)
+            layout.update(
+                (r["key"], (d.name, r["value"], arrow_type)) for r in table.to_pylist()
+            )
+        meta = (tmp_path / name / "_torua_meta.json").read_text()
+        assert (tmp_path / name / "_SUCCESS").exists()
+        return layout, meta, len(sc.statusTracker().getJobIdsForGroup(name))
 
-    restored = ToruaEngine.restore_from(spark, path)
-    first, first_jobs = reads(restored, "kv_reads_first_pass")
-    second, second_jobs = reads(restored, "kv_reads_second_pass")
+    driver, driver_meta, driver_jobs = write("driver")
     monkeypatch.setattr(engine_mod, "_MAP_MAX_BYTES", -1)
-    unmapped = ToruaEngine.restore_from(spark, path)
-    third, third_jobs = reads(unmapped, "kv_reads_over_ceiling")
-    assert first_jobs <= 1 and second_jobs == 0
-    assert third_jobs >= len(keys)
-    assert first == second == third
-    assert first[0] == [f"v{i}" for i in range(0, 1000, 34)]
-    assert first[2] == [f"key{i:06d}" for i in range(100, 150)]
+    spark_, spark_meta, spark_jobs = write("spark")
+    assert driver_jobs == 0 and spark_jobs >= 1
+    assert driver == spark_ == {
+        k: (f"shard_id={fnv1a32_py(k) % NUM_SHARDS}", v, value_type) for k, v in items
+    }
+    assert driver_meta == spark_meta
+
+
+def test_hadoop_uri_checkpoint_keeps_the_spark_write(spark, tmp_path, monkeypatch):
+    """A path that is not on the local filesystem takes the Spark write
+    straight into the target, with no sidecar, and restores through
+    schema inference; here a ``file://`` URI stands in for one."""
+    monkeypatch.setattr(engine_mod, "_local_path", lambda path: None)
+    uri = f"file://{tmp_path / 'kv'}"
+    ToruaEngine(spark).put_many([("a", "x"), ("b", None)]).checkpoint_to(uri)
+    assert not (tmp_path / "kv" / "_torua_meta.json").exists()
+    r = ToruaEngine.restore_from(spark, uri)
+    assert r._at_rest is None and r._src is None
+    assert r.multi_get(["a", "b", "c"]) == {"a": "x", "b": None}
 
 
 # ------------------------------------------------------------ write buffer
@@ -380,10 +512,17 @@ def _canon(op, result):
     ("delete_range", "a", "b"), ("get", "a"),
     ("put_many", [(None, "y")]), ("get", None),
 ]))
+# a checkpoint keeps the NULL-key row that hydration leaves out of the
+# map, and a restored layout holding only that row hydrates
+@example(history=("string", [
+    ("put_many", [(None, "y")]), ("get", "a"), ("checkpoint",), ("get", "a"),
+    ("dataframe",),
+]))
 def test_write_buffer_matches_eager_operators(spark, monkeypatch, reads, history):
     """The buffered engine answers every read exactly as a reference
     that applies each write eagerly through the kv operators, both from
-    its driver read map and, over the map ceiling, with a job per read."""
+    its driver read map and, over the map ceiling, with a job per read
+    and never a map."""
     if reads == "job_per_read":
         monkeypatch.setattr(engine_mod, "_MAP_MAX_BYTES", -1)
     value_type, ops = history
@@ -403,3 +542,5 @@ def test_write_buffer_matches_eager_operators(spark, monkeypatch, reads, history
                 got, want = engine.multi_get(_KEY_LIST), ref.multi_get(_KEY_LIST)
                 op = "multi_get"
             assert _canon(op, got) == _canon(op, want), (i, op, args)
+            if reads == "job_per_read":
+                assert engine._map is None, (i, op, args)

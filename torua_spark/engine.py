@@ -23,34 +23,55 @@ cmd/coordinator/main.go and cmd/node/main.go):
 State is a base DataFrame, a driver-side write buffer over it, and a
 driver-side read map of it: the shape of an in-memory serving tier over
 immutable columnar storage. ``put``/``put_many``/``delete`` record into
-the buffer (key -> value, or a tombstone). The first read that misses
-the buffer sizes the base from plan statistics (file sizes, local
-rows; no job) and, under ``_MAP_MAX_BYTES``, collects it into the map
-with one job. ``get``, ``multi_get`` and an unhinted ``scan`` then
-answer from the buffer first and the map second, with no Spark job;
-over the ceiling they run one job per read against the base. The map
-stays exact because ``_kv`` changes in three places only: a fold
-applies the buffer to the map as well (puts overwrite, tombstones
-pop), ``delete_range`` drops its range from it, and a write that skips
-the buffer (a non-``str`` key, a value of the wrong Python type)
-clears it, so the next read hydrates again. The map holds no NULL
-key: SQL ``=`` and range predicates never return such a row.
+the buffer (key -> value, or a tombstone). An engine built with no
+``kv`` starts with an empty map. Otherwise the first read that misses
+the buffer sizes the base, by the file bytes of a restored checkpoint
+or by plan statistics (no job), and under ``_MAP_MAX_BYTES`` fills the
+map: from a checkpoint's parquet files with pyarrow on the driver, from
+any other base with one collect job. ``get``, ``multi_get`` and an
+unhinted ``scan`` then answer from the buffer first and the map second,
+with no Spark job; over the ceiling they run one job per read against
+the base. The ceiling bounds the map's measured bytes (key and value
+lengths), counted as hydration fills it and as each fold grows it; a
+map that reaches it is dropped for job-per-read. The map stays exact
+because ``_kv`` changes in three places only: a fold applies the buffer
+to the map as well (puts overwrite, tombstones pop), ``delete_range``
+drops its range from it, and a write that skips the buffer (a
+non-``str`` key, a value of the wrong Python type) clears it, so the
+next read hydrates again. The map holds no NULL key: SQL ``=`` and
+range predicates never return such a row. A map is *whole* when
+hydration left no NULL-key row out.
 
 The buffer folds into the base through ``kvops.upsert``/``kvops.delete``
-before ``checkpoint_to``, ``dataframe``, ``stats``, ``broadcast_stats``,
-``list_keys``, ``delete_range`` and any ``shard_hint`` read, and on
-every 8th mutation, where the lineage is also cut. Buffer and map
-assume a key-unique base, which every state the engine builds or
-checkpoints is.
+before ``dataframe``, ``stats``, ``broadcast_stats``, ``list_keys``,
+``delete_range`` and any ``shard_hint`` read, and on every 8th
+mutation, where the lineage is also cut. Buffer and map assume a
+key-unique base, which every state the engine builds or checkpoints is.
 
 ``checkpoint_to`` / ``restore_from`` persist the state as
 shard-partitioned parquet: the directory per shard IS the reference's
-shard placement. A restored engine starts with an empty map and keeps
-its at-rest layout for ``shard_hint`` reads until a fold: those filter
-the partition column, so Spark prunes to the hinted shard directories.
+shard placement. On a local path, when the map is whole, the checkpoint
+folds the buffer into the map only and writes the map with pyarrow on
+the driver, in the layout Spark writes (``shard_id=<n>/`` directories
+of ``key string, value <value_type>``), with no Spark job; otherwise
+Spark folds and writes it. Either writer writes a sibling temp tree and
+publishes it with ``sources.io.tree_swap_publish``, so a checkpoint
+into the directory the state was restored from keeps that state, and
+from then on the base is the published layout. A Hadoop URI (hdfs://,
+s3a://) keeps the Spark write straight into the target, with no sidecar
+and no swap. ``restore_from`` reads an engine checkpoint with the
+sidecar's schema (no inference job) and keeps its at-rest layout for
+``shard_hint`` reads until a fold: those filter the partition column,
+so Spark prunes to the hinted shard directories.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import pathlib
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -58,17 +79,40 @@ from torua_spark.constants import NODES, NUM_SHARDS
 from torua_spark.functions.hashing import fnv1a32_py, shard_for_key
 from torua_spark.operators import kv as kvops
 from torua_spark.operators import topology as topo
+from torua_spark.sources.io import read_small_parquet_rows, tree_swap_publish
 from torua_spark.sources.local import local_df
 
 # write-buffer marker of a deleted key
 _TOMBSTONE = object()
 # the Python types a value comes back from Spark as, per value_type; a
 # batch holding any other value (an int that local_df would CAST) skips
-# the buffer and takes the DataFrame path
+# the buffer and takes the DataFrame path. Only these value types have
+# a driver checkpoint writer.
 _PY_TYPES = {"string": str, "binary": (bytes, bytearray)}
-# plan-statistics size under which the first base read collects the base
-# into the driver read map
+# bound on the read map's measured bytes; the first base read also
+# checks the base's file or plan-statistics size against it before it
+# reads a row
 _MAP_MAX_BYTES = 64 << 20
+_META = "_torua_meta.json"
+
+
+def _entry_bytes(key: str, value) -> int:
+    return len(key) + (len(value) if value is not None else 0)
+
+
+def _local_path(path: str) -> str | None:
+    """``path`` on the local filesystem (a ``file://`` URI stripped), or
+    None for a Hadoop URI (hdfs://, s3a://)."""
+    if path.startswith("file://"):
+        return path[len("file://"):]
+    return None if "://" in path else path
+
+
+def _read_layout(spark: SparkSession, path: str, value_type: str) -> DataFrame:
+    """A checkpoint's layout, read with the schema its sidecar records."""
+    return spark.read.schema(
+        f"key string, value {value_type}, shard_id int"
+    ).parquet(path)
 
 
 class ToruaEngine:
@@ -97,15 +141,24 @@ class ToruaEngine:
         self._buf: dict = {}
         self._mutations = 0
         # _kv as a driver map, key -> value, filled by the first base
-        # read (which sets _sized) if the base is under _MAP_MAX_BYTES;
-        # None until then, and over the ceiling
+        # read (which sets _sized); None until then, and once its
+        # measured bytes (_map_bytes) reach _MAP_MAX_BYTES. _whole is
+        # False when hydration left out a NULL-key row of _kv.
         self._map: dict | None = None
+        self._map_bytes = 0
+        self._whole = True
         self._sized = False
-        # at-rest shard-partitioned view (set by restore_from): lets
-        # shard_hint reads filter the PARTITION column — directory
-        # pruning — instead of computing the routing hash per row.
-        # A fold or mutation that changes _kv invalidates it.
+        # at-rest shard-partitioned view (set by restore_from and
+        # checkpoint_to): lets shard_hint reads filter the PARTITION
+        # column — directory pruning — instead of computing the routing
+        # hash per row. _src is the local directory it reads, which
+        # hydration reads with pyarrow. A fold or mutation that changes
+        # _kv invalidates both.
         self._at_rest: DataFrame | None = None
+        self._src: str | None = None
+        if kv is None:
+            self._sized = True
+            self._fill([])
 
     # ------------------------------------------------------------ data path
 
@@ -187,35 +240,60 @@ class ToruaEngine:
             self._kv = self._kv.localCheckpoint(eager=False)
         return self
 
-    def _fold(self) -> None:
-        """Apply the write buffer to ``_kv``, one upsert of the buffered
-        values and one anti-join of the tombstones, and to the read map."""
-        if self._buf:
+    def _fold(self, map_only: bool = False) -> None:
+        """Apply the write buffer to the read map, measured against the
+        ceiling, and to ``_kv``: one upsert of the buffered values and
+        one anti-join of the tombstones. ``map_only`` leaves ``_kv``
+        alone while the map holds, for a caller that rewrites ``_kv``
+        from the map."""
+        if not self._buf:
+            return
+        if self._map is not None:
+            for k, v in self._buf.items():
+                if k in self._map:
+                    self._map_bytes -= _entry_bytes(k, self._map.pop(k))
+                if v is not _TOMBSTONE:
+                    self._map[k] = v
+                    self._map_bytes += _entry_bytes(k, v)
+            if self._map_bytes >= _MAP_MAX_BYTES:
+                self._map = None
+        if self._map is None or not map_only:
             self._apply(
                 [(k, v) for k, v in self._buf.items() if v is not _TOMBSTONE],
                 [(k,) for k, v in self._buf.items() if v is _TOMBSTONE],
             )
-            if self._map is not None:
-                for k, v in self._buf.items():
-                    if v is _TOMBSTONE:
-                        self._map.pop(k, None)
-                    else:
-                        self._map[k] = v
-            self._buf = {}
+        self._buf = {}
 
     def _base_map(self) -> dict | None:
-        """``_kv`` as a driver map, collected with one job by the first
-        call if plan statistics put the base under ``_MAP_MAX_BYTES``;
-        None above it, where reads run a job against ``_kv``."""
+        """``_kv`` as a driver map, filled by the first call if the base
+        sizes under ``_MAP_MAX_BYTES``: a restored checkpoint by its
+        file bytes, read with pyarrow, any other base by plan
+        statistics, collected with one job. None above the ceiling,
+        where reads run a job against ``_kv``."""
         if not self._sized:
             self._sized = True
-            stats = self._kv._jdf.queryExecution().optimizedPlan().stats()
-            if int(str(stats.sizeInBytes())) < _MAP_MAX_BYTES:
-                self._map = {
-                    r["key"]: r["value"]
-                    for r in self._kv.filter(F.col("key").isNotNull()).collect()
-                }
+            if self._src is not None:
+                # file by file: a directory read infers the shard_id
+                # partition type, which fails when the only directory is
+                # the NULL key's
+                files = [str(p) for p in pathlib.Path(self._src).rglob("*.parquet")]
+                if sum(map(os.path.getsize, files)) < _MAP_MAX_BYTES:
+                    self._fill([
+                        r for f in files for r in read_small_parquet_rows(self.spark, f)
+                    ])
+            else:
+                stats = self._kv._jdf.queryExecution().optimizedPlan().stats()
+                if int(str(stats.sizeInBytes())) < _MAP_MAX_BYTES:
+                    self._fill(self._kv.collect())
         return self._map
+
+    def _fill(self, rows: list) -> None:
+        """Hold the non-NULL-key ``rows`` as the read map, unless their
+        measured bytes reach the ceiling."""
+        m = {r["key"]: r["value"] for r in rows if r["key"] is not None}
+        size = sum(_entry_bytes(k, v) for k, v in m.items())
+        if size < _MAP_MAX_BYTES:
+            self._map, self._map_bytes, self._whole = m, size, len(m) == len(rows)
 
     def _apply(self, puts: list, tombs: list) -> None:
         if puts:
@@ -226,19 +304,19 @@ class ToruaEngine:
             self._kv = kvops.delete(
                 self._kv, local_df(self.spark, tombs, "key string")
             )
-        self._at_rest = None
+        self._at_rest = self._src = None
 
     def scan(self, start: str, end: str,
              shard_hint: list[int] | None = None) -> list[str]:
         """Sorted lexicographic [start, end) key scan. ``shard_hint``
         scopes execution to the named shards (the query-message field,
-        ARCHITECTURE.md:327-339): on a freshly-restored engine the
-        hint filters the at-rest layout's partition column — Spark
-        prunes to the hinted shard DIRECTORIES, the coordinator's
-        fan-out-to-fewer-nodes behavior — otherwise it applies the
-        routing predicate per row. An unhinted scan merges the base
-        keys in range, from the read map when there is one, with the
-        write buffer."""
+        ARCHITECTURE.md:327-339): right after a restore or a local
+        checkpoint the hint filters the at-rest layout's partition
+        column — Spark prunes to the hinted shard DIRECTORIES, the
+        coordinator's fan-out-to-fewer-nodes behavior — otherwise it
+        applies the routing predicate per row. An unhinted scan merges
+        the base keys in range, from the read map when there is one,
+        with the write buffer."""
         if shard_hint is not None:
             src = self._hinted(shard_hint)
             return [r["key"] for r in kvops.range_scan(src, start, end).collect()]
@@ -259,9 +337,10 @@ class ToruaEngine:
     def delete_range(self, start: str, end: str) -> "ToruaEngine":
         self._fold()
         self._kv = kvops.delete_range(self._kv, start, end)
-        self._at_rest = None
+        self._at_rest = self._src = None
         if self._map is not None:
-            self._map = {k: v for k, v in self._map.items() if not start <= k < end}
+            for k in [k for k in self._map if start <= k < end]:
+                self._map_bytes -= _entry_bytes(k, self._map.pop(k))
         return self
 
     def list_keys(self, shard_id: int | None = None,
@@ -351,65 +430,109 @@ class ToruaEngine:
         the reference's shard placement at rest. A ``_torua_meta.json``
         sidecar records the shard count the layout was routed with and
         the value type (underscore-prefixed, so parquet readers skip it
-        like _SUCCESS) — restore_from uses the first to decide whether
+        like _SUCCESS): restore_from uses the first to decide whether
         the on-disk sharding is still THIS engine's sharding, and the
-        second to restore an empty state, whose write leaves no parquet
-        file to infer a schema from."""
-        import json
-        import pathlib
+        second as the schema it reads the layout with.
 
-        self._fold()
+        On a local path the state goes to a sibling temp tree, written
+        from the read map on the driver when the map is whole (no Spark
+        job, no kv fold) and by Spark otherwise, and is published over
+        ``path`` by a two-rename swap; ``_kv`` then reads the published
+        layout. A Hadoop URI takes the Spark write straight into
+        ``path`` and no sidecar, so restore_from degrades to the
+        routing-predicate path, as for a pre-sidecar checkpoint."""
+        local = _local_path(path)
+        if local is None:
+            self._fold()
+            self._spark_write(path)
+            return
+        local = os.path.abspath(local)
+        self._base_map()
+        driver = (
+            self._map is not None and self._whole and self.value_type in _PY_TYPES
+        )
+        self._fold(map_only=driver)
+        parent, name = os.path.split(local)
+        tag = uuid.uuid4().hex
+        tmp, trash = (
+            os.path.join(parent, f".{name}.{kind}_{tag}")
+            for kind in ("ckpt_tmp", "ckpt_trash")
+        )
+        try:
+            if driver and self._map is not None:
+                self._write_map(tmp)
+            else:
+                self._spark_write(f"file://{tmp}")
+            (pathlib.Path(tmp) / _META).write_text(json.dumps(
+                {"num_shards": self.num_shards, "value_type": self.value_type}
+            ))
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if os.path.exists(local):
+            tree_swap_publish(local, tmp, trash)
+        else:
+            os.rename(tmp, local)
+        raw = _read_layout(self.spark, f"file://{local}", self.value_type)
+        self._kv, self._at_rest, self._src = raw.select("key", "value"), raw, local
+
+    def _spark_write(self, dest: str) -> None:
         (
             self._kv.withColumn("shard_id", shard_for_key(F.col("key"), self.num_shards))
             .write.mode("overwrite")
             .partitionBy("shard_id")
-            .parquet(path)
+            .parquet(dest)
         )
-        # pathlib is local-FS only; on a Hadoop URI (hdfs://, s3a://)
-        # the parquet write above succeeds and the sidecar is simply
-        # skipped — restore_from degrades to the routing-predicate
-        # path, exactly as for a pre-sidecar checkpoint
-        if "://" not in path or path.startswith("file://"):
-            local = path.split("://", 1)[-1] if "://" in path else path
-            (pathlib.Path(local) / "_torua_meta.json").write_text(
-                json.dumps({"num_shards": self.num_shards, "value_type": self.value_type})
+
+    def _write_map(self, dest: str) -> None:
+        """The read map as the layout ``_spark_write`` gives, written
+        with pyarrow: one file per non-empty shard directory."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        shards: dict[int, tuple[list, list]] = {}
+        for k, v in self._map.items():
+            keys, values = shards.setdefault(fnv1a32_py(k) % self.num_shards, ([], []))
+            keys.append(k)
+            values.append(v)
+        value_type = pa.string() if self.value_type == "string" else pa.binary()
+        os.makedirs(dest)
+        for shard, (keys, values) in shards.items():
+            os.mkdir(os.path.join(dest, f"shard_id={shard}"))
+            pq.write_table(
+                pa.table({"key": pa.array(keys, pa.string()),
+                          "value": pa.array(values, value_type)}),
+                os.path.join(dest, f"shard_id={shard}", "part-00000.parquet"),
             )
+        open(os.path.join(dest, "_SUCCESS"), "w").close()
 
     @classmethod
     def restore_from(cls, spark: SparkSession, path: str, **kw) -> "ToruaEngine":
         """Restore from ``checkpoint_to`` output (or any parquet with
-        key/value columns). ``num_shards`` defaults to the sidecar's
-        recorded value; the at-rest partition view powering
-        shard_hint directory pruning is enabled ONLY when the layout
-        demonstrably matches this engine's routing — a shard_id
-        column exists AND the sidecar shard count equals num_shards.
-        Anything else (foreign parquet, an explicit num_shards
-        override, a pre-sidecar checkpoint) falls back to the
-        routing-predicate path, which is always self-consistent. A
-        checkpoint with no parquet data file restores as an empty
-        ``key string, value <sidecar value_type>`` state."""
-        import json
-        import pathlib
-
-        meta = None
-        # same scheme-strip as checkpoint_to: a file:// URI must find
-        # the sidecar checkpoint_to wrote for it, or the round-trip
-        # silently loses the num_shards inference + at-rest pruning
-        local = path.split("://", 1)[-1] if path.startswith("file://") else path
-        mp = pathlib.Path(local) / "_torua_meta.json"
-        if mp.exists():
-            meta = json.loads(mp.read_text())
-        if meta is not None and "num_shards" not in kw:
-            kw["num_shards"] = int(meta["num_shards"])
-        if (
-            meta is not None
-            and "value_type" in meta
-            and not any(pathlib.Path(local).rglob("*.parquet"))
-        ):
-            empty = local_df(spark, [], f"key string, value {meta['value_type']}")
-            return cls(spark, empty, **kw)
-        raw = spark.read.parquet(path)
+        key/value columns). ``num_shards`` and ``value_type`` default to
+        the sidecar's recorded values, and a checkpoint with a sidecar
+        is read with the sidecar's schema, with no inference job; its
+        first base read hydrates the map with pyarrow. The at-rest
+        partition view powering shard_hint directory pruning is enabled
+        ONLY when the layout demonstrably matches this engine's routing
+        — a shard_id column exists AND the sidecar shard count equals
+        num_shards. Anything else (foreign parquet, an explicit
+        num_shards override, a pre-sidecar checkpoint) falls back to
+        the routing-predicate path, which is always self-consistent."""
+        local = _local_path(path)
+        meta, value_type = None, None
+        if local is not None and (pathlib.Path(local) / _META).exists():
+            meta = json.loads((pathlib.Path(local) / _META).read_text())
+            kw.setdefault("num_shards", int(meta["num_shards"]))
+            value_type = meta.get("value_type")
+        if value_type is not None:
+            kw.setdefault("value_type", value_type)
+            raw = _read_layout(spark, path, value_type)
+        else:
+            raw = spark.read.parquet(path)
         eng = cls(spark, raw.select("key", "value"), **kw)
+        if value_type is not None:
+            eng._src = os.path.abspath(local)
         if (
             "shard_id" in raw.columns
             and meta is not None
