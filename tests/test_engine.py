@@ -120,10 +120,10 @@ def test_shard_hint_scoped_reads(spark, tmp_path):
 
 
 def test_checkpoint_restore_roundtrips_file_uri(spark, tmp_path):
-    """r8 ADVICE: checkpoint_to writes the sidecar for file:// URIs,
-    so restore_from must strip the scheme the same way — the
-    round-trip keeps the sidecar's num_shards inference and the
-    at-rest pruning view instead of silently degrading."""
+    """checkpoint_to writes the sidecar for file:// URIs, so
+    restore_from must strip the scheme the same way — the round-trip
+    keeps the sidecar's num_shards inference and the at-rest pruning
+    view instead of silently degrading."""
     e = ToruaEngine(spark, num_shards=6)
     e.put_many([(f"key-{i}", f"v{i}") for i in range(40)])
     uri = f"file://{tmp_path / 'kvuri'}"
@@ -135,12 +135,12 @@ def test_checkpoint_restore_roundtrips_file_uri(spark, tmp_path):
 
 
 def test_restore_guards_stale_or_foreign_at_rest(spark, tmp_path):
-    """Review findings (r8): the at-rest partition view must never
-    serve a shard_hint under a DIFFERENT sharding than the engine's
-    routing — a 4-shard checkpoint restored as num_shards=8 falls back
-    to the routing predicate (correct ownership sets), and foreign
-    (key,value) parquet without shard_id/sidecar never crashes a
-    hinted read. num_shards defaults from the checkpoint sidecar."""
+    """The at-rest partition view must never serve a shard_hint under
+    a DIFFERENT sharding than the engine's routing — a 4-shard
+    checkpoint restored as num_shards=8 falls back to the routing
+    predicate (correct ownership sets), and foreign (key,value) parquet
+    without shard_id/sidecar never crashes a hinted read. num_shards
+    defaults from the checkpoint sidecar."""
     keys = [f"key-{i}" for i in range(60)]
     e = ToruaEngine(spark, num_shards=4)
     e.put_many([(k, "v") for k in keys])
@@ -381,6 +381,106 @@ def test_hadoop_uri_checkpoint_keeps_the_spark_write(spark, tmp_path, monkeypatc
     r = ToruaEngine.restore_from(spark, uri)
     assert r._at_rest is None and r._src is None
     assert r.multi_get(["a", "b", "c"]) == {"a": "x", "b": None}
+
+
+@pytest.mark.parametrize("mode", ["map", "frame"])
+def test_hadoop_uri_checkpoint_into_its_restore_dir_keeps_the_state(spark, tmp_path,
+                                                                   monkeypatch, mode):
+    """A checkpoint to a Hadoop URI that the engine's relation reads
+    from, with and without a write since the restore, keeps the state
+    in both modes: the new tree is written beside the target and
+    renamed over it once whole."""
+    if mode == "frame":
+        monkeypatch.setattr(engine_mod, "_MAP_MAX_BYTES", -1)
+    monkeypatch.setattr(engine_mod, "_local_path", lambda path: None)
+    keys = [f"key-{i}" for i in range(40)]
+    uri = f"file://{tmp_path / 'kv'}"
+    ToruaEngine(spark).put_many([(k, "v") for k in keys]).checkpoint_to(uri)
+    r = ToruaEngine.restore_from(spark, uri)
+    assert (r._map is not None) == (mode == "map")
+    r.dataframe()
+    r.checkpoint_to(uri)
+    r.put("key-new", "w")
+    r.checkpoint_to(uri)
+    want = sorted(keys + ["key-new"])
+    assert sorted(r.list_keys()) == want
+    assert r.get("key-new") == "w" and r.get("key-3") == "v"
+    assert sorted(ToruaEngine.restore_from(spark, uri).list_keys()) == want
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["kv"]
+
+
+def test_restore_rejects_a_value_type_its_sidecar_contradicts(spark, tmp_path):
+    """An explicit value_type that differs from the one the checkpoint
+    recorded raises, naming both, instead of labelling string values
+    binary (or the reverse)."""
+    path = str(tmp_path / "kv")
+    ToruaEngine(spark).put_many([("a", "x")]).checkpoint_to(path)
+    with pytest.raises(ValueError, match="conflicting value types.*'binary'.*'string'"):
+        ToruaEngine.restore_from(spark, path, value_type="binary")
+    assert ToruaEngine.restore_from(spark, path, value_type="string").get("a") == "x"
+
+
+def test_map_mode_writer_runs_no_job(spark):
+    """Map-mode writes go straight into the map: 1000 single-key puts
+    on an engine built with no kv, then a multi_get of every key, run
+    no Spark job (no buffer fold, no lineage cut) and read back
+    exactly."""
+    sc = spark.sparkContext
+    keys = [f"key{i:06d}" for i in range(1000)]
+    sc.setJobGroup("map_writer", "map_writer")
+    try:
+        e = ToruaEngine(spark)
+        for i, k in enumerate(keys):
+            e.put(k, f"v{i}")
+        got = e.multi_get(keys)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("map_writer")) == 0
+    assert got == {k: f"v{i}" for i, k in enumerate(keys)}
+
+
+def test_map_mode_round_makes_no_jvm_call(spark, tmp_path, monkeypatch):
+    """A kv_serving-shaped round on a map-mode engine makes no py4j
+    call, so it builds no DataFrame and runs no job: checkpoint_to,
+    restore_from, 34 get, 2 multi_get, 2 scan, put_many and delete.
+    The job group is set outside the spied span, as it is a py4j call
+    itself."""
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    model = {f"key{i:06d}": f"v{i}" for i in range(1000)}
+    e = ToruaEngine(spark).put_many(list(model.items()))
+    calls, send = [], client.send_command
+
+    def spy(command, *args, **kw):
+        calls.append(command[:80])
+        return send(command, *args, **kw)
+
+    sc.setJobGroup("no_jvm_round", "no_jvm_round")
+    monkeypatch.setattr(client, "send_command", spy)
+    try:
+        e.checkpoint_to(str(tmp_path / "a"))
+        e = ToruaEngine.restore_from(spark, str(tmp_path / "a"))
+        got = (
+            [e.get(f"key{i:06d}") for i in range(0, 1000, 30)],
+            e.multi_get(["key000001", "key000002", "nope"]),
+            e.multi_get([f"key{i:06d}" for i in range(500, 505)]),
+            e.scan("key000100", "key000110"),
+            e.scan("key000990", "key001000"),
+        )
+        e.put_many([("key000001", "w"), ("new", "n")]).delete("key000002")
+    finally:
+        monkeypatch.undo()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert calls == []
+    assert len(sc.statusTracker().getJobIdsForGroup("no_jvm_round")) == 0
+    assert got == (
+        [f"v{i}" for i in range(0, 1000, 30)],
+        {"key000001": "v1", "key000002": "v2"},
+        {f"key{i:06d}": f"v{i}" for i in range(500, 505)},
+        [f"key{i:06d}" for i in range(100, 110)],
+        [f"key{i:06d}" for i in range(990, 1000)],
+    )
+    assert e.multi_get(["key000001", "key000002", "new"]) == {"key000001": "w", "new": "n"}
 
 
 # ------------------------------------------------------------ write buffer

@@ -20,49 +20,40 @@ cmd/coordinator/main.go and cmd/node/main.go):
     query shard_hint          -> engine.scan(..., shard_hint=[...])
                                  engine.list_keys(shard_hint=[...])
 
-State is a base DataFrame, a driver-side write buffer over it, and a
-driver-side read map of it: the shape of an in-memory serving tier over
-immutable columnar storage. ``put``/``put_many``/``delete`` record into
-the buffer (key -> value, or a tombstone). An engine built with no
-``kv`` starts with an empty map. Otherwise the first read that misses
-the buffer sizes the base, by the file bytes of a restored checkpoint
-or by plan statistics (no job), and under ``_MAP_MAX_BYTES`` fills the
-map: from a checkpoint's parquet files with pyarrow on the driver, from
-any other base with one collect job. ``get``, ``multi_get`` and an
-unhinted ``scan`` then answer from the buffer first and the map second,
-with no Spark job; over the ceiling they run one job per read against
-the base. The ceiling bounds the map's measured bytes (key and value
-lengths), counted as hydration fills it and as each fold grows it; a
-map that reaches it is dropped for job-per-read. The map stays exact
-because ``_kv`` changes in three places only: a fold applies the buffer
-to the map as well (puts overwrite, tombstones pop), ``delete_range``
-drops its range from it, and a write that skips the buffer (a
-non-``str`` key, a value of the wrong Python type) clears it, so the
-next read hydrates again. The map holds no NULL key: SQL ``=`` and
-range predicates never return such a row. A map is *whole* when
-hydration left no NULL-key row out.
+The engine is in one of two modes, chosen when its state is built (the
+constructor, ``restore_from``) and never mixed: an in-memory serving
+tier that flushes to immutable columnar files, which the batch engine
+reads only when asked.
 
-The buffer folds into the base through ``kvops.upsert``/``kvops.delete``
-before ``dataframe``, ``stats``, ``broadcast_stats``, ``list_keys``,
-``delete_range`` and any ``shard_hint`` read, and on every 8th
-mutation, where the lineage is also cut. Buffer and map assume a
+*Map mode* holds while the state fits under ``_MAP_MAX_BYTES`` of
+measured key and value bytes, has no NULL key and a ``string`` or
+``binary`` value type. The driver map ``_map`` is then the whole state:
+``get``, ``multi_get``, an unhinted ``scan`` and every write go to it
+with no Spark job and no JVM call, and ``checkpoint_to``/
+``restore_from`` write and read it with pyarrow. The Spark relation
+``_kv`` is built only when ``dataframe``, ``stats``,
+``broadcast_stats``, ``list_keys`` or a ``shard_hint`` read asks: from
+the published layout while nothing has been written since, otherwise
+from the map through one Arrow ``createDataFrame``.
+
+*Frame mode* covers the rest: a state over the ceiling, a base with a
+NULL-key row, a write the map cannot hold (a non-``str`` key, a value
+``local_df`` would CAST) and a map write that crosses the ceiling.
+Writes go to a buffer (key -> value, or a tombstone) that reads consult
+first; the rest of a read is one Spark job on ``_kv``. The buffer folds
+into ``_kv`` through ``kvops.upsert``/``kvops.delete`` before a
+whole-state read and on every 8th mutation, where the lineage is also
+cut. An engine stays in frame mode once there. Both modes assume a
 key-unique base, which every state the engine builds or checkpoints is.
 
-``checkpoint_to`` / ``restore_from`` persist the state as
-shard-partitioned parquet: the directory per shard IS the reference's
-shard placement. On a local path, when the map is whole, the checkpoint
-folds the buffer into the map only and writes the map with pyarrow on
-the driver, in the layout Spark writes (``shard_id=<n>/`` directories
-of ``key string, value <value_type>``), with no Spark job; otherwise
-Spark folds and writes it. Either writer writes a sibling temp tree and
-publishes it with ``sources.io.tree_swap_publish``, so a checkpoint
-into the directory the state was restored from keeps that state, and
-from then on the base is the published layout. A Hadoop URI (hdfs://,
-s3a://) keeps the Spark write straight into the target, with no sidecar
-and no swap. ``restore_from`` reads an engine checkpoint with the
-sidecar's schema (no inference job) and keeps its at-rest layout for
-``shard_hint`` reads until a fold: those filter the partition column,
-so Spark prunes to the hinted shard directories.
+``checkpoint_to`` writes shard-partitioned parquet (``shard_id=<n>/``
+directories of ``key string, value <value_type>``: the directory per
+shard IS the reference's shard placement) to a sibling temp tree and
+renames it over the target once whole, so a checkpoint into the
+directory the state is read from keeps that state. A local checkpoint
+adds the ``_torua_meta.json`` sidecar; while its layout holds the
+state, a ``shard_hint`` read filters the partition column, so Spark
+prunes to the hinted shard directories.
 """
 
 from __future__ import annotations
@@ -84,14 +75,12 @@ from torua_spark.sources.local import local_df
 
 # write-buffer marker of a deleted key
 _TOMBSTONE = object()
-# the Python types a value comes back from Spark as, per value_type; a
-# batch holding any other value (an int that local_df would CAST) skips
-# the buffer and takes the DataFrame path. Only these value types have
-# a driver checkpoint writer.
+# the Python types a value comes back from Spark as, per value_type: the
+# value types map mode holds, and the values a write may carry without
+# taking the engine to frame mode
 _PY_TYPES = {"string": str, "binary": (bytes, bytearray)}
-# bound on the read map's measured bytes; the first base read also
-# checks the base's file or plan-statistics size against it before it
-# reads a row
+# bound on the map's measured bytes; a base is also checked by its file
+# or plan-statistics size before a row of it is read
 _MAP_MAX_BYTES = 64 << 20
 _META = "_torua_meta.json"
 
@@ -110,9 +99,15 @@ def _local_path(path: str) -> str | None:
 
 def _read_layout(spark: SparkSession, path: str, value_type: str) -> DataFrame:
     """A checkpoint's layout, read with the schema its sidecar records."""
-    return spark.read.schema(
-        f"key string, value {value_type}, shard_id int"
-    ).parquet(path)
+    return spark.read.schema(f"key string, value {value_type}, shard_id int").parquet(path)
+
+
+def _siblings(path: str) -> tuple[str, str]:
+    """The temp tree a checkpoint into ``path`` is written to, and the
+    name the old tree takes while the new one is published."""
+    parent, _, name = path.rstrip("/").rpartition("/")
+    tag = uuid.uuid4().hex
+    return tuple(f"{parent}/.{name}.{kind}_{tag}" for kind in ("ckpt_tmp", "ckpt_trash"))
 
 
 class ToruaEngine:
@@ -129,51 +124,92 @@ class ToruaEngine:
         sequence" cmd/node/main.go:536-539): empty, non-UTF-8, and
         >1 MB values all round-trip (features/distributed-storage
         .feature:74-79). Every operator below is type-agnostic (the
-        kv ops only compare keys and measure/order values)."""
+        kv ops only compare keys and measure/order values).
+
+        A ``kv`` base that sizes under the map ceiling by plan
+        statistics is collected with one job to decide the mode."""
         self.spark = spark
         self.num_shards = num_shards
         self.node_list = nodes or NODES
         self.value_type = value_type
-        self._kv = kv if kv is not None else local_df(
-            spark, [], f"key string, value {value_type}"
-        )
-        # writes not yet folded into _kv: key -> value or _TOMBSTONE
-        self._buf: dict = {}
-        self._mutations = 0
-        # _kv as a driver map, key -> value, filled by the first base
-        # read (which sets _sized); None until then, and once its
-        # measured bytes (_map_bytes) reach _MAP_MAX_BYTES. _whole is
-        # False when hydration left out a NULL-key row of _kv.
+        # map mode: the state, key -> value, and its measured bytes;
+        # None in frame mode
         self._map: dict | None = None
         self._map_bytes = 0
-        self._whole = True
-        self._sized = False
-        # at-rest shard-partitioned view (set by restore_from and
-        # checkpoint_to): lets shard_hint reads filter the PARTITION
-        # column — directory pruning — instead of computing the routing
-        # hash per row. _src is the local directory it reads, which
-        # hydration reads with pyarrow. A fold or mutation that changes
-        # _kv invalidates both.
-        self._at_rest: DataFrame | None = None
+        # frame mode: writes not yet folded into _kv, key -> value or
+        # _TOMBSTONE, and the mutation count that paces the folds
+        self._buf: dict = {}
+        self._mutations = 0
+        # the Spark relation behind _kv, None until built; and the local
+        # directory of the published layout while it holds the state
+        self._rel = kv
         self._src: str | None = None
         if kv is None:
-            self._sized = True
-            self._fill([])
+            self._hold([])
+        else:
+            stats = kv._jdf.queryExecution().optimizedPlan().stats()
+            if int(str(stats.sizeInBytes())) < _MAP_MAX_BYTES:
+                self._hold(kv.collect())
+
+    def _hold(self, rows: list | None) -> None:
+        """Enter map mode over ``rows`` when they fit under the ceiling
+        and hold no NULL key; frame mode otherwise, or for None."""
+        m = {r["key"]: r["value"] for r in rows or ()}
+        size = sum(_entry_bytes(k, v) for k, v in m.items() if k is not None)
+        fits = rows is not None and None not in m and self.value_type in _PY_TYPES
+        self._map, self._map_bytes = (m, size) if fits and size < _MAP_MAX_BYTES else (None, 0)
+
+    @property
+    def _kv(self) -> DataFrame:
+        """The state (in frame mode, without the write buffer) as a Spark
+        relation, built on first use: from the published layout while
+        it holds the state, otherwise from the map through Arrow (an
+        empty map for an engine that starts empty in frame mode)."""
+        if self._rel is None:
+            if self._src is not None:
+                self._rel = self._at_rest.select("key", "value")
+            else:
+                m = self._map or {}
+                self._rel = self.spark.createDataFrame(
+                    self._arrow(list(m), list(m.values())),
+                    f"key string, value {self.value_type}",
+                )
+        return self._rel
+
+    def _arrow(self, keys: list, values: list):
+        """A pyarrow table of the layout's ``key string, value
+        <value_type>`` columns."""
+        import pyarrow as pa
+
+        value_type = {"string": pa.string(), "binary": pa.binary()}.get(self.value_type)
+        return pa.table({"key": pa.array(keys, pa.string()),
+                         "value": pa.array(values, value_type)})
+
+    @property
+    def _at_rest(self) -> DataFrame | None:
+        """The published layout with its ``shard_id`` partition column,
+        while it holds the state: the view a ``shard_hint`` read prunes
+        directories of. None otherwise, where the hint is a routing
+        predicate per row."""
+        if self._src is None:
+            return None
+        return _read_layout(self.spark, f"file://{self._src}", self.value_type)
 
     # ------------------------------------------------------------ data path
 
     def get(self, key: str) -> str | None:
         """GET /data/{key}: value or None (the 404 path)."""
+        if self._map is not None:
+            return self._map.get(key)
         if key in self._buf:
             value = self._buf[key]
             return None if value is _TOMBSTONE else value
-        base = self._base_map()
-        if base is not None:
-            return base.get(key)
         rows = kvops.point_get(self._kv, key).take(1)
         return rows[0]["value"] if rows else None
 
     def multi_get(self, keys: list[str]) -> dict[str, str]:
+        if self._map is not None:
+            return {k: self._map[k] for k in keys if k in self._map}
         out, rest = {}, []
         for k in keys:
             if k not in self._buf:
@@ -181,14 +217,10 @@ class ToruaEngine:
             elif self._buf[k] is not _TOMBSTONE:
                 out[k] = self._buf[k]
         if rest:
-            base = self._base_map()
-            if base is not None:
-                out.update((k, base[k]) for k in rest if k in base)
-            else:
-                out.update(
-                    (r["key"], r["value"])
-                    for r in kvops.multi_get(self._kv, rest).collect()
-                )
+            out.update(
+                (r["key"], r["value"])
+                for r in kvops.multi_get(self._kv, rest).collect()
+            )
         return out
 
     def put(self, key: str, value: str) -> "ToruaEngine":
@@ -200,134 +232,101 @@ class ToruaEngine:
         value losing to any other — ``kvops.upsert``'s tie-break."""
         items = list(items)
         types = _PY_TYPES.get(self.value_type, ())
-        if all(
+        if not all(
             isinstance(k, str) and (v is None or isinstance(v, types))
             for k, v in items
         ):
-            batch: dict = {}
-            for k, v in items:
-                if isinstance(v, bytearray):
-                    v = bytes(v)  # Spark hands binary back as bytes
-                old = batch.get(k)
-                if old is None or (v is not None and v > old):
-                    batch[k] = v
-            return self._record(batch)
-        return self._write_through(items, [])
+            return self._write_through(items, [])
+        batch: dict = {}
+        for k, v in items:
+            if isinstance(v, bytearray):
+                v = bytes(v)  # Spark hands binary back as bytes
+            old = batch.get(k)
+            if old is None or (v is not None and v > old):
+                batch[k] = v
+        return self._write(batch)
 
     def delete(self, *keys: str) -> "ToruaEngine":
         """DELETE /data/{key}: idempotent."""
         if all(isinstance(k, str) for k in keys):
-            return self._record(dict.fromkeys(keys, _TOMBSTONE))
+            return self._write(dict.fromkeys(keys, _TOMBSTONE))
         return self._write_through([], [(k,) for k in keys])
 
-    def _write_through(self, puts: list, tombs: list) -> "ToruaEngine":
-        """A write the buffer cannot hold (a non-``str`` key, a value
-        that local_df CASTs) goes straight to ``_kv``; the read map,
-        which cannot tell what the CAST made of it, is dropped."""
-        self._fold()
-        self._apply(puts, tombs)
-        self._map, self._sized = None, False
-        return self._record({})
-
-    def _record(self, entries: dict) -> "ToruaEngine":
-        # A later batch beats an earlier one. Every 8th mutation folds
-        # and cuts the lineage, so neither the buffer nor the state
-        # plan grows without bound (the role of log compaction).
-        self._buf.update(entries)
-        self._mutations += 1
-        if self._mutations % 8 == 0:
-            self._fold()
-            self._kv = self._kv.localCheckpoint(eager=False)
-        return self
-
-    def _fold(self, map_only: bool = False) -> None:
-        """Apply the write buffer to the read map, measured against the
-        ceiling, and to ``_kv``: one upsert of the buffered values and
-        one anti-join of the tombstones. ``map_only`` leaves ``_kv``
-        alone while the map holds, for a caller that rewrites ``_kv``
-        from the map."""
-        if not self._buf:
-            return
+    def _write(self, entries: dict) -> "ToruaEngine":
+        """Apply ``entries`` (key -> value or _TOMBSTONE, a later batch
+        beating an earlier one) to the map, leaving map mode if its
+        measured bytes reach the ceiling; in frame mode, record them in
+        the buffer, and fold and cut the lineage on every 8th mutation
+        so neither the buffer nor the state plan grows without bound
+        (the role of log compaction)."""
         if self._map is not None:
-            for k, v in self._buf.items():
+            for k, v in entries.items():
                 if k in self._map:
                     self._map_bytes -= _entry_bytes(k, self._map.pop(k))
                 if v is not _TOMBSTONE:
                     self._map[k] = v
                     self._map_bytes += _entry_bytes(k, v)
+            self._rel = self._src = None
             if self._map_bytes >= _MAP_MAX_BYTES:
-                self._map = None
-        if self._map is None or not map_only:
+                self._rel, self._map = self._kv.localCheckpoint(eager=False), None
+            return self
+        self._buf.update(entries)
+        self._mutations += 1
+        if self._mutations % 8 == 0:
+            self._fold()
+            self._rel = self._kv.localCheckpoint(eager=False)
+        return self
+
+    def _write_through(self, puts: list, tombs: list) -> "ToruaEngine":
+        """A write neither the map nor the buffer can hold (a non-``str``
+        key, a value that local_df CASTs) goes straight to ``_kv``, in
+        frame mode."""
+        if self._map is not None:
+            self._rel, self._map = self._kv.localCheckpoint(eager=False), None
+        self._fold()
+        self._apply(puts, tombs)
+        return self._write({})
+
+    def _fold(self) -> None:
+        """Apply the write buffer to ``_kv``: one upsert of the buffered
+        values and one anti-join of the tombstones."""
+        if self._buf:
             self._apply(
                 [(k, v) for k, v in self._buf.items() if v is not _TOMBSTONE],
                 [(k,) for k, v in self._buf.items() if v is _TOMBSTONE],
             )
-        self._buf = {}
-
-    def _base_map(self) -> dict | None:
-        """``_kv`` as a driver map, filled by the first call if the base
-        sizes under ``_MAP_MAX_BYTES``: a restored checkpoint by its
-        file bytes, read with pyarrow, any other base by plan
-        statistics, collected with one job. None above the ceiling,
-        where reads run a job against ``_kv``."""
-        if not self._sized:
-            self._sized = True
-            if self._src is not None:
-                # file by file: a directory read infers the shard_id
-                # partition type, which fails when the only directory is
-                # the NULL key's
-                files = [str(p) for p in pathlib.Path(self._src).rglob("*.parquet")]
-                if sum(map(os.path.getsize, files)) < _MAP_MAX_BYTES:
-                    self._fill([
-                        r for f in files for r in read_small_parquet_rows(self.spark, f)
-                    ])
-            else:
-                stats = self._kv._jdf.queryExecution().optimizedPlan().stats()
-                if int(str(stats.sizeInBytes())) < _MAP_MAX_BYTES:
-                    self._fill(self._kv.collect())
-        return self._map
-
-    def _fill(self, rows: list) -> None:
-        """Hold the non-NULL-key ``rows`` as the read map, unless their
-        measured bytes reach the ceiling."""
-        m = {r["key"]: r["value"] for r in rows if r["key"] is not None}
-        size = sum(_entry_bytes(k, v) for k, v in m.items())
-        if size < _MAP_MAX_BYTES:
-            self._map, self._map_bytes, self._whole = m, size, len(m) == len(rows)
+            self._buf = {}
 
     def _apply(self, puts: list, tombs: list) -> None:
         if puts:
-            self._kv = kvops.upsert(self._kv, local_df(
+            self._rel = kvops.upsert(self._kv, local_df(
                 self.spark, puts, f"key string, value {self.value_type}"
             ))
         if tombs:
-            self._kv = kvops.delete(
+            self._rel = kvops.delete(
                 self._kv, local_df(self.spark, tombs, "key string")
             )
-        self._at_rest = self._src = None
+        self._src = None
 
     def scan(self, start: str, end: str,
              shard_hint: list[int] | None = None) -> list[str]:
         """Sorted lexicographic [start, end) key scan. ``shard_hint``
         scopes execution to the named shards (the query-message field,
-        ARCHITECTURE.md:327-339): right after a restore or a local
-        checkpoint the hint filters the at-rest layout's partition
-        column — Spark prunes to the hinted shard DIRECTORIES, the
-        coordinator's fan-out-to-fewer-nodes behavior — otherwise it
-        applies the routing predicate per row. An unhinted scan merges
-        the base keys in range, from the read map when there is one,
-        with the write buffer."""
+        ARCHITECTURE.md:327-339): while the published layout holds the
+        state the hint filters its partition column — Spark prunes to
+        the hinted shard DIRECTORIES, the coordinator's
+        fan-out-to-fewer-nodes behavior — otherwise it applies the
+        routing predicate per row. An unhinted scan reads the map, or
+        in frame mode merges the base keys in range with the buffer."""
         if shard_hint is not None:
             src = self._hinted(shard_hint)
             return [r["key"] for r in kvops.range_scan(src, start, end).collect()]
-        base = self._base_map()
-        if base is not None:
-            keys = [k for k in base if start <= k < end and k not in self._buf]
-        else:
-            keys = [
-                r["key"] for r in kvops.range_scan(self._kv, start, end).collect()
-                if r["key"] not in self._buf
-            ]
+        if self._map is not None:
+            return sorted(k for k in self._map if start <= k < end)
+        keys = [
+            r["key"] for r in kvops.range_scan(self._kv, start, end).collect()
+            if r["key"] not in self._buf
+        ]
         keys += [
             k for k, v in self._buf.items()
             if v is not _TOMBSTONE and start <= k < end
@@ -335,12 +334,11 @@ class ToruaEngine:
         return sorted(keys)
 
     def delete_range(self, start: str, end: str) -> "ToruaEngine":
-        self._fold()
-        self._kv = kvops.delete_range(self._kv, start, end)
-        self._at_rest = self._src = None
         if self._map is not None:
-            for k in [k for k in self._map if start <= k < end]:
-                self._map_bytes -= _entry_bytes(k, self._map.pop(k))
+            return self._write({k: _TOMBSTONE for k in self._map if start <= k < end})
+        self._fold()
+        self._rel = kvops.delete_range(self._kv, start, end)
+        self._src = None
         return self
 
     def list_keys(self, shard_id: int | None = None,
@@ -362,7 +360,7 @@ class ToruaEngine:
         self._fold()
         if shard_hint is None:
             return self._kv
-        if self._at_rest is not None:
+        if self._src is not None:
             return self._at_rest.filter(
                 F.col("shard_id").isin([int(s) for s in shard_hint])
             ).select("key", "value")
@@ -390,8 +388,7 @@ class ToruaEngine:
 
     def stats(self) -> DataFrame:
         """Per-shard {keys, bytes} stats."""
-        self._fold()
-        return kvops.stats(self._kv, self.num_shards)
+        return kvops.stats(self._hinted(None), self.num_shards)
 
     def broadcast_stats(self) -> DataFrame:
         """POST /broadcast: per-node gather with sent_to."""
@@ -434,32 +431,22 @@ class ToruaEngine:
         the on-disk sharding is still THIS engine's sharding, and the
         second as the schema it reads the layout with.
 
-        On a local path the state goes to a sibling temp tree, written
-        from the read map on the driver when the map is whole (no Spark
-        job, no kv fold) and by Spark otherwise, and is published over
-        ``path`` by a two-rename swap; ``_kv`` then reads the published
-        layout. A Hadoop URI takes the Spark write straight into
-        ``path`` and no sidecar, so restore_from degrades to the
+        The state goes to a sibling temp tree, written from the map with
+        pyarrow in map mode (no Spark job, no JVM call) and by Spark in
+        frame mode, and is published over ``path`` by a two-rename
+        swap; from then on ``_kv`` reads the published layout. A Hadoop
+        URI gets the Spark write, a swap through the Hadoop FileSystem
+        and no sidecar, so restore_from degrades to the
         routing-predicate path, as for a pre-sidecar checkpoint."""
+        self._fold()
         local = _local_path(path)
         if local is None:
-            self._fold()
-            self._spark_write(path)
+            self._publish_uri(path)
             return
         local = os.path.abspath(local)
-        self._base_map()
-        driver = (
-            self._map is not None and self._whole and self.value_type in _PY_TYPES
-        )
-        self._fold(map_only=driver)
-        parent, name = os.path.split(local)
-        tag = uuid.uuid4().hex
-        tmp, trash = (
-            os.path.join(parent, f".{name}.{kind}_{tag}")
-            for kind in ("ckpt_tmp", "ckpt_trash")
-        )
+        tmp, trash = _siblings(local)
         try:
-            if driver and self._map is not None:
+            if self._map is not None:
                 self._write_map(tmp)
             else:
                 self._spark_write(f"file://{tmp}")
@@ -473,8 +460,21 @@ class ToruaEngine:
             tree_swap_publish(local, tmp, trash)
         else:
             os.rename(tmp, local)
-        raw = _read_layout(self.spark, f"file://{local}", self.value_type)
-        self._kv, self._at_rest, self._src = raw.select("key", "value"), raw, local
+        self._rel, self._src = None, local
+
+    def _publish_uri(self, path: str) -> None:
+        """The Spark write into a sibling temp tree of a Hadoop URI,
+        renamed over ``path`` through the Hadoop FileSystem: ``path``,
+        which ``_kv`` may read, is deleted only once the new tree is
+        whole."""
+        tmp = _siblings(path)[0]
+        self._spark_write(tmp)
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path
+        fs = hpath(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs.delete(hpath(path), True)
+        if not fs.rename(hpath(tmp), hpath(path)):
+            raise OSError(f"checkpoint_to: the state is in {tmp}, not renamed to {path}")
+        self._rel = _read_layout(self.spark, path, self.value_type).select("key", "value")
 
     def _spark_write(self, dest: str) -> None:
         (
@@ -485,9 +485,8 @@ class ToruaEngine:
         )
 
     def _write_map(self, dest: str) -> None:
-        """The read map as the layout ``_spark_write`` gives, written
-        with pyarrow: one file per non-empty shard directory."""
-        import pyarrow as pa
+        """The map as the layout ``_spark_write`` gives, written with
+        pyarrow: one file per non-empty shard directory."""
         import pyarrow.parquet as pq
 
         shards: dict[int, tuple[list, list]] = {}
@@ -495,52 +494,52 @@ class ToruaEngine:
             keys, values = shards.setdefault(fnv1a32_py(k) % self.num_shards, ([], []))
             keys.append(k)
             values.append(v)
-        value_type = pa.string() if self.value_type == "string" else pa.binary()
         os.makedirs(dest)
         for shard, (keys, values) in shards.items():
             os.mkdir(os.path.join(dest, f"shard_id={shard}"))
-            pq.write_table(
-                pa.table({"key": pa.array(keys, pa.string()),
-                          "value": pa.array(values, value_type)}),
-                os.path.join(dest, f"shard_id={shard}", "part-00000.parquet"),
-            )
+            pq.write_table(self._arrow(keys, values),
+                           os.path.join(dest, f"shard_id={shard}", "part-00000.parquet"))
         open(os.path.join(dest, "_SUCCESS"), "w").close()
 
     @classmethod
     def restore_from(cls, spark: SparkSession, path: str, **kw) -> "ToruaEngine":
         """Restore from ``checkpoint_to`` output (or any parquet with
         key/value columns). ``num_shards`` and ``value_type`` default to
-        the sidecar's recorded values, and a checkpoint with a sidecar
-        is read with the sidecar's schema, with no inference job; its
-        first base read hydrates the map with pyarrow. The at-rest
-        partition view powering shard_hint directory pruning is enabled
-        ONLY when the layout demonstrably matches this engine's routing
-        — a shard_id column exists AND the sidecar shard count equals
-        num_shards. Anything else (foreign parquet, an explicit
-        num_shards override, a pre-sidecar checkpoint) falls back to
-        the routing-predicate path, which is always self-consistent."""
+        the sidecar's recorded values; a ``value_type`` that differs
+        from the recorded one raises. A checkpoint whose sidecar shard
+        count is num_shards is read on the driver with pyarrow when its
+        files size under the map ceiling, and enters map mode with no
+        JVM call when its rows do; otherwise it is frame mode over the
+        layout, read with the sidecar's schema (no inference job). Only
+        such a layout powers shard_hint directory pruning. Anything
+        else (an explicit num_shards override, foreign parquet, a
+        Hadoop URI, a pre-sidecar checkpoint) is a base the constructor
+        decides the mode of, and takes the routing-predicate path,
+        which is always self-consistent."""
         local = _local_path(path)
-        meta, value_type = None, None
+        meta = {}
         if local is not None and (pathlib.Path(local) / _META).exists():
             meta = json.loads((pathlib.Path(local) / _META).read_text())
             kw.setdefault("num_shards", int(meta["num_shards"]))
-            value_type = meta.get("value_type")
-        if value_type is not None:
-            kw.setdefault("value_type", value_type)
-            raw = _read_layout(spark, path, value_type)
-        else:
-            raw = spark.read.parquet(path)
-        eng = cls(spark, raw.select("key", "value"), **kw)
-        if value_type is not None:
-            eng._src = os.path.abspath(local)
-        if (
-            "shard_id" in raw.columns
-            and meta is not None
-            and int(meta["num_shards"]) == eng.num_shards
-        ):
-            eng._at_rest = raw
+        recorded = meta.get("value_type")
+        if recorded is not None and kw.setdefault("value_type", recorded) != recorded:
+            raise ValueError(f"conflicting value types: value_type={kw['value_type']!r}"
+                             f" vs the checkpoint's {recorded!r} — pass one")
+        if recorded is None or kw["num_shards"] != int(meta["num_shards"]):
+            raw = spark.read.parquet(path) if recorded is None else _read_layout(
+                spark, path, recorded
+            )
+            return cls(spark, raw.select("key", "value"), **kw)
+        eng = cls(spark, **kw)
+        eng._src = os.path.abspath(local)
+        # file by file: a directory read infers the shard_id partition
+        # type, which fails when the only directory is the NULL key's
+        files = [str(p) for p in pathlib.Path(local).rglob("*.parquet")]
+        eng._hold(
+            [r for f in files for r in read_small_parquet_rows(spark, f)]
+            if sum(map(os.path.getsize, files)) < _MAP_MAX_BYTES else None
+        )
         return eng
 
     def dataframe(self) -> DataFrame:
-        self._fold()
-        return self._kv
+        return self._hinted(None)
